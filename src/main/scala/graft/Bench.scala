@@ -229,9 +229,9 @@ object Bench {
     * brackets. */
   private def calibrationProbe(): Double = calibrationProbe(400000000L)
 
-  /** The probe kernel, parameterized by per-thread step count so
-    * [[AmplifyProbe]] can run the SAME arm at probe weight (10⁸) without a
-    * second copy that could drift from the one the artifacts cite. */
+  /** The probe kernel, parameterized by per-thread step count:
+    * `AMPLIFY_r11.json` ran this SAME arm at probe weight (10⁸), so no
+    * second copy can drift from the one the artifacts cite. */
   private[graft] def calibrationProbe(iters: Long): Double = {
     val threads = math.min(32, Runtime.getRuntime.availableProcessors())
     val sink = new java.util.concurrent.atomic.AtomicLong()

@@ -41,6 +41,9 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** events.parquet has shipped with two `ts` encodings across driver
     * testdata generations, so the loader adapts on the OBSERVED type:
     *   - TIMESTAMP(NANOS): Spark's parquet reader rejects it
@@ -51,13 +54,21 @@ object Tables {
     *     assume — an identity re-tag of the wall-clock value under the
     *     UTC session every graft main pins, matching DuckDB's naive read.
     * Any third encoding fails HERE with the table+column named, not deep
-    * inside 21 query plans (the round-6 drift failure mode). */
+    * inside 21 query plans (the round-6 drift failure mode).
+    *
+    * The schema is inferred with nanos-as-long scoped to the call, so the
+    * session's conf is left as found. Only the nanos encoding sets it for
+    * good: its scans read nanos-as-long again when they execute. */
   def events(s: SparkSession, d: String): DataFrame = {
-    // harmless when ts is already micros; keeps legacy nanos files readable
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
+    val prior = s.conf.getAll.get(NanosAsLong)
+    s.conf.set(NanosAsLong, "true")
+    val raw = try load(s, d, "events") finally prior match {
+      case Some(v) => s.conf.set(NanosAsLong, v)
+      case None => s.conf.unset(NanosAsLong)
+    }
     raw.schema("ts").dataType match {
       case LongType =>
+        s.conf.set(NanosAsLong, "true")
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
         raw.withColumn("ts", col("ts").cast(TimestampType))

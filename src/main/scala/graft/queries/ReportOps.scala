@@ -318,7 +318,7 @@ object ReportOps {
     // (o_orderkey <= 600, ~2.4 k rows — the repartition(1) rationale
     // below). At that size AQE's value is zero and its cost dominates:
     // the one union collect ran as 27 driver-sequenced stage-jobs (153
-    // tasks, ~160 ms of replan+schedule each — measured, Scratch3), i.e.
+    // tasks, ~160 ms of replan+schedule each — measured), i.e.
     // the gate was driver-bound, scaling ratio 0.79. With AQE off and the
     // shuffle partitioning matched to the single-partition cached inputs,
     // the SAME plan runs as ~10 jobs / 19 tasks: warm compute 4.3 → 3.0 s

@@ -72,7 +72,7 @@ object SelectionOps {
     // nf stays UNPINNED — re-adjudicated r19 (VERDICT r18 #8) with the
     // r18 n-gram kernel in place: the r11 A/B read pin 1.25 s vs
     // recompute 1.06 s warm; with the kernel the two forms TIE at both
-    // granularities (Scratch8 warm rounds within ~5 %; fresh-child 3-run
+    // granularities (warm rounds within ~5 %; fresh-child 3-run
     // subset benches: unpinned q143 0.74 / q150 2.21 vs pinned 0.85 /
     // 2.04 — mixed signs, inside the window band). On a tie the
     // recompute form wins on simplicity: no localCheckpoint blocks, no
@@ -714,7 +714,7 @@ object SelectionOps {
     // groupBy+self-join: the join form duplicated the upstream plan (for
     // q150 that upstream is dsirScores) across both branches — exchange
     // reuse recovered most of the recompute, so the measured win is the
-    // residual join itself (ProfileOne sf0.1: q150 warm 1.50 -> 1.43 s,
+    // residual join itself (sf0.1: q150 warm 1.50 -> 1.43 s,
     // q149 ~0.45 s both forms), but the single-window plan also cannot
     // LOSE reuse when an upstream change breaks exchange identity
     df.withColumn("cum", sum(col("wt")).over(w))

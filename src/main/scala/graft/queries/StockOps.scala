@@ -157,7 +157,7 @@ object StockOps {
     // by nature, so deduping the build only traded a few duplicate hash
     // keys for a full shuffle stage per layer — measured at gate scale,
     // the two distincts were most of the edge-construction cost
-    // (Profile80: 0.90 s → 0.35 s warm). Bounded: each build is the
+    // (0.90 s → 0.35 s warm). Bounded: each build is the
     // previous TRACE layer's dst list (e1 is filtered+distinct, e2p is
     // orders semi-joined to it), never a fact-scale set.
     val e2p = e2.join(broadcast(e1.select(col("dst").as("j"))),

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -49,6 +50,20 @@ class HarnessContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = cur.limit(10).select("event_id", "ts").collect().map(_.toString).sorted
     val b = legacy.select("event_id", "ts").collect().map(_.toString).sorted
     assert(a.toSeq == b.toSeq)
+  }
+
+  test("events loader leaves the session conf as found on micros ts") {
+    // a fresh path, so the schema memo cannot skip the inference under
+    // test; a fresh session, so conf other specs set cannot mask a leak
+    val s = spark.newSession()
+    val dir = Files.createTempDirectory(Paths.get("target"), "evconf")
+    Files.createSymbolicLink(dir.resolve("events.parquet"),
+      Paths.get(s"$sfDir/events.parquet"))
+    val before = s.conf.getAll
+    Tables.events(s, dir.toString)
+    assert(s.conf.getAll == before)
+    SchemaContract.preflight(s, sfDir, "spec") // must not throw
+    assert(s.conf.getAll == before)
   }
 
   test("schema drift is reported naming the drifted column") {
@@ -234,5 +249,22 @@ class HarnessContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Bench.currentRound(zoo :+ "BENCH_r10.json") == Some(11))
     // fresh checkout: nothing to stamp against
     assert(Bench.currentRound(Seq("build.sbt", "SURVEY.md")).isEmpty)
+  }
+
+  test("the only mains in src/main are the four harness entry points") {
+    // per-layer profiling is perfbench's traced run; a one-off dev main
+    // beside the harness is a second, drifting copy of gate code
+    val Main = """def main\(args: Array\[String\]\)""".r
+    val Obj = """object (\w+)""".r
+    val files = Files.walk(Paths.get("src/main/scala")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val mains = files.flatMap { f =>
+      val src = new String(Files.readAllBytes(f), "UTF-8")
+      Main.findAllMatchIn(src).map { m =>
+        Obj.findAllMatchIn(src.take(m.start)).toSeq.lastOption
+          .fold(s"<no object> in $f")(_.group(1))
+      }
+    }
+    assert(mains.sorted == Seq("Bench", "Explain", "ScaleStress", "Verify"))
   }
 }

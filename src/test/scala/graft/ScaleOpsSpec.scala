@@ -44,76 +44,6 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(distinctSalts > 1)
   }
 
-  test("bloom runtime filter: no false negatives, real pruning, null-safe") {
-    val s = spark; import s.implicits._
-    import graft.engine.RuntimeFilter
-    val fact = ((1L to 1000L).map(k => (k, s"f$k")) :+ (0L, "null-key"))
-      .toDF("k", "payload")
-      .withColumn("k", when(col("payload") === "null-key", lit(null)).otherwise(col("k")))
-    val dim = (1L to 1000L by 17L).map(k => (k, s"d$k")).toDF("dk", "dv")
-    val pruned = RuntimeFilter.bloomPrune(fact, "k", dim, "dk",
-      expectedItems = 100, fpp = 0.03)
-    val exact = fact.join(dim, col("k") === col("dk"))
-      .as[(Long, String, Long, String)].collect().toSet
-    val viaPruned = pruned.join(dim, col("k") === col("dk"))
-      .as[(Long, String, Long, String)].collect().toSet
-    assert(viaPruned == exact, "pruning must not lose matching rows")
-    val n = pruned.count()
-    assert(n >= dim.count() && n < 1001,
-      s"expected real pruning with few false positives, kept $n of 1001")
-  }
-
-  test("bloom probe is the native might_contain expression, not a UDF (r13 ADVICE)") {
-    val s = spark; import s.implicits._
-    import graft.engine.RuntimeFilter
-    // parquet-backed fact: a local relation would be constant-folded
-    // away (ConvertToLocalRelation), hiding the probe from the plan
-    val fact = Tables.orders(s, "/root/testdata/sf0.001")
-      .select(col("o_orderkey").as("k"), col("o_orderpriority").as("payload"))
-    val dim = (1L to 100L by 7L).map(k => (k, s"d$k")).toDF("dk", "dv")
-    val pruned = RuntimeFilter.bloomPrune(fact, "k", dim, "dk",
-      expectedItems = 50, fpp = 0.03)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("might_contain"),
-      s"expected the native BloomFilterMightContain probe in:\n$plan")
-    assert(!plan.contains("UDF("),
-      "the probe must stay codegen-friendly — no Scala UDF in the plan")
-    // no false negatives: every actually-joining key survives the prune
-    val exact = fact.join(dim, col("k") === col("dk"))
-      .select("k").as[Long].collect().toSet
-    val kept = pruned.select("k").as[Long].collect().toSet
-    assert(exact.subsetOf(kept), "native probe lost matching rows")
-    // the sketch-object fallback also never loses a matching key (its
-    // false-positive SET may differ — different hashing family)
-    val sketch = dim.stat.bloomFilter("dk", 50, 0.03)
-    val viaSketch = RuntimeFilter.bloomPruneSketch(fact, "k", sketch)
-      .select("k").as[Long].collect().toSet
-    assert(exact.subsetOf(viaSketch), "sketch fallback lost matching rows")
-  }
-
-  test("bloom prune widens mixed int/long keys before hashing (r14 ADVICE: no false negatives)") {
-    val s = spark; import s.implicits._
-    import graft.engine.RuntimeFilter
-    // xxhash64 hashes IntegerType and LongType differently — an un-widened
-    // dim(int)/fact(long) pair silently drops MATCHING rows. Both sides
-    // must widen to long before hashing.
-    val fact = (1L to 200L).map(k => (k, s"f$k")).toDF("k", "payload")
-    val dimInt = (1 to 200 by 9).map(k => (k, s"d$k")).toDF("dk", "dv") // IntegerType
-    val pruned = RuntimeFilter.bloomPrune(fact, "k", dimInt, "dk",
-      expectedItems = 50, fpp = 0.03)
-    val exact = fact.join(dimInt, col("k") === col("dk"))
-      .select("k").as[Long].collect().toSet
-    assert(exact.nonEmpty)
-    val kept = pruned.select("k").as[Long].collect().toSet
-    assert(exact.subsetOf(kept),
-      s"int-dim/long-fact prune lost matching keys: ${exact -- kept}")
-    // a type pair that cannot hash identically is rejected loudly
-    val strDim = Seq(("1", "x")).toDF("dk", "dv")
-    intercept[IllegalArgumentException] {
-      RuntimeFilter.bloomPrune(fact, "k", strDim, "dk")
-    }
-  }
-
   test("partitioned sink: day partitions land and retention drops old ones") {
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("graft_sink").toFile.getPath + "/log"
