@@ -1,21 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native character-3-gram hasher for the language-ID profile (q37): one
-  * pass over the text emits, per sliding window of 3 characters, the
-  * PORTABLE token hash [[graft.queries.Parity.strHash]] of that trigram —
-  * for a fixed length of 3 the positional LCG weights are constants:
-  *
-  *   h = (code(c1)·1103527590 + code(c2)·59559188 + code(c3)·1163074433)
-  *       mod (2³¹−1)
+/** Native character-3-gram hasher for the language-ID profile (q37): per
+  * sliding window of 3 characters, the PORTABLE token hash
+  * [[graft.queries.Parity.strHash]] of that trigram
+  * ([[TextKernel.windowHashes]]).
   *
   * Why native: the Column form (`transform(sequence, substr)`) allocates a
   * UTF8String per trigram — ~2000 small allocations per document on the
@@ -23,69 +18,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * long[] per document and the downstream join/groupBy key is an 8-byte
   * long instead of a string.
   *
-  * Cross-engine: the same constants are spelled out in the oracle SQL
+  * Cross-engine: for a fixed length of 3 the positional weights are
+  * constants, spelled out in the oracle SQL
   * (`ord(substring(text,i,k))::BIGINT * w_k`), so profiles and tiebreaks
-  * (ORDER BY cnt DESC, t) order identically in Spark and DuckDB. ASCII
-  * input takes the byte fast path; other BMP text falls back to Java
-  * chars (= `ascii`/`ord` semantics, see PortableHashExpr). */
-final case class CharGramHashExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"chargram3_hashes expects string, got $t")
-  }
+  * (ORDER BY cnt DESC, t) order identically in Spark and DuckDB. */
+final case class CharGramHashExpr(child: Expression) extends StringKernelExpr {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "chargram3_hashes"
 
-  override protected def nullSafeEval(input: Any): Any =
-    CharGramHashExpr.grams3(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${classOf[CharGramHashExpr].getName}$$.MODULE$$.grams3($c)")
+  override def kernel(s: UTF8String): Any =
+    ArrayData.toArrayData(TextKernel.windowHashes(TextKernel.codes(s), 3))
 
   override protected def withNewChildInternal(newChild: Expression): CharGramHashExpr =
     copy(child = newChild)
-}
-
-object CharGramHashExpr {
-  private final val M = 2147483647L
-  // (1103515245 * i + 12345) mod M for i = 1, 2, 3
-  private final val W1 = 1103527590L
-  private final val W2 = 59559188L
-  private final val W3 = 1163074433L
-
-  /** The shared kernel (also called from generated code). */
-  def grams3(s: UTF8String): ArrayData = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    if (ascii) {
-      if (nb < 3) return new GenericArrayData(Array.emptyLongArray)
-      val out = new Array[Long](nb - 2)
-      var j = 0
-      while (j < nb - 2) {
-        out(j) = ((s.getByte(j) & 0xffL) * W1 + (s.getByte(j + 1) & 0xffL) * W2 +
-          (s.getByte(j + 2) & 0xffL) * W3) % M
-        j += 1
-      }
-      new GenericArrayData(out)
-    } else {
-      val str = s.toString
-      val n = str.length
-      if (n < 3) return new GenericArrayData(Array.emptyLongArray)
-      val out = new Array[Long](n - 2)
-      var j = 0
-      while (j < n - 2) {
-        out(j) = (str.charAt(j).toLong * W1 + str.charAt(j + 1).toLong * W2 +
-          str.charAt(j + 2).toLong * W3) % M
-        j += 1
-      }
-      new GenericArrayData(out)
-    }
-  }
 }
 
 object CharGramHash {

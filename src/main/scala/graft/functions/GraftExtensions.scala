@@ -12,62 +12,31 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * For an already-running session use [[GraftExtensions.install]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.vectorDotDescriptor)
-    ext.injectFunction(GraftExtensions.topKDescriptor)
-    ext.injectFunction(GraftExtensions.portableHashDescriptor)
-    ext.injectFunction(GraftExtensions.shingleHashesDescriptor)
-    ext.injectFunction(GraftExtensions.winnowDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
-  private val vectorDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vector_dot"),
-    new ExpressionInfo(classOf[VectorDotExpr].getName, "vector_dot"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "vector_dot takes exactly 2 arguments")
-      VectorDotExpr(children.head, children(1))
-    })
+  private def function(name: String, cls: Class[_ <: Expression], arity: Int)(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expression]) => {
+        require(children.length == arity,
+          s"$name takes exactly $arity argument${if (arity == 1) "" else "s"}")
+        build(children)
+      })
 
-  private val topKDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("top_k_by_score"),
-    new ExpressionInfo(classOf[TopKByScore].getName, "top_k_by_score"),
-    (children: Seq[Expression]) => {
-      require(children.length == 3, "top_k_by_score takes exactly 3 arguments")
-      TopKByScore(children(0), children(1), children(2))
-    })
-
-  private val portableHashDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("portable_hash"),
-    new ExpressionInfo(classOf[PortableHashExpr].getName, "portable_hash"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "portable_hash takes exactly 1 argument")
-      PortableHashExpr(children.head)
-    })
-
-  private val shingleHashesDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_hashes"),
-    new ExpressionInfo(classOf[ShingleHashExpr].getName, "shingle_hashes"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "shingle_hashes takes exactly 1 argument")
-      ShingleHashExpr(children.head)
-    })
-
-  private val winnowDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("winnow_fingerprints"),
-    new ExpressionInfo(classOf[WinnowExpr].getName, "winnow_fingerprints"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "winnow_fingerprints takes exactly 1 argument")
-      WinnowExpr(children.head)
-    })
+  /** The SQL functions: name, expression class, arity, constructor. */
+  private val functions = Seq(
+    function("vector_dot", classOf[VectorDotExpr], 2)(c => VectorDotExpr(c(0), c(1))),
+    function("top_k_by_score", classOf[TopKByScore], 3)(c => TopKByScore(c(0), c(1), c(2))),
+    function("portable_hash", classOf[PortableHashExpr], 1)(c => PortableHashExpr(c(0))),
+    function("shingle_hashes", classOf[ShingleHashExpr], 1)(c => ShingleHashExpr(c(0))),
+    function("winnow_fingerprints", classOf[WinnowExpr], 1)(c => WinnowExpr(c(0))))
 
   /** Imperative registration on an existing session. */
-  def install(spark: SparkSession): Unit = {
-    Seq(vectorDotDescriptor, topKDescriptor, portableHashDescriptor,
-        shingleHashesDescriptor, winnowDescriptor)
-      .foreach { case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-      }
-  }
+  def install(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

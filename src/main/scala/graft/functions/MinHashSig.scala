@@ -1,19 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native K-permutation MinHash signature over word n-grams (r19): the
   * whole per-document signature — portable n-gram hashes
-  * ([[PortableNgramHashExpr]] semantics, bit-identical) fed through the
-  * affine permutation family `(a_k·h + b_k) mod p`, tracking the K
-  * minima — in ONE pass over the UTF-8 bytes.
+  * ([[TextKernel.ngramHashes]], bit-identical to [[PortableNgramHashExpr]])
+  * fed through the affine permutation family `(a_k·h + b_k) mod p`,
+  * tracking the K minima — in one projection.
   *
   * Why: the composed form
   * (`explode(portable_ngram_hashes(text)) → groupBy(doc_id).agg(K min
@@ -22,161 +20,47 @@ import org.apache.spark.unsafe.types.UTF8String
   * turns the signature front of setup_mh12 / q33 / q115 / q162 into a
   * map-side projection: no explode, no exchange before the band join.
   *
-  * Bit-identical to the composed form: the n-gram hash is EXACTLY
-  * [[PortableNgramHashExpr]]'s (same word segmentation on 0x20, empty
-  * segments count, per-position weights over the space-joined n-gram);
-  * each permutation value is `(a_k·h + b_k) % p` in Long arithmetic
-  * (h < 2³¹ and the house family's a_k ≤ 590 keep the product far from
-  * overflow); duplicate n-grams cannot change a min. A document with
-  * fewer than n words returns an EMPTY array — the composed form emits
-  * no row for it (explode of an empty array), so callers filter
-  * `size(ms) > 0` to reproduce the absence. ASCII fast path / char
-  * fallback as in the sibling kernels. */
+  * Bit-identical to the composed form: each permutation value is
+  * `(a_k·h + b_k) % p` in Long arithmetic (h < 2³¹ and the house family's
+  * a_k ≤ 590 keep the product far from overflow); duplicate n-grams
+  * cannot change a min. A document with fewer than n words returns an
+  * EMPTY array — the composed form emits no row for it (explode of an
+  * empty array), so callers filter `size(ms) > 0` to reproduce the
+  * absence. */
 final case class MinHashSigExpr(child: Expression, n: Int,
                                 as: Seq[Long], bs: Seq[Long], p: Long)
-  extends UnaryExpression {
+  extends StringKernelExpr {
 
   require(n >= 1 && p > 0 && as.nonEmpty && as.length == bs.length,
     s"minhash_sig: bad parameters n=$n p=$p k=${as.length}/${bs.length}")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig expects string, got $t")
-  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
 
   @transient private lazy val asArr = as.toArray
   @transient private lazy val bsArr = bs.toArray
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSigExpr.sig(input.asInstanceOf[UTF8String], n, asArr, bsArr, p)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val asRef = ctx.addReferenceObj("as", as.toArray, "long[]")
-    val bsRef = ctx.addReferenceObj("bs", bs.toArray, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"${classOf[MinHashSigExpr].getName}$$.MODULE$$.sig($c, $n, $asRef, $bsRef, ${p}L)")
+  override def kernel(s: UTF8String): Any = {
+    val hs = TextKernel.ngramHashes(TextKernel.codes(s), n)
+    if (hs.isEmpty) return ArrayData.toArrayData(hs)
+    val a = asArr
+    val b = bsArr
+    val mins = Array.fill(a.length)(Long.MaxValue)
+    var i = 0
+    while (i < hs.length) {
+      var j = 0
+      while (j < a.length) {
+        val v = (a(j) * hs(i) + b(j)) % p
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    ArrayData.toArrayData(mins)
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
-}
-
-object MinHashSigExpr {
-  private final val M = 2147483647L
-
-  /** The shared kernel (also called from generated code). */
-  def sig(s: UTF8String, n: Int, as: Array[Long], bs: Array[Long],
-          p: Long): ArrayData = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    val mins = new Array[Long](as.length)
-    java.util.Arrays.fill(mins, Long.MaxValue)
-    val any =
-      if (ascii) foldAscii(s, n, as, bs, p, mins)
-      else foldChars(s.toString, n, as, bs, p, mins)
-    if (!any) new GenericArrayData(Array.emptyLongArray)
-    else new GenericArrayData(mins)
-  }
-
-  /** Permute one n-gram hash through every family member. */
-  @inline private def vote(h: Long, as: Array[Long], bs: Array[Long],
-                           p: Long, mins: Array[Long]): Unit = {
-    var j = 0
-    while (j < as.length) {
-      val v = (as(j) * h + bs(j)) % p
-      if (v < mins(j)) mins(j) = v
-      j += 1
-    }
-  }
-
-  private def foldAscii(s: UTF8String, n: Int, as: Array[Long],
-                        bs: Array[Long], p: Long, mins: Array[Long]): Boolean = {
-    val nb = s.numBytes
-    var words = 1
-    var i = 0
-    while (i < nb) { if (s.getByte(i) == 0x20) words += 1; i += 1 }
-    if (words < n) return false
-    val starts = new Array[Int](words)
-    val ends = new Array[Int](words)
-    var w = 0
-    starts(0) = 0
-    i = 0
-    while (i < nb) {
-      if (s.getByte(i) == 0x20) { ends(w) = i; w += 1; starts(w) = i + 1 }
-      i += 1
-    }
-    ends(w) = nb
-    var k = 0
-    while (k <= words - n) {
-      var acc = 0L
-      var pos = 1L
-      var j = k
-      while (j < k + n) {
-        var b = starts(j)
-        val e = ends(j)
-        while (b < e) {
-          acc = (acc + (s.getByte(b) & 0xffL) *
-            ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1; b += 1
-        }
-        if (j < k + n - 1) {
-          acc = (acc + 32L * ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1
-        }
-        j += 1
-      }
-      vote(acc, as, bs, p, mins)
-      k += 1
-    }
-    true
-  }
-
-  private def foldChars(str: String, n: Int, as: Array[Long],
-                        bs: Array[Long], p: Long, mins: Array[Long]): Boolean = {
-    val len = str.length
-    var words = 1
-    var i = 0
-    while (i < len) { if (str.charAt(i) == ' ') words += 1; i += 1 }
-    if (words < n) return false
-    val starts = new Array[Int](words)
-    val ends = new Array[Int](words)
-    var w = 0
-    starts(0) = 0
-    i = 0
-    while (i < len) {
-      if (str.charAt(i) == ' ') { ends(w) = i; w += 1; starts(w) = i + 1 }
-      i += 1
-    }
-    ends(w) = len
-    var k = 0
-    while (k <= words - n) {
-      var acc = 0L
-      var pos = 1L
-      var j = k
-      while (j < k + n) {
-        var c = starts(j)
-        val e = ends(j)
-        while (c < e) {
-          acc = (acc + str.charAt(c).toLong *
-            ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1; c += 1
-        }
-        if (j < k + n - 1) {
-          acc = (acc + 32L * ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1
-        }
-        j += 1
-      }
-      vote(acc, as, bs, p, mins)
-      k += 1
-    }
-    true
-  }
 }
 
 object MinHashSig {

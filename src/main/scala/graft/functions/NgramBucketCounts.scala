@@ -1,19 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native hashed-feature bucket counter (r19): the DSIR per-document
   * feature vector — for every word n-gram of `split(text, ' ')`, bucket
-  * `portable_ngram_hash % buckets` and count occurrences — in ONE pass
-  * over the UTF-8 bytes, emitted as `array<struct<b, c>>` of the
-  * nonempty buckets in ascending bucket order.
+  * `portable_ngram_hash % buckets` and count occurrences — in one
+  * projection, emitted as `array<struct<b, c>>` of the nonempty buckets in
+  * ascending bucket order.
   *
   * Why: the composed form (`explode(portable_ngram_hashes) → pmod →
   * groupBy(doc_id, …, b).count()`) pays one row per n-gram INSTANCE and
@@ -24,59 +22,34 @@ import org.apache.spark.unsafe.types.UTF8String
   * score join keys on the same rows. Consumers: q143/q150's
   * [[graft.queries.SelectionOps.dsirScores]].
   *
-  * Bit-identical to the composed form: the n-gram hash is EXACTLY
-  * [[PortableNgramHashExpr]]'s; the hash is nonnegative (< 2³¹) so
-  * `% buckets` equals `pmod`; counts are exact; a document with fewer
-  * than n words returns an EMPTY array (the composed explode emitted no
-  * rows). Emission order (ascending bucket) is not observable — every
-  * consumer aggregates or joins on the bucket. */
+  * Bit-identical to the composed form: the n-gram hashes are
+  * [[TextKernel.ngramHashes]], as in [[PortableNgramHashExpr]]; the hash
+  * is nonnegative (< 2³¹) so `% buckets` equals `pmod`; counts are exact;
+  * a document with fewer than n words returns an EMPTY array (the
+  * composed explode emitted no rows). Emission order (ascending bucket) is
+  * not observable — every consumer aggregates or joins on the bucket. */
 final case class NgramBucketCountsExpr(child: Expression, n: Int, buckets: Int)
-  extends UnaryExpression {
+  extends StringKernelExpr {
 
   require(n >= 1 && buckets >= 1 && buckets <= (1 << 20),
     s"ngram_bucket_counts: bad parameters n=$n buckets=$buckets")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ngram_bucket_counts expects string, got $t")
-  }
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("b", LongType, nullable = false),
     StructField("c", LongType, nullable = false))), containsNull = false)
   override def prettyName: String = "ngram_bucket_counts"
 
-  override protected def nullSafeEval(input: Any): Any =
-    NgramBucketCountsExpr.counts(input.asInstanceOf[UTF8String], n, buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${classOf[NgramBucketCountsExpr].getName}$$.MODULE$$.counts($c, $n, $buckets)")
-
-  override protected def withNewChildInternal(newChild: Expression): NgramBucketCountsExpr =
-    copy(child = newChild)
-}
-
-object NgramBucketCountsExpr {
-
-  /** The shared kernel (also called from generated code): bucket every
-    * n-gram hash of [[PortableNgramHashExpr.ngrams]] and count. The
-    * n-gram pass is delegated to the sibling kernel so the hash
-    * semantics cannot drift. */
-  def counts(s: UTF8String, n: Int, buckets: Int): ArrayData = {
-    val hashes = PortableNgramHashExpr.ngrams(s, n)
-    val m = hashes.numElements()
-    if (m == 0) return new GenericArrayData(Array.empty[Any])
+  override def kernel(s: UTF8String): Any = {
+    val hs = TextKernel.ngramHashes(TextKernel.codes(s), n)
     val cnt = new Array[Long](buckets)
+    var nonEmpty = 0
     var i = 0
-    while (i < m) {
-      // portable hashes are in [0, 2^31), so % == pmod
-      cnt((hashes.getLong(i) % buckets).toInt) += 1L
+    while (i < hs.length) {
+      val b = (hs(i) % buckets).toInt
+      if (cnt(b) == 0) nonEmpty += 1
+      cnt(b) += 1L
       i += 1
     }
-    var nonEmpty = 0
-    i = 0
-    while (i < buckets) { if (cnt(i) != 0) nonEmpty += 1; i += 1 }
     val out = new Array[Any](nonEmpty)
     var j = 0
     i = 0
@@ -90,6 +63,9 @@ object NgramBucketCountsExpr {
     }
     new GenericArrayData(out)
   }
+
+  override protected def withNewChildInternal(newChild: Expression): NgramBucketCountsExpr =
+    copy(child = newChild)
 }
 
 object NgramBucketCounts {

@@ -1,80 +1,32 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the cross-engine token hash
-  * ([[graft.queries.Parity.strHash]]):
-  *
-  *   h(s) = ( Σ_{i=1..len} code(s_i) · ((1103515245·i + 12345) mod M) ) mod M,
-  *   M = 2³¹−1
+  * ([[graft.queries.Parity.strHash]]), defined in [[TextKernel]].
   *
   * Why native: the Column formulation (`aggregate(sequence(1, length(s)),
   * …, ascii(substr(s, i, 1)))`) allocates an index array per row and makes
   * `substr` re-scan the string per character — O(len²) work per token. The
   * dedup/fingerprint family (q33/q34/q40) hashes every shingle of every
   * document, so this loop IS their hot path. Here it is one registerized
-  * O(len) pass inside whole-stage codegen.
-  *
-  * Semantics are bit-identical to the Column form: `code` is the
-  * char-at-i value (what `ascii(substr(s,i,1))` returns for BMP strings
-  * and what DuckDB's `ord(s[i])` computes for ASCII). Pure-ASCII input —
-  * the corpus contract documented in Parity — takes a byte-wise fast path
-  * with no allocation; anything else falls back to Java chars. */
-final case class PortableHashExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"portable_hash expects string, got $t")
-  }
+  * O(len) pass inside whole-stage codegen, bit-identical to the Column
+  * form. */
+final case class PortableHashExpr(child: Expression) extends StringKernelExpr {
   override def dataType: DataType = LongType
   override def prettyName: String = "portable_hash"
 
-  override protected def nullSafeEval(input: Any): Any =
-    PortableHashExpr.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${classOf[PortableHashExpr].getName}$$.MODULE$$.hash($c)")
+  override def kernel(s: UTF8String): Any = {
+    val c = TextKernel.codes(s)
+    TextKernel.hash(c, 0, c.length)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): PortableHashExpr =
     copy(child = newChild)
-}
-
-object PortableHashExpr {
-  private final val M = 2147483647L
-
-  /** The shared kernel (also called from generated code). */
-  def hash(s: UTF8String): Long = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    var acc = 0L
-    if (ascii) {
-      var j = 0
-      while (j < nb) {
-        val w = (1103515245L * (j + 1) + 12345L) % M
-        acc = (acc + (s.getByte(j) & 0xffL) * w) % M
-        j += 1
-      }
-    } else {
-      val str = s.toString
-      var j = 0
-      while (j < str.length) {
-        val w = (1103515245L * (j + 1) + 12345L) % M
-        acc = (acc + str.charAt(j).toLong * w) % M
-        j += 1
-      }
-    }
-    acc
-  }
 }
 
 object PortableHash {

@@ -1,18 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native word-n-gram PORTABLE hasher (r18): one pass over the UTF-8
-  * bytes emits, for every n consecutive words of `split(text, ' ')`, the
-  * cross-engine [[graft.queries.Parity.strHash]] of the space-joined
-  * n-gram string — without materializing a single n-gram string.
+/** Native word-n-gram PORTABLE hasher (r18): for every n consecutive words
+  * of `split(text, ' ')`, the cross-engine [[graft.queries.Parity.strHash]]
+  * of the space-joined n-gram string — without materializing a single
+  * n-gram string ([[TextKernel.ngramHashes]]).
   *
   * Where [[ShingleHashExpr]] (any well-distributed hash, values never
   * surface) serves the Jaccard family, THIS kernel serves the paths whose
@@ -26,131 +24,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * string_split), and each n-gram hashes with positions 1..len of the
   * joined string, the separator spaces hashing as code 32 at their joined
   * positions. Fewer than n words → empty array (the callers' old
-  * size-guard filters become no-ops). Pure-ASCII input takes the
-  * zero-allocation byte path; any non-ASCII document falls back to the
-  * equivalent char-indexed loop ([[PortableHashExpr]]'s convention).
-  */
+  * size-guard filters become no-ops). */
 final case class PortableNgramHashExpr(child: Expression, n: Int)
-  extends UnaryExpression {
+  extends StringKernelExpr {
 
   require(n >= 1, s"n-gram width must be >= 1, got $n")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"portable_ngram_hashes expects string, got $t")
-  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "portable_ngram_hashes"
 
-  override protected def nullSafeEval(input: Any): Any =
-    PortableNgramHashExpr.ngrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${classOf[PortableNgramHashExpr].getName}$$.MODULE$$.ngrams($c, $n)")
+  override def kernel(s: UTF8String): Any =
+    ArrayData.toArrayData(TextKernel.ngramHashes(TextKernel.codes(s), n))
 
   override protected def withNewChildInternal(newChild: Expression): PortableNgramHashExpr =
     copy(child = newChild)
-}
-
-object PortableNgramHashExpr {
-  private final val M = 2147483647L
-
-  /** The shared kernel (also called from generated code). */
-  def ngrams(s: UTF8String, n: Int): ArrayData = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    if (ascii) new GenericArrayData(ngramsAscii(s, n))
-    else new GenericArrayData(ngramsChars(s.toString, n))
-  }
-
-  private def ngramsAscii(s: UTF8String, n: Int): Array[Long] = {
-    val nb = s.numBytes
-    // word boundaries: starts(w) .. ends(w) (exclusive) in byte offsets
-    var words = 1
-    var i = 0
-    while (i < nb) { if (s.getByte(i) == 0x20) words += 1; i += 1 }
-    if (words < n) return Array.emptyLongArray
-    val starts = new Array[Int](words)
-    val ends = new Array[Int](words)
-    var w = 0
-    starts(0) = 0
-    i = 0
-    while (i < nb) {
-      if (s.getByte(i) == 0x20) { ends(w) = i; w += 1; starts(w) = i + 1 }
-      i += 1
-    }
-    ends(w) = nb
-    val out = new Array[Long](words - n + 1)
-    var k = 0
-    while (k < out.length) {
-      var acc = 0L
-      var pos = 1L // 1-based char position within the joined n-gram string
-      var j = k
-      while (j < k + n) {
-        var b = starts(j)
-        val e = ends(j)
-        while (b < e) {
-          acc = (acc + (s.getByte(b) & 0xffL) *
-            ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1; b += 1
-        }
-        if (j < k + n - 1) { // the joining space, code 32
-          acc = (acc + 32L * ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1
-        }
-        j += 1
-      }
-      out(k) = acc
-      k += 1
-    }
-    out
-  }
-
-  private def ngramsChars(str: String, n: Int): Array[Long] = {
-    val len = str.length
-    var words = 1
-    var i = 0
-    while (i < len) { if (str.charAt(i) == ' ') words += 1; i += 1 }
-    if (words < n) return Array.emptyLongArray
-    val starts = new Array[Int](words)
-    val ends = new Array[Int](words)
-    var w = 0
-    starts(0) = 0
-    i = 0
-    while (i < len) {
-      if (str.charAt(i) == ' ') { ends(w) = i; w += 1; starts(w) = i + 1 }
-      i += 1
-    }
-    ends(w) = len
-    val out = new Array[Long](words - n + 1)
-    var k = 0
-    while (k < out.length) {
-      var acc = 0L
-      var pos = 1L
-      var j = k
-      while (j < k + n) {
-        var c = starts(j)
-        val e = ends(j)
-        while (c < e) {
-          acc = (acc + str.charAt(c).toLong *
-            ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1; c += 1
-        }
-        if (j < k + n - 1) {
-          acc = (acc + 32L * ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1
-        }
-        j += 1
-      }
-      out(k) = acc
-      k += 1
-    }
-    out
-  }
 }
 
 object PortableNgramHash {

@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native word-3-shingle hasher: one pass over the UTF-8 bytes emits the
@@ -33,25 +31,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash is parity-safe (collisions ~n²/2⁶⁴, negligible both engines). */
 final case class ShingleHashExpr(child: Expression,
                                  distinct: Boolean = false)
-  extends UnaryExpression {
+  extends StringKernelExpr {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes expects string, got $t")
-  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String =
     if (distinct) "shingle_hashes_distinct" else "shingle_hashes"
 
-  override protected def nullSafeEval(input: Any): Any =
-    if (distinct) ShingleHashExpr.shinglesDistinct(input.asInstanceOf[UTF8String])
-    else ShingleHashExpr.shingles(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = if (distinct) "shinglesDistinct" else "shingles"
-    defineCodeGen(ctx, ev, c =>
-      s"${classOf[ShingleHashExpr].getName}$$.MODULE$$.$m($c)")
+  override def kernel(s: UTF8String): Any = {
+    val hs = ShingleHashExpr.shingles(s)
+    ArrayData.toArrayData(if (distinct) ShingleHashExpr.distinctSorted(hs) else hs)
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashExpr =
@@ -63,11 +51,7 @@ object ShingleHashExpr {
   private final val FnvPrime = 0x100000001b3L
   private final val Golden = 0x9e3779b97f4a7c15L
 
-  /** The shared kernel (also called from generated code). */
-  def shingles(s: UTF8String): ArrayData =
-    new GenericArrayData(shinglesRaw(s))
-
-  private def shinglesRaw(s: UTF8String): Array[Long] = {
+  private def shingles(s: UTF8String): Array[Long] = {
     val nb = s.numBytes
     var words = 1
     var i = 0
@@ -98,7 +82,7 @@ object ShingleHashExpr {
     out
   }
 
-  /** [[shingles]] with per-document dedup (SET semantics): sort + compact
+  /** Per-document dedup of [[shingles]] (SET semantics): sort + compact
     * the hash array in place — O(k log k) on a few hundred longs per row.
     * This is the Jaccard family's distinct-(doc_id, shingle) step executed
     * AT THE SCAN, so the pipeline never pays a cluster-wide `distinct()`
@@ -106,9 +90,8 @@ object ShingleHashExpr {
     * single biggest movement of the dedup pipeline; per-row dedup is free
     * parallelism). Output order is sorted, which downstream aggregation
     * does not observe. */
-  def shinglesDistinct(s: UTF8String): ArrayData = {
-    val raw = shinglesRaw(s)
-    if (raw.length < 2) return new GenericArrayData(raw)
+  private def distinctSorted(raw: Array[Long]): Array[Long] = {
+    if (raw.length < 2) return raw
     java.util.Arrays.sort(raw)
     var n = 1
     var k = 1
@@ -116,8 +99,7 @@ object ShingleHashExpr {
       if (raw(k) != raw(n - 1)) { raw(n) = raw(k); n += 1 }
       k += 1
     }
-    if (n == raw.length) new GenericArrayData(raw)
-    else new GenericArrayData(java.util.Arrays.copyOf(raw, n))
+    if (n == raw.length) raw else java.util.Arrays.copyOf(raw, n)
   }
 }
 

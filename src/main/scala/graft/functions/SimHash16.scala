@@ -1,18 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 16-bit SimHash signature (r19; VERDICT r18 next-list #5): the
   * whole per-document signature — tokenize on spaces, portable-hash each
-  * word ([[PortableHashExpr]] semantics), bucket to 16 bits with the
-  * Knuth multiplier, accumulate ±1 bit votes over word INSTANCES, emit
-  * the sign bits — in ONE pass over the UTF-8 bytes.
+  * word ([[TextKernel]]), bucket to 16 bits with the Knuth multiplier,
+  * accumulate ±1 bit votes over word INSTANCES, emit the sign bits — in
+  * one projection.
   *
   * Why: the composed form
   * (`explode(split(text, ' ')) → filter(w ≠ '') → strHash·2654435761 %
@@ -26,122 +24,48 @@ import org.apache.spark.unsafe.types.UTF8String
   * Bit-identical to the composed form:
   *   - words are `split(text, ' ')` segments; EMPTY segments are skipped
   *     (the `w ≠ ''` filter);
-  *   - per word: h = Σ_{i=1..len} code(s_i)·((1103515245·i+12345) mod M)
-  *     mod M (positions restart per word — [[PortableHashExpr]]), then
+  *   - per word: h = strHash(word) (positions restart per word), then
   *     hw = (h · 2654435761) mod 65536;
   *   - bit b of the signature is set iff Σ over word instances of
   *     (2·((hw >> b) & 1) − 1) is > 0 (strictly positive, ties → 0);
   *   - a document with NO nonempty words returns −1: the composed
   *     formulation emits no row for it at all (explode of an empty/null
   *     array), so callers filter `sh >= 0` to reproduce the absence.
-  *     −1 is unambiguous (signatures live in [0, 65535]).
-  * Pure-ASCII documents take the zero-allocation byte path; any
-  * non-ASCII document falls back to the equivalent char-indexed loop
-  * (chars = bytes on ASCII words, so mixed documents agree too). */
-final case class SimHash16Expr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash16 expects string, got $t")
-  }
+  *     −1 is unambiguous (signatures live in [0, 65535]). */
+final case class SimHash16Expr(child: Expression) extends StringKernelExpr {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash16"
 
-  override protected def nullSafeEval(input: Any): Any =
-    SimHash16Expr.simhash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${classOf[SimHash16Expr].getName}$$.MODULE$$.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash16Expr =
-    copy(child = newChild)
-}
-
-object SimHash16Expr {
-  private final val M = 2147483647L
-  private final val Knuth = 2654435761L
-
-  /** The shared kernel (also called from generated code). */
-  def simhash(s: UTF8String): Long = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    if (ascii) simhashAscii(s) else simhashChars(s.toString)
-  }
-
-  private def simhashAscii(s: UTF8String): Long = {
-    val nb = s.numBytes
-    val votes = new Array[Long](16)
-    var any = false
-    var acc = 0L   // running strHash of the current word
-    var pos = 1L   // 1-based char position within the current word
-    var i = 0
-    while (i <= nb) {
-      val atEnd = i == nb
-      val b = if (atEnd) 0x20 else s.getByte(i)
-      if (b == 0x20) {
-        if (pos > 1) { // nonempty word: vote
-          any = true
-          val hw = (acc * Knuth) % 65536L
-          var bt = 0
-          while (bt < 16) {
-            votes(bt) += (((hw >> bt) & 1L) << 1) - 1L
-            bt += 1
-          }
-        }
-        acc = 0L; pos = 1L
-      } else {
-        acc = (acc + (b & 0xffL) * ((1103515245L * pos + 12345L) % M)) % M
-        pos += 1
+  override def kernel(s: UTF8String): Any = {
+    val c = TextKernel.codes(s)
+    val b = TextKernel.words(c)
+    // the 16-bit bucket of every nonempty word
+    val hw = new Array[Long](b.length - 1)
+    var m = 0
+    var k = 0
+    while (k < hw.length) {
+      if (b(k + 1) - 1 > b(k)) {
+        hw(m) = (TextKernel.hash(c, b(k), b(k + 1) - 1) * 2654435761L) % 65536L
+        m += 1
       }
-      i += 1
+      k += 1
     }
-    finish(votes, any)
-  }
-
-  private def simhashChars(str: String): Long = {
-    val len = str.length
-    val votes = new Array[Long](16)
-    var any = false
-    var acc = 0L
-    var pos = 1L
-    var i = 0
-    while (i <= len) {
-      val atEnd = i == len
-      val c = if (atEnd) ' ' else str.charAt(i)
-      if (c == ' ') {
-        if (pos > 1) {
-          any = true
-          val hw = (acc * Knuth) % 65536L
-          var bt = 0
-          while (bt < 16) {
-            votes(bt) += (((hw >> bt) & 1L) << 1) - 1L
-            bt += 1
-          }
-        }
-        acc = 0L; pos = 1L
-      } else {
-        acc = (acc + c.toLong * ((1103515245L * pos + 12345L) % M)) % M
-        pos += 1
-      }
-      i += 1
-    }
-    finish(votes, any)
-  }
-
-  private def finish(votes: Array[Long], any: Boolean): Long = {
-    if (!any) return -1L
+    if (m == 0) return -1L
+    // bit b's vote sum is 2·ones − m, positive iff 2·ones > m
     var sh = 0L
     var bt = 0
     while (bt < 16) {
-      if (votes(bt) > 0) sh |= 1L << bt
+      var ones = 0L
+      var w = 0
+      while (w < m) { ones += (hw(w) >>> bt) & 1L; w += 1 }
+      if (2 * ones > m) sh |= 1L << bt
       bt += 1
     }
     sh
   }
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash16Expr =
+    copy(child = newChild)
 }
 
 object SimHash16 {

@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native winnowing fingerprinter (Schleimer et al., the q40 semantics):
@@ -23,75 +21,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * so the corpus-wide shuffles carry only fingerprints.
   *
   * Bit-parity: gram hash = (strHash(gram) · 2654435761) mod 1000003 with
-  * strHash the [[PortableHashExpr]] positional LCG — positions restart at
-  * 1 per gram, so the weights are the 5 fixed constants precomputed below.
-  * ASCII fast path on bytes; non-ASCII falls back to Java chars, matching
-  * PortableHashExpr's contract (`ascii`/`ord` semantics). */
-final case class WinnowExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"winnow_fingerprints expects string, got $t")
-  }
+  * strHash the [[TextKernel.windowHashes]] of the grams (positions restart
+  * at 1 per gram). */
+final case class WinnowExpr(child: Expression) extends StringKernelExpr {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fingerprints"
 
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowExpr.fingerprints(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${classOf[WinnowExpr].getName}$$.MODULE$$.fingerprints($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowExpr =
-    copy(child = newChild)
-}
-
-object WinnowExpr {
-  private final val M = 2147483647L
-  private final val Mult = 2654435761L
-  private final val Mod = 1000003L
-  // strHash positional weights for positions 1..5 (gram-local positions)
-  private final val W: Array[Long] =
-    Array.tabulate(5)(p => (1103515245L * (p + 1) + 12345L) % M)
-
-  /** The shared kernel (also called from generated code). */
-  def fingerprints(s: UTF8String): ArrayData = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    val codes: Array[Long] =
-      if (ascii) {
-        val a = new Array[Long](nb)
-        var j = 0
-        while (j < nb) { a(j) = s.getByte(j) & 0xffL; j += 1 }
-        a
-      } else {
-        val str = s.toString
-        val a = new Array[Long](str.length)
-        var j = 0
-        while (j < str.length) { a(j) = str.charAt(j).toLong; j += 1 }
-        a
-      }
-    val len = codes.length
-    if (len < 8) return new GenericArrayData(Array.emptyLongArray)
-    val nGrams = len - 4
-    val hg = new Array[Long](nGrams)
+  override def kernel(s: UTF8String): Any = {
+    val c = TextKernel.codes(s)
+    if (c.length < 8) return ArrayData.toArrayData(Array.emptyLongArray)
+    val hg = TextKernel.windowHashes(c, 5)
     var g = 0
-    while (g < nGrams) {
-      var acc = 0L
-      var p = 0
-      while (p < 5) { acc = (acc + codes(g + p) * W(p)) % M; p += 1 }
-      hg(g) = (acc * Mult) % Mod
-      g += 1
-    }
-    // sliding 4-window min + dedup (fingerprint domain is [0, Mod))
+    while (g < hg.length) { hg(g) = (hg(g) * 2654435761L) % 1000003L; g += 1 }
+    // sliding 4-window min + dedup (fingerprint domain is [0, 1000003))
     val seen = new java.util.HashSet[Long]()
     val out = new scala.collection.mutable.ArrayBuffer[Long]()
     var j = 0
-    while (j <= nGrams - 4) {
+    while (j <= hg.length - 4) {
       var m = hg(j)
       if (hg(j + 1) < m) m = hg(j + 1)
       if (hg(j + 2) < m) m = hg(j + 2)
@@ -99,8 +45,11 @@ object WinnowExpr {
       if (seen.add(m)) out += m
       j += 1
     }
-    new GenericArrayData(out.toArray)
+    ArrayData.toArrayData(out.toArray)
   }
+
+  override protected def withNewChildInternal(newChild: Expression): WinnowExpr =
+    copy(child = newChild)
 }
 
 object Winnow {

@@ -704,7 +704,10 @@ object CurationOps {
     * flow a release runs last ("pick the corpus under budget, then publish
     * its card"), in ONE declarative plan. The cumulative-budget window
     * stays lang-partitioned; the card is a single CUBE pass over the
-    * selection. */
+    * selection. Both engines average the 4-decimal `quality` as the exact
+    * integer sum of `round(quality·1e4)` over the count: a float `avg`
+    * depends on summation order, and DuckDB's gave two results over 60
+    * runs. */
   def q141(s: SparkSession, d: String): DataFrame = {
     val nWords = size(split(col("text"), " ")).cast("long")
     val scored = Tables.documents(s, d)
@@ -721,7 +724,8 @@ object CurationOps {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_words")).as("n_tokens"),
         sum(col("n_chars")).as("n_chars"),
-        Parity.fr(avg(col("quality")), 4).as("avg_quality"))
+        (floor(sum(round(col("quality") * 1e4).cast("long")).cast("double") /
+          count(lit(1)) + lit(0.5)) / lit(1e4)).as("avg_quality"))
       .select(coalesce(col("lang"), lit("(all)")).as("lang"),
         coalesce(col("source"), lit("(all)")).as("source"),
         col("n_docs"), col("n_tokens"), col("n_chars"), col("avg_quality"))
@@ -750,7 +754,7 @@ object CurationOps {
       |  count(*)::BIGINT AS n_docs,
       |  sum(n_words)::BIGINT AS n_tokens,
       |  sum(n_chars)::BIGINT AS n_chars,
-      |  floor(avg(quality) * 1e4 + 0.5) / 1e4 AS avg_quality
+      |  floor(sum(CAST(round(quality * 1e4) AS BIGINT))::DOUBLE / count(*) + 0.5) / 1e4 AS avg_quality
       |FROM sel
       |GROUP BY CUBE (lang, source)
       |ORDER BY lang, source""".stripMargin

@@ -267,4 +267,17 @@ class HarnessContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(mains.sorted == Seq("Bench", "Explain", "ScaleStress", "Verify"))
   }
+
+  test("the portable hash weight and the ASCII test live only in the text-kernel core") {
+    // a second copy of either is a twin loop that can drift from the core
+    val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val code = Files.list(Paths.get("src/main/scala/graft/functions")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala")).map { f =>
+        f.getFileName.toString ->
+          Comment.replaceAllIn(new String(Files.readAllBytes(f), "UTF-8"), "")
+      }.toSeq
+    for (p <- Seq("""1103515245""".r, """getByte\([^)]*\)\s*<\s*0""".r))
+      assert(code.collect { case (f, src) if p.findFirstIn(src).nonEmpty => f } ==
+        Seq("TextKernel.scala"), s"/$p/")
+  }
 }
