@@ -60,12 +60,7 @@ object Tables {
     * session's conf is left as found. Only the nanos encoding sets it for
     * good: its scans read nanos-as-long again when they execute. */
   def events(s: SparkSession, d: String): DataFrame = {
-    val prior = s.conf.getAll.get(NanosAsLong)
-    s.conf.set(NanosAsLong, "true")
-    val raw = try load(s, d, "events") finally prior match {
-      case Some(v) => s.conf.set(NanosAsLong, v)
-      case None => s.conf.unset(NanosAsLong)
-    }
+    val raw = SessionConf.scoped(s, NanosAsLong -> "true")(load(s, d, "events"))
     raw.schema("ts").dataType match {
       case LongType =>
         s.conf.set(NanosAsLong, "true")

@@ -134,11 +134,4 @@ object Multimodal {
       }
     })
   }
-
-  /** Partition media by (kind, size-bucket) for balanced decode stages —
-    * big payloads dominate decode time, so co-locating similar sizes avoids
-    * stragglers at scale. */
-  def repartitionForDecode(media: Dataset[MediaRow], partitions: Int): Dataset[MediaRow] =
-    media.repartition(partitions, col("kind"),
-      floor(log2(length(col("payload")) + 1)))
 }

@@ -1,10 +1,11 @@
 package graft.queries
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.Tables
+import graft.{SessionConf, Tables}
 import graft.engine.{BranchContext, Domain, ExternalValues, ReportRunner => RR}
 import graft.report.LineTree
 
@@ -428,6 +429,44 @@ object GateOps {
     src
   }
 
+  /** Schema of the 5 % user events slice (value in integer cents) that
+    * the watermark gates stream. */
+  private val SliceSchema =
+    "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
+
+  /** A staged src dir read back as a file stream, one batch file per
+    * micro-batch, in the arrival order the staged mtimes pin. */
+  private def fileStream(s: SparkSession, src: java.io.File,
+      schema: String = SliceSchema): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src.getPath)
+
+  /** Starts `df` into an append parquet sink at `store`. */
+  private def toParquet(df: Dataset[_], store: java.io.File,
+      ckpt: java.io.File): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Append)
+      .format("parquet")
+      .option("path", store.getPath)
+      .option("checkpointLocation", ckpt.getPath)
+      .start()
+
+  /** Runs a streaming gate's query to the end of its staged input:
+    * `start`, `processAllAvailable`, `stop`. The query runs with 4 shuffle
+    * partitions (plus any `extraConf`): its bounded sample needs no width,
+    * and a state-store instance per partition per micro-batch is the
+    * gate's fixed cost; a production deployment sizes this to its key
+    * cardinality. The settings are applied before `start` and held until
+    * the query stops: the stream thread copies the session's conf once,
+    * through a session clone made AFTER `start()` returns, so a later set
+    * never reaches it and an earlier restore races the copy. Nothing else
+    * plans queries while a gate runs ([[graft.Queries]]' contract). */
+  private def drain(s: SparkSession, extraConf: (String, String)*)(
+      start: => StreamingQuery): Unit =
+    SessionConf.scoped(s, ("spark.sql.shuffle.partitions" -> "4") +: extraConf: _*) {
+      val q = start
+      try q.processAllAvailable() finally q.stop()
+    }
+
   /** The shared streaming fixture, staged ONCE per (application, data
     * dir): five gates (q159/q163/q164/q165/q167) stream the IDENTICAL
     * 5 %-user events slice (integer cents) as the same 4 time-quartile
@@ -582,23 +621,10 @@ object GateOps {
         .map { case (b, i) => b.withColumn("__b", lit(i + 1)) }
         .reduce(_ unionByName _),
       batches.size, "q157")
-    val stream = s.readStream
-      .schema("k LONG, op STRING, old_value LONG, new_value LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.getPath)
-    // pin the fold's shuffle width to the gate's 100-key space, SET
-    // BEFORE maintainAggregate start()s the query and HELD until it
-    // terminates: the stream thread's session clone copies conf once, so
-    // a post-start set never propagates and an early restore races the
-    // capture (the q159/q160/q161 discipline; nothing else plans queries
-    // while a gate runs)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.EventsStream.maintainAggregate(
-        stream, "k", store.getPath, ckpt.getPath)
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val stream = fileStream(s, src, "k LONG, op STRING, old_value LONG, new_value LONG")
+    // 4 shuffle partitions also fit the fold's 100-key space
+    drain(s)(graft.streaming.EventsStream.maintainAggregate(
+      stream, "k", store.getPath, ckpt.getPath))
     s.read.parquet(graft.streaming.EventsStream.latestVersion(store.getPath).get)
       .select(col("k"), col("total"), col("n"))
       .orderBy(col("k"))
@@ -667,42 +693,17 @@ object GateOps {
           (dst, new java.io.File(src, f.getName))
         }
     }
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-        "event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.getPath)
-      .as[graft.streaming.EventsStream.Event]
+    val stream = fileStream(s, src).as[graft.streaming.EventsStream.Event]
     // the gate's cost is per-micro-batch FIXED overhead (one state-store
-    // instance per shuffle partition × 6 batches), not data: pin the
-    // stateful query to 4 partitions for its bounded sample (state-store
-    // instances per partition per micro-batch ARE the gate cost). A production
-    // deployment sizes this to its key cardinality. The pinned setting is
-    // HELD until the query terminates: the stream thread snapshots conf
-    // via its session clone AFTER start() returns (StreamExecution counts
-    // down its start latch before cloning), so restoring right after
-    // start() races the capture — and nothing else plans queries while a
-    // gate runs (the gate-runner contract).
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      def runOnce(): Unit = {
-        val q = graft.streaming.EventsStream.sessionize(stream, gapMinutes = 30)
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet")
-          .option("path", store.getPath)
-          .option("checkpointLocation", ckpt.getPath)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      runOnce()
-      if (held.nonEmpty) {
-        held.foreach { case (from, to) =>
-          java.nio.file.Files.move(from.toPath, to.toPath) }
-        runOnce() // resumes from the checkpoint; must NOT re-emit batches 1-2
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // instance per shuffle partition × 6 batches), not data
+    def runOnce(): Unit = drain(s)(toParquet(
+      graft.streaming.EventsStream.sessionize(stream, gapMinutes = 30), store, ckpt))
+    runOnce()
+    if (held.nonEmpty) {
+      held.foreach { case (from, to) =>
+        java.nio.file.Files.move(from.toPath, to.toPath) }
+      runOnce() // resumes from the checkpoint; must NOT re-emit batches 1-2
+    }
     s.read.parquet(store.getPath)
       .filter(col("user_id") >= 0) // drop the sentinel user's artifacts
       .select(col("user_id"),
@@ -795,41 +796,16 @@ object GateOps {
       arriving.withColumn("__b",
         ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy(col("doc_id")))),
       4, "q160")
-    val stream = s.readStream
-      .schema("h STRING, doc_id LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.getPath)
+    val stream = fileStream(s, src, "h STRING, doc_id LONG")
       .as[graft.streaming.DedupStream.DocIn]
     // transformWithState requires the RocksDB provider (also the cluster
-    // posture). 4 partitions (every streaming gate since r6): a RocksDB store INSTANCE
-    // per partition per micro-batch is this gate's fixed cost (heavier
-    // than their HDFS-backed state), and the bounded sample needs no
-    // width — production sizes this to its hash-key cardinality. Both
-    // settings are HELD until the query terminates: the stream thread
-    // snapshots conf via its session clone AFTER start() returns, so an
-    // early restore races the capture — with the default provider winning
-    // the race, transformWithState would fail outright.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val q = graft.streaming.DedupStream.classify(stream, corpusHashes)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet")
-        .option("path", store.getPath)
-        .option("checkpointLocation", ckpt.getPath)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProv match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    // posture); a RocksDB store instance per partition per micro-batch is
+    // heavier than the HDFS-backed state of the other gates. Held with
+    // the partitions until the query stops: with the default provider
+    // winning the conf-capture race, transformWithState would fail outright.
+    drain(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(
+      toParquet(graft.streaming.DedupStream.classify(stream, corpusHashes), store, ckpt))
     s.read.parquet(store.getPath)
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .groupBy(col("lang"), col("dedup_class"))
@@ -864,25 +840,8 @@ object GateOps {
     val ckpt = graft.Scratch.fresh("q163_ckpt")
     // quartile fixture from the shared memo (integer-cents slice)
     val src = sharedSliceSrc(s, d, "q163")
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-        "event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.getPath)
-    // 4 partitions for the bounded sample, held until the query
-    // terminates (the q159/q160/q161 conf-capture discipline)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.EventsStream.clickToPurchase(stream)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet")
-        .option("path", store.getPath)
-        .option("checkpointLocation", ckpt.getPath)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    drain(s)(toParquet(
+      graft.streaming.EventsStream.clickToPurchase(fileStream(s, src)), store, ckpt))
     s.read.parquet(store.getPath)
       .select(col("user_id"), col("click_id"),
         col("click_value").cast("long").as("click_cents"),
@@ -938,23 +897,8 @@ object GateOps {
     val ckpt = graft.Scratch.fresh("q164_ckpt")
     // full fixture (quartiles + both-sides sentinels) from the shared memo
     val src = sharedSliceSrc(s, d, "q164", sentinels = Some("sentcp"))
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-        "event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.getPath)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.EventsStream.clickToPurchaseOuter(stream)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet")
-        .option("path", store.getPath)
-        .option("checkpointLocation", ckpt.getPath)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    drain(s)(toParquet(
+      graft.streaming.EventsStream.clickToPurchaseOuter(fileStream(s, src)), store, ckpt))
     s.read.parquet(store.getPath)
       .filter(col("user_id") >= 0) // drop the sentinel user's rows
       .select(col("user_id"), col("click_id"),
@@ -979,23 +923,8 @@ object GateOps {
     val ckpt = graft.Scratch.fresh("q167_ckpt")
     // full fixture (quartiles + "x" sentinels) from the shared memo
     val src = sharedSliceSrc(s, d, "q167", sentinels = Some("sentx"))
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-        "event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.getPath)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.EventsStream.hourlyCounts(stream)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet")
-        .option("path", store.getPath)
-        .option("checkpointLocation", ckpt.getPath)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    drain(s)(toParquet(
+      graft.streaming.EventsStream.hourlyCounts(fileStream(s, src)), store, ckpt))
     s.read.parquet(store.getPath)
       .filter(col("event_type") =!= "x") // the sentinel type's windows
       .select(date_format(col("hour_start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
@@ -1043,23 +972,8 @@ object GateOps {
         col("ts") >= col("__bmax") - expr("INTERVAL 48 HOURS"))
       .withColumn("__b", col("__b") + 1).drop("__bmax")
     val src = stageBatches(base.unionByName(dups), 4, "q168")
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-        "event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.getPath)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.EventsStream.dedupeStream(stream)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet")
-        .option("path", store.getPath)
-        .option("checkpointLocation", ckpt.getPath)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    drain(s)(toParquet(
+      graft.streaming.EventsStream.dedupeStream(fileStream(s, src)), store, ckpt))
     s.read.parquet(store.getPath)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1137,22 +1051,12 @@ object GateOps {
     val ckpt = graft.Scratch.fresh("q161_ckpt")
     val src = stageBatches(batched, 4, "q161")
     docs.unpersist()
-    val stream = s.readStream
-      .schema("doc_id LONG, h LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.getPath)
+    val stream = fileStream(s, src, "doc_id LONG, h LONG")
       .as[graft.streaming.BloomStream.DocIn]
-    // foreachBatch jobs (screen map + position distinct) run per batch on
-    // the bounded sample: pin 4 partitions, held until termination (the
-    // q159/q160 conf-capture discipline)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.BloomStream.screen(stream, bitmap, k,
-        out => out.write.mode("append").parquet(store.getPath),
-        checkpoint = Some(ckpt.getPath))
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // the foreachBatch jobs (screen map + position distinct) run per batch
+    drain(s)(graft.streaming.BloomStream.screen(stream, bitmap, k,
+      out => out.write.mode("append").parquet(store.getPath),
+      checkpoint = Some(ckpt.getPath)))
     // batch mapping from the fixture's FILE NAMES (what actually
     // streamed), not from re-running the staging window — the returned
     // plan stays free of the global ntile (the plan sweep checks it)

@@ -3,7 +3,7 @@ package graft.queries
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionConf, Tables}
 import graft.report.Handlers
 
 /** Gate queries for the composed report handlers (graft.report.Handlers):
@@ -328,20 +328,13 @@ object ReportOps {
     // repartition(1) caches — a production statement over unbounded
     // journals keeps the session's AQE and partitioning (the bounded
     // period-activity frames are the dimension-class exception, not the
-    // rule); restored in the finally. Alternatives measured and rejected:
+    // rule); scoped to the body. Alternatives measured and rejected:
     // AQE on + 1 shuffle partition (25 jobs, no win — replanning is the
     // cost, not the task count); AQE off + no broadcasts (task-time
     // blowup, 26 s). Results are conf-independent (integral-valued sums,
     // per-row cent flooring) — the oracle crosscheck pins that.
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "1")
-    try q170Body(s, d)
-    finally {
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    }
+    SessionConf.scoped(s, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "1")(q170Body(s, d))
   }
 
   private def q170Body(s: SparkSession, d: String): DataFrame = {

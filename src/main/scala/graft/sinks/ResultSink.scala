@@ -3,25 +3,17 @@ package graft.sinks
 import org.apache.spark.sql.DataFrame
 
 /** Result sinks (SURVEY §7.1 "sinks/"): the golden-matrix collector used
-  * by report tests (the reference's assertLinesValues matrices) and thin
-  * file writers. The XLSX/PDF surface of the reference is presentation —
-  * a writer over an already-computed result frame — so the engine exposes
-  * exactly that: the frame, a matrix, a csv/parquet landing, or a real
-  * XLSX workbook ([[writeXlsx]]). */
+  * by report tests (the reference's assertLinesValues matrices) and
+  * presentation writers. The XLSX/PDF surface of the reference is
+  * presentation — a writer over an already-computed result frame — so the
+  * engine exposes exactly that: the frame, a matrix, an HTML table, or a
+  * real XLSX workbook ([[writeXlsx]]). */
 object ResultSink {
 
   /** Collect a (small, already-aggregated) result as a row matrix for
     * golden-test comparison. Null-safe stringification. */
   def toMatrix(df: DataFrame): Seq[Seq[String]] =
     df.collect().toSeq.map(_.toSeq.map(v => if (v == null) "" else v.toString))
-
-  /** Single-file CSV with header — the register-download shape
-    * (sales_report.py:232-237 serves one file per wizard run). */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   /** SURVEY §2.1 S5/S6 — XLSX report export (the reference's
     * `get_xlsx`/`export_to_xlsx` download path, account_report.py export

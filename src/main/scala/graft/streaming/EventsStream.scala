@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -188,24 +188,6 @@ object EventsStream {
           col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
         "left_outer")
       .select(col("user_id"), col("click_id"), col("click_value"), col("p_value"))
-  }
-
-  /** Wire a parquet-directory stream end-to-end (readStream → transform →
-    * writeStream); returns the started query name. Used for manual driving,
-    * not by the gate. */
-  def startFileStream(spark: SparkSession, srcDir: String, outDir: String,
-                      checkpoint: String): String = {
-    val schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, " +
-      "value DOUBLE, props STRING"
-    val q = hourlyCounts(spark.readStream.schema(schema).parquet(srcDir))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .queryName("graft_events_hourly")
-      .start()
-    q.name
   }
 
   /** Streaming twin of [[graft.cdc.ChangelogApply]]: maintain a

@@ -36,7 +36,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     dim.write.mode("overwrite").bucketBy(8, "k").sortBy("k")
       .saveAsTable("b_dim")
     // force the SMJ path (tiny fixture would otherwise broadcast)
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = s.table("b_facts").join(s.table("b_dim"), "k")
       val agg = j.groupBy("k").agg(count(lit(1)).as("n"), max("nm").as("nm"))
       agg.collect() // materialize so AQE finalizes the plan
@@ -45,15 +45,6 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"expected shuffle-free bucketed join, got:\n$plan")
       // and the result is the plain join's result
       assert(j.count() == 1000)
-    }
-  }
-
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

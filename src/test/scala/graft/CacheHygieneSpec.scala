@@ -22,7 +22,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * (ADVICE r10 #1), converted to `localCheckpoint(false)` this round —
   * this sweep is the regression gate that keeps the whole registry at
   * that standard. The distinction the filter draws is exactly the one
-  * [[org.apache.spark.rdd.GraftRddInspect]] exposes. */
+  * [[org.apache.spark.rdd.GraftRddInspect]] exposes.
+  *
+  * The same loop sweeps the session's SQL conf: every gate must leave
+  * `spark.conf.getAll` (explicit settings only) exactly as it found it,
+  * so a key the gate set for its own body is unset again afterwards, not
+  * pinned to Spark's default. */
 class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -36,16 +41,29 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** One line per key whose explicit setting differs between two
+    * `conf.getAll` snapshots. */
+  private def confDiff(before: Map[String, String],
+      after: Map[String, String]): Seq[String] =
+    (before.keySet ++ after.keySet).toSeq.sorted.collect {
+      case k if before.get(k) != after.get(k) =>
+        s"$k: ${before.getOrElse(k, "<unset>")} -> ${after.getOrElse(k, "<unset>")}"
+    }
+
   test("no gate in the registry leaves a cached (non-localCheckpoint) " +
       "RDD behind after its frame is executed") {
+    // the same loop sweeps the SQL conf (see the class doc)
     val sc = spark.sparkContext
     sc.setLogLevel("WARN")
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    val confLeaks = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((name, fn) <- Queries.all.toSeq.sortBy(_._1)) {
       // pre-gate baseline AFTER the previous gate's cleanup nudge, so a
       // leak is attributed to the gate that created it, never inherited
       val baseline = sc.getPersistentRDDs.keySet.toSet
+      val confBefore = spark.conf.getAll
       fn(spark, sf).count(): Unit
+      confLeaks ++= confDiff(confBefore, spark.conf.getAll).map(l => s"$name: $l")
       val lingering = sc.getPersistentRDDs
         .filter { case (id, _) => !baseline(id) }
         .values
@@ -64,6 +82,8 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(offenders.isEmpty,
       s"gates left non-localCheckpoint persistent RDDs behind:\n" +
         offenders.mkString("\n"))
+    assert(confLeaks.isEmpty,
+      s"gates left the session conf changed:\n" + confLeaks.mkString("\n"))
   }
 
   test("the sweep DETECTS a leaked cache (positive control)") {
@@ -84,5 +104,30 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     ckpt.count(): Unit
     assert(newNonCheckpoint().isEmpty,
       "localCheckpoint blocks must be exempt (caller-held, GC-reclaimable)")
+  }
+
+  test("SessionConf.scoped restores every key when its body throws, and " +
+      "the conf sweep DETECTS a leaked key (positive control)") {
+    val explicit = "spark.sql.shuffle.partitions" // set at session creation
+    val defaulted = "spark.sql.adaptive.enabled"  // unset, Spark default true
+    val bare = "spark.graft.spec.noDefault"       // unset, no default at all
+    val before = spark.conf.getAll
+    assert(before.contains(explicit) && !before.contains(defaulted) &&
+      !before.contains(bare), s"fixture keys: $before")
+    intercept[IllegalStateException] {
+      SessionConf.scoped(spark, explicit -> "7", defaulted -> "false", bare -> "x") {
+        assert(Seq(explicit, defaulted, bare).map(spark.conf.get) == Seq("7", "false", "x"))
+        throw new IllegalStateException("forced failure inside the scope")
+      }
+    }
+    assert(confDiff(before, spark.conf.getAll).isEmpty)
+    // the hand-written restore the helper replaced: reading the prior
+    // value with conf.get reports the default, and writing it back leaves
+    // the key explicitly set — the sweep's diff must name it
+    val prior = spark.conf.get(defaulted)
+    spark.conf.set(defaulted, prior)
+    try assert(confDiff(before, spark.conf.getAll) == Seq(s"$defaulted: <unset> -> $prior"))
+    finally spark.conf.unset(defaulted)
+    assert(confDiff(before, spark.conf.getAll).isEmpty)
   }
 }

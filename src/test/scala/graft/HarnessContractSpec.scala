@@ -280,4 +280,22 @@ class HarnessContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(code.collect { case (f, src) if p.findFirstIn(src).nonEmpty => f } ==
         Seq("TextKernel.scala"), s"/$p/")
   }
+
+  test("session conf is set and unset only through SessionConf") {
+    // a hand-written save/set/restore drifts: restoring what conf.get
+    // reported pins a never-set key to Spark's default. The one permanent
+    // set left is Tables.events' nanos-as-long for TIMESTAMP(NANOS) scans.
+    val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val root = Paths.get("src/main/scala")
+    val code = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map { f =>
+        root.relativize(f).toString ->
+          Comment.replaceAllIn(new String(Files.readAllBytes(f), "UTF-8"), "")
+      }.toSeq
+    def sites(call: String) = code.map { case (f, src) =>
+      f -> scala.util.matching.Regex.quote(call).r.findAllIn(src).size }
+      .filter(_._2 > 0).toMap
+    assert(sites("conf.unset(").keySet == Set("graft/SessionConf.scala"))
+    assert(sites("conf.set(") - "graft/SessionConf.scala" == Map("graft/Tables.scala" -> 1))
+  }
 }

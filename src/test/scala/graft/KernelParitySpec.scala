@@ -167,15 +167,8 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(reference.nonEmpty, "fixture must exercise the pair path")
   }
 
-  private def withCodegenOff[A](f: => A): A = {
-    val prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try f finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", prev)
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
-  }
+  private def withCodegenOff[A](f: => A): A = SessionConf.scoped(spark,
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")(f)
 
   test("pair emitter = index self-join: identical pair-row multiset (r19)") {
     // the posting-list kernel replaced the shN ⋈ shN self-join inside

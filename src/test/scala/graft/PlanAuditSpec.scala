@@ -53,15 +53,14 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = Tables.nation(spark, sf)
     // 1. cartesian: an inequality join of two un-hinted sides that the
     //    planner may not broadcast (threshold off = both sides fact-shaped)
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // planning is lazy: offenses() must force the plan while the
     // threshold override is still in effect
-    val cartOffenses = try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      PlanAudit.offenses("synthetic_cartesian",
-        n.as("a").join(n.as("b"),
-          col("a.n_nationkey") < col("b.n_nationkey")).queryExecution)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+    val cartOffenses =
+      SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        PlanAudit.offenses("synthetic_cartesian",
+          n.as("a").join(n.as("b"),
+            col("a.n_nationkey") < col("b.n_nationkey")).queryExecution)
+      }
     assert(cartOffenses.contains("cartesian"))
     //    ...labeled by the cartesian detector ALONE (r8 ADVICE: a
     //    cartesian-only plan with zero BNLJs was double-labeled)
@@ -192,9 +191,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // upstream plan flags it.
     import org.apache.spark.sql.functions._
     val n = Tables.nation(spark, sf)
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (child, pinned) = FramePin.collecting {
         val bad = n.as("a")
           .join(n.as("b"), col("a.n_nationkey") < col("b.n_nationkey"))
@@ -209,8 +206,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"the child plan was expected to be blind to the pinned cartesian: $childOff")
       assert(pinnedOff.contains("cartesian"),
         s"the pinned upstream plan must carry the cartesian: $pinnedOff")
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+    }
   }
 
   test("jaccard pairs dedup shingles at the scan, not via a distinct shuffle") {

@@ -24,6 +24,11 @@ class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** Keyed-state queries below run on the RocksDB state store provider. */
+  private def withRocksDb[A](f: => A): A = SessionConf.scoped(spark,
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
+
   private def ts(m: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
 
   test("stageBatches skips empty micro-batches and keeps mtime order") {
@@ -285,10 +290,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     // credible if the same query actually runs against that provider
     val s = spark; import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val src = MemoryStream[Event]
       val q = EventsStream.userTotals(src.toDS())
         .writeStream.format("memory").queryName("rocks_totals")
@@ -301,21 +303,13 @@ class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(_.user_id == 7L).maxBy(_.n_events)
       q.stop()
       assert(out == SessionOut(7L, 2L, 3.75, "purchase"))
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("transformWithState twin matches mapGroupsWithState across batches") {
     val s = spark; import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val src = MemoryStream[Event]
       val q = EventsStream.userTotalsModern(src.toDS())
         .writeStream.format("memory").queryName("tws_totals")
@@ -330,11 +324,6 @@ class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
       val last9 = out.filter(_.user_id == 9L).maxBy(_.n_events)
       assert(last7 == SessionOut(7L, 2L, 3.75, "purchase"))
       assert(last9 == SessionOut(9L, 1L, 4.00, "view"))
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -379,10 +368,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = s.sqlContext
     import graft.streaming.DedupStream
     import graft.streaming.DedupStream.{DocIn, DedupOut}
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val corpus = Seq("hashA", "hashB").toDS()
       val src = MemoryStream[DocIn]
       val q = DedupStream.classify(src.toDS(), corpus)
@@ -400,11 +386,6 @@ class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
       q.stop()
       assert(out == Map(101L -> "exact_dup", 102L -> "unique",
         103L -> "exact_dup", 104L -> "exact_dup", 105L -> "unique"))
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -419,10 +400,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = s.sqlContext
     import graft.streaming.DedupStream
     import graft.streaming.DedupStream.{DocIn, DedupOut}
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ckpt = graft.Scratch.fresh("dedup_restart_ckpt")
       val store = graft.Scratch.fresh("dedup_restart_store")
       val corpus = Seq("hashA").toDS()
@@ -451,11 +429,6 @@ class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
         2L -> "exact_dup", // its hash must still be state after restart
         3L -> "exact_dup", // corpus initial state persists across restart
         4L -> "unique"), s"got $out")
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

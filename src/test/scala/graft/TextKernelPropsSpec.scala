@@ -187,18 +187,10 @@ class TextKernelPropsSpec extends AnyFunSuite with BeforeAndAfterAll {
         }.mkString("\n")
     }
 
-  private def withEvalPath[A](codegen: Boolean)(f: => A): A = {
-    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    if (!codegen) {
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withEvalPath[A](codegen: Boolean)(f: => A): A =
+    if (codegen) f
+    else SessionConf.scoped(spark, "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")(f)
 
   for ((name, kernel, model) <- kernels; codegen <- Seq(true, false)) {
     test(s"$name equals its plain-Scala model (${if (codegen) "codegen" else "NO_CODEGEN"})") {

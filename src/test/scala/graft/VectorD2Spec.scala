@@ -22,15 +22,8 @@ class VectorD2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def withCodegenOff[A](f: => A): A = {
-    val prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try f finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", prev)
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
-  }
+  private def withCodegenOff[A](f: => A): A = SessionConf.scoped(spark,
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")(f)
 
   private def fixture = {
     val s = spark; import s.implicits._

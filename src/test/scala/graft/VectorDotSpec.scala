@@ -121,13 +121,6 @@ class VectorDotSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == 7)
   }
 
-  private def withCodegenOff[T](body: => T): T = {
-    val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try body finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", prev)
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
-  }
+  private def withCodegenOff[T](body: => T): T = SessionConf.scoped(spark,
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")(body)
 }
