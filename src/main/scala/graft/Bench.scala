@@ -293,16 +293,11 @@ object Bench {
   }
 
   private def session(cpus: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // shuffle/spill to tmpfs when headroom allows ([[Scratch.benchLocalDir]]
     // — the r8 q62 driver/builder gap was local-dir exposure to co-tenant
     // disk pressure); SPARK_GRAFT_LOCAL_TMPFS=0 is the A/B switch
-    Scratch.benchLocalDir().foreach(d => b.config("spark.local.dir", d))
-    val s = b.getOrCreate()
+    val s = SessionConf.localSession(cpus,
+      Scratch.benchLocalDir().map("spark.local.dir" -> _).toSeq: _*)
     s.sparkContext.setLogLevel("WARN")
     s
   }

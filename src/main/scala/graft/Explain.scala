@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print schema + formatted plan for one registered query
   * (or all), on a given sf dir. Usage:
   *   runMain graft.Explain <sfDir> [queryName]
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionConf.localSession("4")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.length > 1) Seq(args(1)) else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -414,12 +414,7 @@ object ScaleStress {
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,10,30")
       .split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionConf.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val rows = scala.collection.mutable.ArrayBuffer.empty[String]
     // structured mirror of the timed rows, for the transient-resample

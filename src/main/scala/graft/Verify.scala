@@ -53,12 +53,7 @@ object Verify {
       case Array(s, o, names) => (s, o, Some(names.split(",").toSet))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionConf.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Schema-contract preflight: on drift, ONE message names the drifted
     // column(s) up front — then still run the suite, so every gate gets

@@ -1,5 +1,9 @@
 package graft.queries
 
+import java.nio.file.{FileVisitOption, Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.spark.sql.SparkSession
 
 /** Keyed once-per-run materialization of derived artifacts shared by
@@ -7,23 +11,36 @@ import org.apache.spark.sql.SparkSession
   * pairs + CC clusters) and the PQ training memo in [[SelectionOps]].
   *
   * `path(s, dir, kind)(build)` runs `build(out)` exactly once per
-  * (Spark application, canonical data dir, kind) — writing whatever
-  * parquet layout the caller wants under `out` — and returns the same
-  * path to every later caller. At 100 TB this is the production shape:
-  * expensive derived artifacts (dedup indexes, trained codebooks) are
-  * per-corpus-version outputs on object storage that downstream queries
-  * READ, not recompute; the scratch dir stands in for that store at
-  * test scale. Standalone correctness is untouched — the first consumer
+  * (Spark application, canonical data dir, kind, content fingerprint of
+  * the dir) — writing whatever parquet layout the caller wants under
+  * `out` — and returns the same path to every later caller. At 100 TB
+  * this is the production shape: expensive derived artifacts (dedup
+  * indexes, trained codebooks) are per-corpus-version outputs on object
+  * storage that downstream queries READ, not recompute; the scratch dir
+  * stands in for that store at test scale. Standalone correctness is untouched — the first consumer
   * triggers exactly the computation the gate used to run inline. */
 private[graft] object ArtifactMemo {
 
-  /** (applicationId, canonical dir, kind) → the single builder's promise.
-    * putIfAbsent elects exactly one builder per key; losers block on the
-    * winner's future instead of racing build() against the same scratch
-    * dir (Scratch.fresh DELETES the target, so two interleaved builders
-    * would corrupt the artifact the map then points at). */
+  /** (applicationId, canonical dir, kind, fingerprint) → the single
+    * builder's promise. putIfAbsent elects exactly one builder per key;
+    * losers block on the winner's future instead of racing build()
+    * against the same scratch dir (Scratch.fresh DELETES the target, so
+    * two interleaved builders would corrupt the artifact the map then
+    * points at). */
   private val paths = scala.collection.concurrent.TrieMap[
-    (String, String, String), scala.concurrent.Promise[String]]()
+    (String, String, String, Seq[(String, Long, Long)]),
+    scala.concurrent.Promise[String]]()
+
+  /** Every file under `canon` (symlinks followed) with its size and
+    * mtime: a corpus rewritten in place gets a new key, so its memo is
+    * rebuilt instead of served from the previous content. */
+  private def fingerprint(canon: String): Seq[(String, Long, Long)] =
+    Using.resource(Files.walk(Paths.get(canon), FileVisitOption.FOLLOW_LINKS)) {
+      _.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+        (f.toString, a.size, a.lastModifiedTime.toMillis)
+      }.toSeq.sortBy(_._1)
+    }
 
   def path(s: SparkSession, dir: String, kind: String)
           (build: String => Unit): String = {
@@ -34,7 +51,7 @@ private[graft] object ArtifactMemo {
     // dir's artifact while its TrieMap entry still points there —
     // silently cross-wiring their results
     val tag = canon.replaceAll("[^A-Za-z0-9]", "_")
-    val key = (s.sparkContext.applicationId, canon, kind)
+    val key = (s.sparkContext.applicationId, canon, kind, fingerprint(canon))
     val mine = scala.concurrent.Promise[String]()
     paths.putIfAbsent(key, mine) match {
       case Some(winner) =>
@@ -83,7 +100,7 @@ private[graft] object ArtifactMemo {
   def invalidate(dir: String): Int = {
     val canon = new java.io.File(dir).getCanonicalPath
     val done = paths.toSeq.collect {
-      case (k @ (_, `canon`, _), p) if p.isCompleted => (k, p)
+      case (k @ (_, `canon`, _, _), p) if p.isCompleted => (k, p)
     }
     done.foreach { case (k, p) => paths.remove(k, p) }
     done.size
@@ -97,6 +114,6 @@ private[graft] object ArtifactMemo {
     * pays to rebuild is attributable in the artifact. */
   def entryCount(dir: String): Int = {
     val canon = new java.io.File(dir).getCanonicalPath
-    paths.count { case ((_, d, _), p) => d == canon && p.isCompleted }
+    paths.count { case ((_, d, _, _), p) => d == canon && p.isCompleted }
   }
 }

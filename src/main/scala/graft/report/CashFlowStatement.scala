@@ -63,12 +63,7 @@ object CashFlowStatement {
   /** Section totals (all layout ids, rolled up) plus the per-account
     * leaf rows per section. */
   final case class Result(sections: Map[String, Double],
-                          perAccount: Seq[(String, String, Double)]) {
-    /** closing − opening − net increase (:663-685). */
-    def unexplainedDifference: Double =
-      sections("closing_balance") - sections("opening_balance") -
-        sections("net_increase")
-  }
+                          perAccount: Seq[(String, String, Double)])
 
   /** Every line of the reconciled moves, grouped per (move, account,
     * atype, tag) — pruned to the reconciled moves BEFORE the groupBy

@@ -4,24 +4,15 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Pins the ArtifactMemo single-builder election (ADVICE r5 medium: the
   * old getOrElseUpdate evaluated build() outside any lock, so two racing
   * first-callers could interleave Scratch.fresh's delete with the other's
   * write against the SAME deterministic dir). In package graft.queries —
   * the memo is private[queries] by design. */
-class ArtifactMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ArtifactMemoSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -66,5 +57,24 @@ class ArtifactMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(Files.exists(Paths.get(p, "artifact.txt")),
       "the retry after a failed build must run and publish")
+  }
+
+  test("a corpus rewritten in place is rebuilt, never served its stale memo") {
+    val s = spark; import s.implicits._
+    val corpus = Files.createTempDirectory(Paths.get("target"), "memostale").toString
+    def write(n: Int): Unit =
+      (1 to n).toDF("id").write.mode("overwrite").parquet(s"$corpus/documents.parquet")
+    var builds = 0
+    // the artifact records the row count of the corpus it was built from
+    def consume(): Long = s.read.parquet(ArtifactMemo.path(s, corpus, "spec_stale") { out =>
+      builds += 1
+      s.read.parquet(s"$corpus/documents.parquet").groupBy().count()
+        .write.parquet(s"$out/n")
+    } + "/n").head().getLong(0)
+    write(3)
+    assert(consume() == 3 && consume() == 3 && builds == 1)
+    write(5) // same dir, same kind, new content
+    assert(consume() == 5, "the memo built from the old corpus was served")
+    assert(builds == 2)
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Co-located joins via bucketing (build brief: "repartition()/bucketing
@@ -11,20 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * lets the sort-merge join read buckets directly — NO shuffle exchange on
   * either side. At 100 TB this is the difference between re-shuffling the
   * fact table per join and a scan-local join. */
-class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val warehouse =
-    Files.createTempDirectory("graft_warehouse").toFile.getPath
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BucketingSpec extends AnyFunSuite with SparkSpec {
 
   test("join of two tables bucketed on the key runs with zero shuffles") {
     val s = spark; import s.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-wide no-lingering-cache sweep (r11, VERDICT r10 next-list #4,
@@ -28,16 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.conf.getAll` (explicit settings only) exactly as it found it,
   * so a key the gate set for its own body is unset again afterwards, not
   * pinned to Spark's default. */
-class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CacheHygieneSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.FifoValuation
 import graft.report.Handlers
@@ -30,16 +29,7 @@ import graft.report.Handlers
   *    -33.35 = -66.67 - 100.00 + 4x33.33 cell in the 2016 one);
   *  - '' cells are blank-rendered zeros, transcribed as 0.0.
   */
-class GoldenAgedReceivableSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenAgedReceivableSpec extends AnyFunSuite with SparkSpec {
 
   private val bounds = Seq(0, 30, 60, 90, 120)
 

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden values transcribed from the REFERENCE'S OWN analytic-report
@@ -17,16 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the analytic FILTER gates which groupby columns show values, while
   *    the report total column stays unfiltered; without groupby the
   *    single column is the filtered total. */
-class GoldenAnalyticSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenAnalyticSpec extends AnyFunSuite with SparkSpec {
 
   // plans: child is a sub-plan of parent (:19-40); accounts 1 and 2 on
   // the parent plan, account 3 on the child plan

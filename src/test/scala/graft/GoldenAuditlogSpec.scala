@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.ChangelogDiff
 import graft.cdc.ChangelogDiff.AuditRule
@@ -19,16 +18,7 @@ import graft.cdc.ChangelogDiff.AuditRule
   * interception model's own artifact and out of scope per the
   * [[ChangelogDiff]] scaladoc.
   */
-class GoldenAuditlogSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenAuditlogSpec extends AnyFunSuite with SparkSpec {
 
   /** The AuditLogRuleTestForPartnerModel fixture (:400-512): partner 1
     * created by the plain user, partner 2 by the EXCLUDED user; the rule

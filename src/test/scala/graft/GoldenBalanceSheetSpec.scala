@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{DateScope, Domain, ReportRunner => RR}
 
@@ -26,16 +25,7 @@ import graft.engine.{DateScope, Domain, ReportRunner => RR}
   *    account cartesian with forced domains per column.
   *
   * Company 2 converts at rate 2.0; '' cells are 0.0. */
-class GoldenBalanceSheetSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenBalanceSheetSpec extends AnyFunSuite with SparkSpec {
 
   // ---- fixture (test_financial_report.py:81-122) ----------------------
   // (account code, account type, partner, company, date, debit, credit)

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.TaxTags
 import graft.report.{CashBasis, GenericTaxReport}
@@ -15,16 +14,7 @@ import graft.report.{CashBasis, GenericTaxReport}
   * (:1148-1234) through [[GenericTaxReport]], and the always-exigible
   * misc move (:1479-1561).
   */
-class GoldenCashBasisSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenCashBasisSpec extends AnyFunSuite with SparkSpec {
 
   private def r2(v: Double): Double = math.floor(v * 100 + 0.5) / 100
 

@@ -1,8 +1,7 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.report.CashFlowStatement
 
@@ -22,16 +21,7 @@ import graft.report.CashFlowStatement
   * Fixtures mirror the reference's moves line by line, with partials
   * enumerated the way Odoo's FIFO reconciliation produces them (amount,
   * debit line, credit line, max date). '' cells are 0.0. */
-class GoldenCashFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenCashFlowSpec extends AnyFunSuite with SparkSpec {
 
   /** (line_id, move_id, account, atype, tag, date, balance). */
   private def linesDF(rows: Seq[(Long, Long, String, String, String, String, Double)]): DataFrame = {

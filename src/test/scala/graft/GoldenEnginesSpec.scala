@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{AccountCodes, AggregationEvaluator, DateScope, Domain, TaxTags, ReportRunner => RR}
 
@@ -16,16 +15,7 @@ import graft.engine.{AccountCodes, AggregationEvaluator, DateScope, Domain, TaxT
   * Every '' cell is a blank-rendered zero (transcribed 0.0), and
   * displayed values go through the reference's 2-decimal currency
   * formatting, matched here by rounding to cents. */
-class GoldenEnginesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenEnginesSpec extends AnyFunSuite with SparkSpec {
 
   private def r2(v: Double): Double = math.floor(v * 100 + 0.5) / 100
   private val day2020 = (LocalDate.of(2020, 1, 1), LocalDate.of(2020, 1, 1))

@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{ColumnGroupPlanner, DateScope}
 import graft.report.Handlers
@@ -29,16 +28,7 @@ import graft.report.Handlers
   *    Profits/Losses" (A18). Balance-sheet accounts keep their history
   *    on their own line.
   */
-class GoldenGeneralLedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenGeneralLedgerSpec extends AnyFunSuite with SparkSpec {
 
   private val accountNames = Map(
     "121000" -> "Account Receivable", "211000" -> "Account Payable",

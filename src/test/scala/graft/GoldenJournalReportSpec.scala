@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.report.Handlers
 
@@ -16,16 +15,7 @@ import graft.report.Handlers
   * and the month-grouping section totals. Display plumbing (tax grids,
   * payment-reference naming) is out of engine scope per SURVEY §2.1;
   * the numbers here are the semantics. */
-class GoldenJournalReportSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenJournalReportSpec extends AnyFunSuite with SparkSpec {
 
   /** Bank-journal lines: (move, date, counterpart account, amount into
     * the bank account, amount_currency or null). */

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.TaxCompute.TaxDef
 import graft.report.LineTotals
@@ -15,16 +13,7 @@ import graft.report.LineTotals
   * hand-walked through the reference code path (the reference ships no
   * test for this model file; the walk is cited per line).
   */
-class GoldenLineTotalsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenLineTotalsSpec extends AnyFunSuite with SparkSpec {
 
   private val t20 = Seq(TaxDef(1, "t20", "percent", 20.0))
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.report.LoadMore
 
@@ -14,16 +12,7 @@ import graft.report.LoadMore
   * 2000 → 5000 │ 9000 → 14000 │ 20000 through the load-more progress,
   * and only the first two pages carry a 'Load more…' row.
   */
-class GoldenLoadMoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenLoadMoreSpec extends AnyFunSuite with SparkSpec {
 
   test("unfolded 400000 pages 2+2+1 with the balance threaded (reference :311-362)") {
     val s = spark; import s.implicits._

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.report.Handlers
 
@@ -22,16 +21,7 @@ import graft.report.Handlers
   * produce (e.g. receivable_line_1, posted 2000 Gol / 800 USD and paid
   * 1300 Gol / 400 USD, leaves 700 Gol / 280 USD — proportional on the
   * currency side, :89-114). */
-class GoldenMulticurrencyRevalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenMulticurrencyRevalSpec extends AnyFunSuite with SparkSpec {
 
   private def r2(v: Double): Double = math.floor(v * 100 + 0.5) / 100
 

@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{ColumnGroupPlanner, DateScope}
 
@@ -23,16 +22,7 @@ import graft.engine.{ColumnGroupPlanner, DateScope}
   *    test_partner_ledger_unknown_partner:242-361 walks all four
   *    windows);
   *  - company 2 converts at the report rate 2.0; '' cells are 0.0. */
-class GoldenPartnerLedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenPartnerLedgerSpec extends AnyFunSuite with SparkSpec {
 
   /** setUpClass lines (:29-87): (partner, account type, company, date,
     * debit, credit). */

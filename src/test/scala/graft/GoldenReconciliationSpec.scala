@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.report.Handlers
 
@@ -25,16 +24,7 @@ import graft.report.Handlers
   * Sublines here render in (date, label) order; the reference's first
   * matrix lists them in creation order, so its rows are transcribed
   * re-sorted with values untouched. */
-class GoldenReconciliationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenReconciliationSpec extends AnyFunSuite with SparkSpec {
 
   /** Statement lines: (move label, date, amount, reconciled). */
   private def statements(rows: Seq[(String, String, Double, Boolean)]): DataFrame = {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden matrix transcribed from the REFERENCE'S OWN EC sales report
@@ -11,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with an ELIGIBLE tax — percent-type with a zero rate; fixed-type and
   * nonzero-rate taxes are ignored — with the VAT number split into its
   * country prefix and number, and a grand total. */
-class GoldenSalesReportSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenSalesReportSpec extends AnyFunSuite with SparkSpec {
 
   test("eligible zero-percent taxes only, per partner with VAT split (reference :83-94)") {
     val s = spark; import s.implicits._

@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{AggregationEvaluator, DateScope, ReportRunner => RR}
 
@@ -30,16 +29,7 @@ import graft.engine.{AggregationEvaluator, DateScope, ReportRunner => RR}
   * the main company receives the unit-minus-sum difference as a
   * "Carryover adjustment for tax unit" value — the bound subformulas make
   * the unit value differ from the sum of the members'. */
-class GoldenTaxCarryoverSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenTaxCarryoverSpec extends AnyFunSuite with SparkSpec {
 
   private val Tag = "test_carryover.tag"
   private val Applied = "test_carryover._applied_carryover_balance"

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.TaxCompute
 import graft.engine.TaxCompute.{Repartition, TaxDef}
@@ -26,16 +24,7 @@ import graft.engine.TaxCompute.{Repartition, TaxDef}
   *  - negative bases compute on the absolute value and re-sign
   *    (:92-99, the caba negative-line fixture's −100/−20).
   */
-class GoldenTaxComputeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenTaxComputeSpec extends AnyFunSuite with SparkSpec {
 
   /** Evaluate a compiled chain on one (price_unit, quantity) row:
     * (total_excluded, total_included, line amounts in order). */

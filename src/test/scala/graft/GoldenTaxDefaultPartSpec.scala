@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.report.GenericTaxReport
 import graft.report.GenericTaxReport._
@@ -21,16 +20,7 @@ import graft.report.GenericTaxReport._
   * UI-side (domain construction for a click-through) and out of scope
   * per SURVEY §2.1.
   */
-class GoldenTaxDefaultPartSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenTaxDefaultPartSpec extends AnyFunSuite with SparkSpec {
 
   private val A1 = "400000"
   private val A2 = "400000.2"

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{AggregationEvaluator, TaxTags}
 
@@ -21,16 +19,7 @@ import graft.engine.{AggregationEvaluator, TaxTags}
   *  - the full refund books the same amounts against the minus
   *    expressions and zeroes every line (:794-819).
   */
-class GoldenTaxGridSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenTaxGridSpec extends AnyFunSuite with SparkSpec {
 
   private def r2(v: Double): Double = math.floor(v * 100 + 0.5) / 100
 

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.TaxTags
 import graft.report.VatClosing
@@ -30,16 +29,7 @@ import graft.report.VatClosing
   * (10 acct1 ∉closing, 60 acct1, −5 acct2); six domestic and six
   * foreign documents across 2020-12 … 2021-05.
   */
-class GoldenTaxReportSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenTaxReportSpec extends AnyFunSuite with SparkSpec {
 
   private def r2(v: Double): Double = math.floor(v * 100 + 0.5) / 100
 

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.TaxCompute.{Params, TaxDef}
 import graft.report.TaxTotals
@@ -18,16 +17,7 @@ import graft.report.TaxTotals.{GroupDef, GroupTotal, Subtotal}
   * rounding (dp_dic :443-449), untaxed-line contributions (:342-349),
   * the display_tax_base rule (:519-520), and the rejection of the broken
   * early-pay 'excluded' branch (:307-324). */
-class GoldenTaxTotalsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
 
   /** (record, price_unit, quantity, discount, has_taxes) */
   private def linesDf(rows: Seq[(Long, Double, Double, Double, Boolean)]): DataFrame = {

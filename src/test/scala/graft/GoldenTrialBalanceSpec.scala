@@ -1,9 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{ColumnGroupPlanner, DateScope}
 import graft.report.{Handlers, LineTree}
@@ -27,16 +26,7 @@ import graft.report.{Handlers, LineTree}
   *
   * Fixture conventions as in [[GoldenGeneralLedgerSpec]]: company 2
   * converts at the report rate 2.0; '' cells are 0.0. */
-class GoldenTrialBalanceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GoldenTrialBalanceSpec extends AnyFunSuite with SparkSpec {
 
   private val names = Map(
     "121000" -> "Account Receivable", "211000" -> "Account Payable",

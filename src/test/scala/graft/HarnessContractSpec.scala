@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r7 harness contracts (VERDICT r6 "what's wrong" #3/#4 + next
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a message naming the column, Verify writes a RED row (never an absent
   * one) for a query that throws, and Bench records a failed query as
   * FAILED with no timing sample instead of timing the crash. */
-class HarnessContractSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HarnessContractSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -219,6 +209,9 @@ class HarnessContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Bench setup ledger is consumer-gated and builds the real memos") {
+    // the memos are per application, which the whole suite shares: drop
+    // any an earlier spec built on this dir, so the builds below are real
+    graft.queries.ArtifactMemo.invalidate(sfDir)
     // no memo consumer selected -> no setup lines, no build jobs
     assert(Bench.measureSetup(spark, sfDir, Set("q1_agg", "q80_traceability"))
       .isEmpty)
@@ -268,14 +261,20 @@ class HarnessContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mains.sorted == Seq("Bench", "Explain", "ScaleStress", "Verify"))
   }
 
+  /** Comment-stripped source of every .scala file under `dir`, keyed by
+    * its path relative to `dir`. */
+  private def sources(dir: String): Seq[(String, String)] = {
+    val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val root = Paths.get(dir)
+    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).map { f =>
+      root.relativize(f).toString ->
+        Comment.replaceAllIn(new String(Files.readAllBytes(f), "UTF-8"), "")
+    }.toSeq
+  }
+
   test("the portable hash weight and the ASCII test live only in the text-kernel core") {
     // a second copy of either is a twin loop that can drift from the core
-    val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
-    val code = Files.list(Paths.get("src/main/scala/graft/functions")).iterator()
-      .asScala.filter(_.toString.endsWith(".scala")).map { f =>
-        f.getFileName.toString ->
-          Comment.replaceAllIn(new String(Files.readAllBytes(f), "UTF-8"), "")
-      }.toSeq
+    val code = sources("src/main/scala/graft/functions")
     for (p <- Seq("""1103515245""".r, """getByte\([^)]*\)\s*<\s*0""".r))
       assert(code.collect { case (f, src) if p.findFirstIn(src).nonEmpty => f } ==
         Seq("TextKernel.scala"), s"/$p/")
@@ -285,17 +284,22 @@ class HarnessContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a hand-written save/set/restore drifts: restoring what conf.get
     // reported pins a never-set key to Spark's default. The one permanent
     // set left is Tables.events' nanos-as-long for TIMESTAMP(NANOS) scans.
-    val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
-    val root = Paths.get("src/main/scala")
-    val code = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).map { f =>
-        root.relativize(f).toString ->
-          Comment.replaceAllIn(new String(Files.readAllBytes(f), "UTF-8"), "")
-      }.toSeq
+    val code = sources("src/main/scala")
     def sites(call: String) = code.map { case (f, src) =>
       f -> scala.util.matching.Regex.quote(call).r.findAllIn(src).size }
       .filter(_._2 > 0).toMap
     assert(sites("conf.unset(").keySet == Set("graft/SessionConf.scala"))
     assert(sites("conf.set(") - "graft/SessionConf.scala" == Map("graft/Tables.scala" -> 1))
+  }
+
+  test("a session is built only by SessionConf.localSession") {
+    // which local session the engine and its tests run in is one decision;
+    // a second builder chain drifts from it key by key. The test root
+    // (SparkSpec) is built by the same helper, so src/test has none.
+    val Builder = """SparkSession\s*\.\s*builder""".r
+    def sites(dir: String) = sources(dir).map { case (f, src) =>
+      f -> Builder.findAllIn(src).size }.filter(_._2 > 0).toMap
+    assert(sites("src/main/scala") == Map("graft/SessionConf.scala" -> 1))
+    assert(sites("src/test/scala").isEmpty)
   }
 }

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bit-parity guards for the native kernels against their declarative
   * Column formulations — a kernel change that drifts from the composed
   * form would silently alter gate results, so the equivalence itself is
   * pinned here on randomized inputs. */
-class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KernelParitySpec extends AnyFunSuite with SparkSpec {
 
   // deterministic pseudo-random ASCII corpus: words of 1-7 chars, 0-60
   // words per doc, plus crafted edge cases (empty words via double spaces,
@@ -167,9 +157,6 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(reference.nonEmpty, "fixture must exercise the pair path")
   }
 
-  private def withCodegenOff[A](f: => A): A = SessionConf.scoped(spark,
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")(f)
-
   test("pair emitter = index self-join: identical pair-row multiset (r19)") {
     // the posting-list kernel replaced the shN ⋈ shN self-join inside
     // jaccardPairsBuild; this pins the EMITTED pair rows (pre-aggregation,
@@ -205,7 +192,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect())
     assert(viaJoin.nonEmpty, "fixture must exercise the pair path")
     assert(viaKernel() == viaJoin)
-    withCodegenOff { assert(viaKernel() == viaJoin) }
+    withCodegen(false) { assert(viaKernel() == viaJoin) }
   }
 
   test("pair emitter unit semantics: ordering, bound boundary, degenerate lists") {
@@ -263,7 +250,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(Long, Seq[Long])].collect().toMap
     assert(reference.nonEmpty)
     assert(kernel() == reference)
-    withCodegenOff { assert(kernel() == reference) }
+    withCodegen(false) { assert(kernel() == reference) }
     // <3-word docs exercised and absent in both forms
     val short = docs.filter(size(split(col("text"), " ")) < 3)
       .select(col("doc_id")).as[Long].collect()
@@ -291,7 +278,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (d, b, c) => (d, b) -> c }.toMap
     assert(reference.nonEmpty)
     assert(kernel() == reference)
-    withCodegenOff { assert(kernel() == reference) }
+    withCodegen(false) { assert(kernel() == reference) }
   }
 
   test("simhash16 kernel is bit-identical to the exploded formulation") {
@@ -325,7 +312,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(Long, Long)].collect().toMap
     assert(reference.nonEmpty)
     assert(kernel() == reference)
-    withCodegenOff { assert(kernel() == reference) }
+    withCodegen(false) { assert(kernel() == reference) }
     // the no-word documents really are exercised and really are absent
     val noWord = docs.filter(trim(col("text")) === "")
       .select(col("doc_id")).as[Long].collect()

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.PortableNgramHash
 
@@ -11,16 +9,7 @@ import graft.functions.PortableNgramHash
   * replaces — the MinHash signatures and DSIR buckets are FUNCTIONS of
   * these hash values, so the oracle replays them; any divergence is a
   * wrong answer, not a performance note. */
-class NgramHashParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NgramHashParitySpec extends AnyFunSuite with SparkSpec {
 
   /** Compare against the composed reference: all n-grams of
     * split(text, " ") joined with one space, hashed with Parity.strHash —

@@ -1,24 +1,13 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{AsOfJoin, DupClusters, RangeJoin}
 
 /** Edge-case specs for the standalone operators (gate queries cover the
   * happy paths against DuckDB; these pin the corners). */
-class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class OperatorsSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(sec: Int): Timestamp = new Timestamp(1700000000000L + sec * 1000L)
 

@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipelines.TrainingDataPipeline
 import graft.registers.Registers
 
 /** Unit specs for the composed curation pipeline and register pivot. */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineSpec extends AnyFunSuite with SparkSpec {
 
   test("curation: quality gate, exact dups, cluster reps, stats") {
     val s = spark; import s.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guards: the properties that make these queries
@@ -9,18 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * loops), invisible to result-correctness gates — a refactor could keep
   * every oracle green while silently degrading q3 to a shuffle join or
   * q58 to a BNLJ. These specs pin the executed plan text at sf0.001. */
-class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanAuditSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def plan(q: String): String =
     Queries.all(q)(spark, sf).queryExecution.executedPlan.toString

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.report.{CashBasis, GenericTaxReport, LoadMore, VatClosing}
 
@@ -20,16 +18,7 @@ import graft.report.{CashBasis, GenericTaxReport, LoadMore, VatClosing}
   *    amounts, and with no partials only the immediate slice survives.
   *
   * Deterministic seeds (no wall-clock randomness — resume-safe). */
-class ReportInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ReportInvariantsSpec extends AnyFunSuite with SparkSpec {
 
   test("every VAT closing move balances per fiscal position (seeded random fixtures)") {
     val s = spark; import s.implicits._

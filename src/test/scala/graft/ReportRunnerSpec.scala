@@ -1,9 +1,7 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine._
 
@@ -11,16 +9,7 @@ import graft.engine._
   * (account_reports/tests/common.py assertLinesValues): a tiny journal,
   * expressions across four engines, two comparison periods → expected
   * value matrix. */
-class ReportRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ReportRunnerSpec extends AnyFunSuite with SparkSpec {
 
   private def fixture = {
     val s = spark; import s.implicits._

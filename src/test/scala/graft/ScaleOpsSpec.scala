@@ -1,24 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.SkewJoin
 import graft.sinks.PartitionedSink
 
 /** Scale utilities: salted skew join equivalence, partitioned retention. */
-class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("salted join returns exactly the rows of the plain join") {
     val s = spark; import s.implicits._

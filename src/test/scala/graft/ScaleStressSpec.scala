@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the honest-scaling construction behind SCALE_STRESS_r07.json:
   * the ×f corpus must behave as f INDEPENDENT corpora at the 3-shingle
   * level, or the measured exponents would be an artifact of replicated
   * text inflating pair mass quadratically. */
-class ScaleStressSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ScaleStressSpec extends AnyFunSuite with SparkSpec {
 
   // the ScaleStress mangle, inlined for a 3-copy corpus over tiny docs
   private def mangled(i: Int) = {

@@ -1,26 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Behavior contracts of the data-SELECTION operators
   * ([[graft.queries.SelectionOps]]) that the DuckDB parity gates cannot
   * express: the Bloom screen's one-sided error, the DSIR selection's
   * shard-budget invariant, and the plan shapes that carry both to 100 TB. */
-class SelectionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SelectionOpsSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.01"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("bloom screen has NO false negatives and really bites") {
     val r = queries.SelectionOps.q144(spark, sf)

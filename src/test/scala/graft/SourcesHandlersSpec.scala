@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{BranchContext, ExternalValues}
 import graft.report.Handlers
@@ -13,16 +11,7 @@ import graft.sources.CsvSource
 
 /** Specs for the source/security/external-value layers and the composed
   * report handlers. */
-class SourcesHandlersSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SourcesHandlersSpec extends AnyFunSuite with SparkSpec {
 
   test("csv ingestion: schema-enforced read splits valid and corrupt rows") {
     val dir = Files.createTempDirectory("graft_csv").toFile

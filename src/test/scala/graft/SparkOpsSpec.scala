@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{AccountCodes, ColumnGroupPlanner, Domain}
 import graft.cdc.ChangelogDiff
@@ -10,16 +8,7 @@ import graft.cdc.ChangelogDiff
 /** Spark-backed specs for the engine operators on tiny fixture frames
   * (golden-matrix style, mirroring the reference's
   * account_reports/tests/common.py assertLinesValues pattern). */
-class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SparkOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("portable strHash column equals the documented pure formula") {
     val s = spark; import s.implicits._
@@ -183,5 +172,6 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mk = all.filter(col("op") === "unlink").collect()
     assert(mk.length == 1 && mk(0).getAs[Long]("res_id") == 3L)
     assert(all.filter(col("op") =!= "unlink").count() == 0)
+    lines.unpersist(): Unit
   }
 }

@@ -1,9 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.EventsStream
 import graft.streaming.EventsStream.{Event, SessionOut}
@@ -13,16 +11,7 @@ import graft.multimodal.Multimodal.{MediaMeta, MediaRow}
 /** Streaming + multimodal plumbing specs: incremental window aggregation
   * via MemoryStream, keyed state via mapGroupsWithState, and the
   * batch-shaped media feature extraction with the stub codec. */
-class StreamingMultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingMultimodalSpec extends AnyFunSuite with SparkSpec {
 
   /** Keyed-state queries below run on the RocksDB state store provider. */
   private def withRocksDb[A](f: => A): A = SessionConf.scoped(spark,

@@ -1,13 +1,12 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.util.Pretty
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions._
 
@@ -17,15 +16,7 @@ import graft.functions._
   * pairs, mixed ASCII/non-ASCII, runs of spaces, leading and trailing
   * spaces, tabs, empty strings, fewer words than the n-gram width), on the
   * whole-stage codegen path and on the interpreted (`NO_CODEGEN`) path. */
-class TextKernelPropsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TextKernelPropsSpec extends AnyFunSuite with SparkSpec {
 
   // ---- the model --------------------------------------------------------
 
@@ -187,14 +178,9 @@ class TextKernelPropsSpec extends AnyFunSuite with BeforeAndAfterAll {
         }.mkString("\n")
     }
 
-  private def withEvalPath[A](codegen: Boolean)(f: => A): A =
-    if (codegen) f
-    else SessionConf.scoped(spark, "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
-      "spark.sql.codegen.wholeStage" -> "false")(f)
-
   for ((name, kernel, model) <- kernels; codegen <- Seq(true, false)) {
     test(s"$name equals its plain-Scala model (${if (codegen) "codegen" else "NO_CODEGEN"})") {
-      withEvalPath(codegen) {
+      withCodegen(codegen) {
         val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(25),
           prop(kernel, model, codegen))
         assert(r.passed, Pretty.pretty(r, Pretty.Params(1)))

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorD2
 
@@ -11,19 +9,7 @@ import graft.functions.VectorD2
   * (the k-means / PQ / coreset distance), in both the interpreted and
   * whole-stage-codegen paths, for float and double element types on
   * either side. */
-class VectorD2Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
-
-  private def withCodegenOff[A](f: => A): A = SessionConf.scoped(spark,
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")(f)
+class VectorD2Spec extends AnyFunSuite with SparkSpec {
 
   private def fixture = {
     val s = spark; import s.implicits._
@@ -52,7 +38,7 @@ class VectorD2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("vector_d2(float, double) == aggregate(zip_with) interpreted") {
     val s = spark; import s.implicits._
-    withCodegenOff {
+    withCodegen(false) {
       val out = fixture
         .select(VectorD2.d2(col("a"), col("b")).as("fast"), composed.as("slow"))
         .as[(Double, Double)].collect()
@@ -99,7 +85,7 @@ class VectorD2Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
     checkThrows(VectorD2.d2(col("a"), col("b")))
     checkThrows(graft.functions.VectorDot.dot(col("a"), col("b")))
-    withCodegenOff {
+    withCodegen(false) {
       checkThrows(VectorD2.d2(col("a"), col("b")))
       checkThrows(graft.functions.VectorDot.dot(col("a"), col("b")))
     }
@@ -115,7 +101,7 @@ class VectorD2Spec extends AnyFunSuite with BeforeAndAfterAll {
       viaCast.as("slow"))
     val out = both.as[(Double, Double)].collect()
     assert(out.forall { case (f, sl) => f == sl })
-    withCodegenOff {
+    withCodegen(false) {
       val out2 = both.as[(Double, Double)].collect()
       assert(out2.forall { case (f, sl) => f == sl })
     }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{GraftExtensions, VectorDot}
 
@@ -10,16 +8,7 @@ import graft.functions.{GraftExtensions, VectorDot}
   * composed aggregate(zip_with(cast, cast)) form it replaces, in both the
   * interpreted and whole-stage-codegen paths, and from SQL via the
   * extension registration. */
-class VectorDotSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class VectorDotSpec extends AnyFunSuite with SparkSpec {
 
   private def fixture = {
     val s = spark; import s.implicits._
@@ -45,7 +34,7 @@ class VectorDotSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("vector_dot == aggregate(zip_with) in interpreted path") {
     val s = spark; import s.implicits._
-    withCodegenOff {
+    withCodegen(false) {
       val out = fixture
         .select(VectorDot.dot(col("a"), col("b")).as("fast"), composed.as("slow"))
         .as[(Double, Double)].collect()
@@ -78,7 +67,7 @@ class VectorDotSpec extends AnyFunSuite with BeforeAndAfterAll {
     val eCodegen = intercept[Exception](
       df.select(VectorDot.dot(col("a"), col("b"))).collect())
     assert(msgs(eCodegen).exists(_.contains("null element")))
-    withCodegenOff {
+    withCodegen(false) {
       val eInterp = intercept[Exception](
         df.select(VectorDot.dot(col("a"), col("b"))).collect())
       assert(msgs(eInterp).exists(_.contains("null element")))
@@ -120,7 +109,4 @@ class VectorDotSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT g, top_k_by_score(score, id, 2) t FROM topk_in GROUP BY g").count()
     assert(n == 7)
   }
-
-  private def withCodegenOff[T](body: => T): T = SessionConf.scoped(spark,
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")(body)
 }

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.AuditRender
 import graft.registers.{DocumentSummary, StockRegisters}
@@ -11,16 +9,7 @@ import graft.sources.StatementImport
 
 /** Specs for the round-4 wizard registers: document summary, stock serial /
   * reconcile registers, bank-statement import, auditlog value rendering. */
-class WizardRegistersSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class WizardRegistersSpec extends AnyFunSuite with SparkSpec {
 
   test("document summary: serial range, counts, debit-note column swap, " +
     "empty section pinned with zero counts") {
