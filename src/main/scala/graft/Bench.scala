@@ -296,10 +296,8 @@ object Bench {
     // shuffle/spill to tmpfs when headroom allows ([[Scratch.benchLocalDir]]
     // — the r8 q62 driver/builder gap was local-dir exposure to co-tenant
     // disk pressure); SPARK_GRAFT_LOCAL_TMPFS=0 is the A/B switch
-    val s = SessionConf.localSession(cpus,
+    SessionConf.localSession(cpus,
       Scratch.benchLocalDir().map("spark.local.dir" -> _).toSeq: _*)
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   /** One full timed pass over `suite`. A query that throws yields a

@@ -34,7 +34,7 @@ import org.apache.spark.sql.execution.QueryExecution
   * the ScaleStress ×100 sweeps) to everything upstream of a pin — a
   * cartesian hidden behind a pin boundary must still be an offender. Every
   * pin therefore records its upstream [[QueryExecution]] when an audit is
-  * collecting ([[collecting]]), and [[PlanAudit.sweep]] audits those
+  * collecting ([[collecting]]), and [[PlanAudit.audit]] audits those
   * upstream plans alongside the gate's own. */
 object FramePin {
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 
 /** Shared plan-shape audit: the three corpus-scale killers, checkable on
@@ -12,13 +12,14 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
   *   3. a Window whose spec opens with an ordering (no partition keys) —
   *      the whole input sorts on ONE task.
   *
-  * Two consumers, deliberately the same code ([[graft.PlanAuditSpec]]
-  * pins shapes at sf0.001 on every `sbt test`; [[ScaleStress]] re-runs
-  * the sweep against its ×10/×30 synthetic dirs, where AQE and
-  * size-based planning could legitimately switch join strategies — the
-  * r7 VERDICT's point that gate-scale pins don't prove scaled-input
-  * plans). A divergence between tiers shows up as a sweep offender in
-  * `SCALE_STRESS` instead of staying invisible until a cluster run.
+  * Two consumers, deliberately the same code ([[graft.CacheHygieneSpec]]'s
+  * one registry loop [[audit]]s every gate at sf0.001 on every `sbt test`;
+  * [[ScaleStress]] re-runs the [[sweep]] against its ×10/×30 synthetic
+  * dirs, where AQE and size-based planning could legitimately switch join
+  * strategies — the r7 VERDICT's point that gate-scale pins don't prove
+  * scaled-input plans). A divergence between tiers shows up as a sweep
+  * offender in `SCALE_STRESS` instead of staying invisible until a
+  * cluster run.
   */
 object PlanAudit {
 
@@ -91,22 +92,35 @@ object PlanAudit {
     ).flatten
   }
 
-  /** Plans every named gate at `dir` and returns "name: offense, …" lines
-    * (empty = all clean). Construction-time side effects (memo builds,
-    * bounded fixture writes — Queries.scala contract) run for real, so
-    * callers at scaled dirs should sweep AFTER the heavy memos exist.
-    *
-    * Audits the gate's own plan AND every [[FramePin]]-pinned upstream
-    * plan its construction created (r11): a frame-scoped pin truncates the
-    * visible plan at a `Scan ExistingRDD` leaf, so without the collection
-    * a cartesian (or any killer) upstream of a pin would vanish from the
-    * sweep — the pin must never be a place to hide a bad plan. */
+  /** A frame built under [[FramePin.collecting]], with its own plan
+    * followed by every [[FramePin]]-pinned upstream plan its construction
+    * created (r11): a frame-scoped pin truncates the visible plan at a
+    * `Scan ExistingRDD` leaf, so without the collection a cartesian (or
+    * any killer) upstream of a pin would vanish from the audit — the pin
+    * must never be a place to hide a bad plan. */
+  def planned(build: => DataFrame): (DataFrame, Seq[QueryExecution]) = {
+    val (df, pinned) = FramePin.collecting(build)
+    (df, df.queryExecution +: pinned)
+  }
+
+  /** Builds gate `name` once and returns its frame, unexecuted, with the
+    * killer list over all of its [[planned]] plans (empty = clean). The
+    * list is read before the caller runs the frame, so it judges the
+    * plans as planned, not as AQE re-planned them. Construction-time side
+    * effects (memo builds, bounded fixture writes — Queries.scala
+    * contract) run for real. */
+  def audit(name: String)(build: => DataFrame): (DataFrame, Seq[String]) = {
+    val (df, plans) = planned(build)
+    (df, plans.flatMap(qe => offenses(name, qe)).distinct)
+  }
+
+  /** [[audit]]s every named gate at `dir` and returns "name: offense, …"
+    * lines (empty = all clean). Callers at scaled dirs should sweep AFTER
+    * the heavy memos exist. */
   def sweep(spark: SparkSession, dir: String,
       names: Iterable[String] = Queries.all.keys): Seq[String] =
     names.toSeq.sorted.flatMap { name =>
-      val (df, pinned) = FramePin.collecting(Queries.all(name)(spark, dir))
-      val bad = (df.queryExecution +: pinned)
-        .flatMap(qe => offenses(name, qe)).distinct
+      val bad = audit(name)(Queries.all(name)(spark, dir))._2
       if (bad.isEmpty) None else Some(s"$name: ${bad.mkString(", ")}")
     }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -415,7 +415,6 @@ object ScaleStress {
       .split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SessionConf.localSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     val rows = scala.collection.mutable.ArrayBuffer.empty[String]
     // structured mirror of the timed rows, for the transient-resample
     // pass below: (gate, family, factor, sec); meta keeps each

@@ -10,12 +10,15 @@ object SessionConf {
 
   /** The local session the harness mains and the test suite run in:
     * `local[cpus]` with as many shuffle partitions, UTC, no UI, plus
-    * `extra` settings on top. */
-  def localSession(cpus: String, extra: (String, String)*): SparkSession =
-    SparkSession.builder().master(s"local[$cpus]")
+    * `extra` settings on top. Spark logs at WARN from here on. */
+  def localSession(cpus: String, extra: (String, String)*): SparkSession = {
+    val s = SparkSession.builder().master(s"local[$cpus]")
       .config(Map("spark.sql.shuffle.partitions" -> cpus,
         "spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false") ++ extra)
       .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Run `body` with `settings` applied to `s`, then restore every touched
     * key, also when `body` throws. The prior values come from

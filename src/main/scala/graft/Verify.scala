@@ -54,7 +54,6 @@ object Verify {
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SessionConf.localSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     // Schema-contract preflight: on drift, ONE message names the drifted
     // column(s) up front — then still run the suite, so every gate gets
     // its red row instead of the round dying with nothing written.

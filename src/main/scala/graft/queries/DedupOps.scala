@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -22,32 +21,6 @@ import graft.Tables
   */
 object DedupOps {
 
-  /** Word-level 3-shingles per doc, WITH positional duplicates — callers
-    * that need distinct sets dedup AFTER hashing so the dedup shuffle
-    * carries 8-byte keys, not shingle strings. */
-  private def shingles3Raw(docs: DataFrame): DataFrame = {
-    // Bind the split result to an attribute BEFORE the shingle lambda:
-    // referencing `split(text)` directly inside the transform() lambda
-    // inlines the split expression per element (no CSE across a HOF
-    // boundary), re-tokenizing the document once per shingle — O(words²)
-    // per doc. With the array projected first, the lambda is three O(1)
-    // element_at lookups.
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("__w"))
-      .filter(size(col("__w")) >= 3)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(col("__w")) - lit(3)),
-          i => concat_ws(" ",
-            element_at(col("__w"), i + lit(1)),
-            element_at(col("__w"), i + lit(2)),
-            element_at(col("__w"), i + lit(3))))).as("s"))
-  }
-
-  /** Distinct 8-byte shingle hashes per doc (the Jaccard index unit),
-    * via the native single-pass [[graft.functions.ShingleHashExpr]] —
-    * one long[] per doc, no split/word/shingle array allocations. The
-    * hash values never surface (only pair counts do), so the kernel's
-    * FNV+mix combine is parity-safe. */
   /** (doc_id, shingle-hash) pairs, distinct per document. The dedup is
     * done INSIDE the scan by the native kernel (set semantics per row) —
     * no cluster-wide distinct() shuffle of the raw exploded shingles. */
@@ -301,10 +274,11 @@ object DedupOps {
   /** The q33 computation over any documents frame: MinHash band-candidate
     * pairs decorated with the estimated similarity, unordered. The wide
     * signature frame is consumed three times (banding + both sides of the
-    * estimate join), so the build caches it — the returned thunk releases
-    * it once the result is materialized. */
-  private def minhashBuild(docs: DataFrame): (DataFrame, () => Unit) = {
-    val sigArr = minhashSignatures(docs).cache()
+    * estimate join), so the build pins it with `pin` — the returned thunk
+    * releases a cache once the result is materialized. */
+  private def minhashBuild(docs: DataFrame,
+      pin: DataFrame => DataFrame): (DataFrame, () => Unit) = {
+    val sigArr = pin(minhashSignatures(docs))
     val bands = minhashBands(sigArr)
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
@@ -314,13 +288,17 @@ object DedupOps {
   }
 
   /** Lazy [[minhashBuild]] view — the frame plan audits pin (the gates
-    * themselves read the memoized artifact, a plain parquet scan). */
-  def minhashCandidates(docs: DataFrame): DataFrame = minhashBuild(docs)._1
+    * themselves read the memoized artifact, a plain parquet scan). It pins
+    * via localCheckpoint, like [[jaccardPairs]]: a lazy view has no
+    * release point, and a `cache()` would stay in the CacheManager for the
+    * session's lifetime. */
+  def minhashCandidates(docs: DataFrame): DataFrame =
+    minhashBuild(docs, graft.FramePin.pin)._1
 
   /** [[minhashBuild]] written to `out` as parquet, caches released —
     * [[PairMemo.minhashCandidates]] is the suite-level consumer. */
   def materializeMinhashCandidates(docs: DataFrame, out: String): Unit = {
-    val (est, release) = minhashBuild(docs)
+    val (est, release) = minhashBuild(docs, _.cache())
     est.write.mode("overwrite").parquet(out)
     release()
   }

@@ -311,8 +311,6 @@ object ReportOps {
     * replays every stage in SQL. Bounded Spark work runs at construction
     * (the statement's section totals collect driver-side — 17 rows). */
   def q170(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.FifoValuation
-    import graft.report.CashFlowStatement
     // STATIC PLAN for the statement (r19, VERDICT r18 next-list #1): the
     // statement's whole body computes over two BOUNDED fixture frames
     // (o_orderkey <= 600, ~2.4 k rows — the repartition(1) rationale

@@ -209,8 +209,8 @@ object TextOps {
     * map-side explode of in-row adjacent pairs (no window, no self-join)
     * into one count aggregation; top-k is a TakeOrdered, never a global
     * sort of the counts. The words array is projected to an attribute
-    * BEFORE the pair lambda (see DedupOps.shingles3Raw: a `split` inlined
-    * into a HOF lambda re-tokenizes per element — O(words²) per doc), and
+    * BEFORE the pair lambda (a `split` inlined into a HOF lambda
+    * re-tokenizes per element — O(words²) per doc), and
     * the adjacent pairing is zip_with(ws, tail(ws)) — one pass, no index
     * arithmetic (measured 8× over transform(sequence)+element_at). */
   def q134(s: SparkSession, d: String): DataFrame = {

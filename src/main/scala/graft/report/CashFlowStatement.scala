@@ -93,7 +93,6 @@ object CashFlowStatement {
   def compute(lines: DataFrame, partials: DataFrame,
               liquidityAccounts: Seq[String],
               from: LocalDate, to: LocalDate): Result = {
-    val spark = lines.sparkSession
     def ts(d: LocalDate) = lit(d.toString).cast("timestamp")
     val liq = col("account").isin(liquidityAccounts: _*)
     val inRange = col("d") >= ts(from) && col("d") <= ts(to)

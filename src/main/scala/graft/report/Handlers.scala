@@ -40,14 +40,6 @@ object Handlers {
           .otherwise(accountCol))
   }
 
-  /** Trial balance (account_trial_balance_report.py:83-150): the GL
-    * summary IS the trial balance — keys + initial/period/closing. */
-  object TrialBalance {
-    def compute(journal: DataFrame, dateCol: Column, accountCols: Seq[Column],
-                amount: Column, from: LocalDate, to: LocalDate): DataFrame =
-      GeneralLedger.accountSummary(journal, dateCol, accountCols, amount, from, to)
-  }
-
   /** Partner/journal ledger detail (SURVEY §2.6 W1/W2,
     * account_journal_report.py:109-237 `cumulate_balance`,
     * account_partner_ledger.py:347-409): per-key running balance over the

@@ -1,7 +1,6 @@
 package graft.report
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
 
 /** Load-more pagination of an unfolded report line's detail rows
   * (reference account_general_ledger.py:661-720

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-wide no-lingering-cache sweep (r11, VERDICT r10 next-list #4,
@@ -26,7 +26,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same loop sweeps the session's SQL conf: every gate must leave
   * `spark.conf.getAll` (explicit settings only) exactly as it found it,
   * so a key the gate set for its own body is unset again afterwards, not
-  * pinned to Spark's default. */
+  * pinned to Spark's default.
+  *
+  * And it is the suite's one plan audit of the registry: each gate is
+  * built once, through [[PlanAudit.audit]], which reads the three
+  * corpus-scale killers (a cartesian product, a non-scalar nested loop,
+  * a partition-less window) off the gate's plan and every pinned
+  * upstream plan before the frame runs. [[PlanAuditSpec]]'s per-gate
+  * pins cover the queries someone already suspected; this sweep catches
+  * the one nobody did. No other spec walks the registry (a
+  * `HarnessContractSpec` guard), so no gate is built twice per run. */
 class CacheHygieneSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -40,11 +49,19 @@ class CacheHygieneSpec extends AnyFunSuite with SparkSpec {
         s"$k: ${before.getOrElse(k, "<unset>")} -> ${after.getOrElse(k, "<unset>")}"
     }
 
+  /** Builds the gate once, reads its plan offenses, then runs it. Its own
+    * method, so the frame is unreachable when the sweep nudges the GC. */
+  private def auditAndCount(name: String)(build: => DataFrame): Seq[String] = {
+    val (df, bad) = PlanAudit.audit(name)(build)
+    df.count(): Unit
+    bad
+  }
+
   test("no gate in the registry leaves a cached (non-localCheckpoint) " +
       "RDD behind after its frame is executed") {
-    // the same loop sweeps the SQL conf (see the class doc)
+    // the same loop audits the plans and sweeps the SQL conf (see the class doc)
     val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
+    val planOffenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val confLeaks = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((name, fn) <- Queries.all.toSeq.sortBy(_._1)) {
@@ -52,7 +69,8 @@ class CacheHygieneSpec extends AnyFunSuite with SparkSpec {
       // leak is attributed to the gate that created it, never inherited
       val baseline = sc.getPersistentRDDs.keySet.toSet
       val confBefore = spark.conf.getAll
-      fn(spark, sf).count(): Unit
+      val bad = auditAndCount(name)(fn(spark, sf))
+      if (bad.nonEmpty) planOffenders += s"$name: ${bad.mkString(", ")}"
       confLeaks ++= confDiff(confBefore, spark.conf.getAll).map(l => s"$name: $l")
       val lingering = sc.getPersistentRDDs
         .filter { case (id, _) => !baseline(id) }
@@ -69,11 +87,13 @@ class CacheHygieneSpec extends AnyFunSuite with SparkSpec {
       spark.catalog.clearCache()
       System.gc()
     }
-    assert(offenders.isEmpty,
-      s"gates left non-localCheckpoint persistent RDDs behind:\n" +
-        offenders.mkString("\n"))
-    assert(confLeaks.isEmpty,
-      s"gates left the session conf changed:\n" + confLeaks.mkString("\n"))
+    val report = Seq(
+      "gates plan a cartesian product, a non-scalar nested loop, or a " +
+        "partition-less window" -> planOffenders,
+      "gates left non-localCheckpoint persistent RDDs behind" -> offenders,
+      "gates left the session conf changed" -> confLeaks
+    ).collect { case (what, lines) if lines.nonEmpty => s"$what:\n${lines.mkString("\n")}" }
+    if (report.nonEmpty) fail(report.mkString("\n"))
   }
 
   test("the sweep DETECTS a leaked cache (positive control)") {

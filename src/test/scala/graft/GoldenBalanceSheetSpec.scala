@@ -308,7 +308,6 @@ class GoldenBalanceSheetSpec extends AnyFunSuite with SparkSpec {
 
   // ---- test_balance_sheet_today_current_year_earnings (:222-279) ------
   test("current-year earnings flow through the cross-report P&L line (reference :240-279)") {
-    val s = spark; import s.implicits._
     // a 110.0 invoice on 2016-02-02: receivable +110, income -110
     val j = df(Seq(
       ("code0", "asset_receivable", "partner_a", 1, "2016-02-02", 110.0, 0.0),

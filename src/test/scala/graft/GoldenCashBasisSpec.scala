@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.TaxTags
 import graft.report.{CashBasis, GenericTaxReport}
 
 /** Cash-basis (CABA) tax matrices transcribed from the REFERENCE'S OWN
@@ -15,8 +14,6 @@ import graft.report.{CashBasis, GenericTaxReport}
   * misc move (:1479-1561).
   */
 class GoldenCashBasisSpec extends AnyFunSuite with SparkSpec {
-
-  private def r2(v: Double): Double = math.floor(v * 100 + 0.5) / 100
 
   /** The caba harness fixture (:957-1023 + the 25/75 repartition of
     * :1024 _create_caba_taxes_for_report_lines): one invoice and one

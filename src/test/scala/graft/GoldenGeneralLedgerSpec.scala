@@ -1,7 +1,7 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{ColumnGroupPlanner, DateScope}
@@ -304,7 +304,6 @@ class GoldenGeneralLedgerSpec extends AnyFunSuite with SparkSpec {
   // (-100 initial, -1000 period move -> -1100).
   // -------------------------------------------------------------------
   test("foreign-currency account: initial-balance subline seeds the running balance (reference :432-453)") {
-    val s = spark; import s.implicits._
     // :377-400 move_2016 + :402-426 move_2017, receivable leg in company
     // currency, foreign leg carrying amount_currency in the account's own
     // currency

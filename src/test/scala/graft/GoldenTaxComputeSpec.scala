@@ -297,7 +297,7 @@ class GoldenTaxComputeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the compiled plan is pure expressions — no UDF, whole-stage codegen") {
-    val s = spark; import s.implicits._
+    val s = spark
     val chain = Seq(
       TaxDef(20, "20a", "percent", 20.0, includeBaseAmount = true, sequence = 1),
       TaxDef(10, "10i", "percent", 10.0, priceInclude = true, sequence = 2))

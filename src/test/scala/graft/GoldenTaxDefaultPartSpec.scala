@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import graft.report.GenericTaxReport
 import graft.report.GenericTaxReport._
 
 /** The generic tax report's default part, transcribed from the

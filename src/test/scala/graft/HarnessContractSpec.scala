@@ -302,4 +302,14 @@ class HarnessContractSpec extends AnyFunSuite with SparkSpec {
     assert(sites("src/main/scala") == Map("graft/SessionConf.scala" -> 1))
     assert(sites("src/test/scala").isEmpty)
   }
+
+  test("only the sweep spec walks the whole gate registry") {
+    // each gate is built once per run: CacheHygieneSpec's loop runs it,
+    // checks the cache and the conf, and audits its plans; a second
+    // registry pass in another spec pays every gate's build again
+    val Walk = """Queries\.all\s*\.\s*(toSeq|keys|foreach|map)\b|PlanAudit\.sweep\(""".r
+    val walkers = sources("src/test/scala").collect {
+      case (f, src) if Walk.findFirstIn(src).nonEmpty => f }
+    assert(walkers == Seq("graft/CacheHygieneSpec.scala"))
+  }
 }

@@ -6,36 +6,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * survive 100 TB are PLAN properties (broadcasts, pushdown, no nested
   * loops), invisible to result-correctness gates — a refactor could keep
   * every oracle green while silently degrading q3 to a shuffle join or
-  * q58 to a BNLJ. These specs pin the executed plan text at sf0.001. */
+  * q58 to a BNLJ. These specs pin the executed plan text at sf0.001.
+  *
+  * The registry-wide audit is not here: [[CacheHygieneSpec]]'s one
+  * registry loop builds each gate once and runs [[PlanAudit.audit]] on it
+  * there. This spec keeps the detectors' positive controls, which that
+  * sweep relies on, and the per-gate shape pins. */
 class PlanAuditSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def plan(q: String): String =
-    Queries.all(q)(spark, sf).queryExecution.executedPlan.toString
+  private def qe(q: String) = Queries.all(q)(spark, sf).queryExecution
 
-  /** Gate plan PLUS every [[FramePin]]-pinned upstream plan its
-    * construction created (r11): a pin truncates the visible plan at a
-    * `Scan ExistingRDD` leaf, so operator-shape assertions about work that
-    * happens upstream of a pin must read the collected upstream plans. */
-  private def planWithPins(build: => org.apache.spark.sql.DataFrame): String = {
-    val (df, pinned) = FramePin.collecting(build)
-    (df.queryExecution.executedPlan.toString +:
-      pinned.map(_.executedPlan.toString)).mkString("\n")
-  }
-
-  /** The only tolerated nested loop is the 1-row scalar broadcast — the
-    * tree-walking check lives in [[PlanAudit.onlyScalarBnlj]] (main
-    * source, r8) so [[ScaleStress]] re-runs the SAME audit against its
-    * ×10/×30 synthetic dirs; this spec pins it at sf0.001 per test run. */
-  private def onlyScalarBnlj(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
-    PlanAudit.onlyScalarBnlj(qe)
-
-  private def onlyScalarBnlj(q: String): Boolean =
-    onlyScalarBnlj(Queries.all(q)(spark, sf).queryExecution)
+  private def plan(q: String): String = qe(q).executedPlan.toString
 
   test("the sweep DETECTS each killer it exists to catch (positive control)") {
-    // the global sweep below proves every gate in the registry is clean; this proves the
+    // CacheHygieneSpec's registry sweep proves every gate is clean; this proves the
     // detector itself still fires — a broken regex or a Spark plan-text
     // rename would otherwise silently green every future sweep
     import org.apache.spark.sql.functions._
@@ -115,9 +101,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // order column list only. Pinned on the BUILDER, not the q33 gate:
     // the gate reads the PairMemo minhash artifact, so the sketch's
     // operator shape only exists in the builder's plan.
-    val p = queries.DedupOps
-      .minhashCandidates(Tables.documents(spark, sf))
-      .queryExecution.executedPlan.toString
+    // The signatures sit upstream of a pin, so read the pinned plans too.
+    val p = PlanAudit.planned(queries.DedupOps
+      .minhashCandidates(Tables.documents(spark, sf)))._2
+      .map(_.executedPlan.toString).mkString("\n")
     assert(!p.contains("Window ["), // the sketch must not window at all
       "minhash builder reintroduced a window operator")
   }
@@ -149,16 +136,16 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("incremental dedup stays hash-keyed (no non-scalar nested loop)") {
-    assert(onlyScalarBnlj("q108_incremental_dedup"))
+    assert(PlanAudit.onlyScalarBnlj(qe("q108_incremental_dedup")))
   }
 
   test("prefix regroup is one declarative plan: no loop joins, no windows") {
-    assert(onlyScalarBnlj("q73_prefix_regroup"))
+    assert(PlanAudit.onlyScalarBnlj(qe("q73_prefix_regroup")))
     assert(!plan("q73_prefix_regroup").contains("windowspecdefinition"))
   }
 
   test("curation v2 pipeline: pure map/agg/join — no windows, no loop joins") {
-    assert(onlyScalarBnlj("q126_curation_v2"))
+    assert(PlanAudit.onlyScalarBnlj(qe("q126_curation_v2")))
     assert(!plan("q126_curation_v2").contains("windowspecdefinition"))
   }
 
@@ -167,7 +154,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // the events scan appears once for the row/unique aggregate and once
     // per FK branch (count + anti-join probe): 3 scans for 4 rules, and
     // never a nested loop
-    assert(onlyScalarBnlj("q122_quality_audit"))
+    assert(PlanAudit.onlyScalarBnlj(qe("q122_quality_audit")))
     assert("Scan parquet .*events".r.findAllIn(p).size <= 3, p)
   }
 
@@ -208,14 +195,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // the kernel runs upstream of the index pin — read the pinned plans
     // (the df-cap's crossJoin(broadcast(cap)) is the tolerated 1-row
     // scalar BNLJ, so the loop check is onlyScalarBnlj, not plan text)
-    val (df, pinned) = FramePin.collecting(
-      queries.DedupOps.jaccardPairs(Tables.documents(spark, sf), 0.5))
-    val p = (df.queryExecution +: pinned)
-      .map(_.executedPlan.toString).mkString("\n")
+    val plans = PlanAudit.planned(
+      queries.DedupOps.jaccardPairs(Tables.documents(spark, sf), 0.5))._2
+    val p = plans.map(_.executedPlan.toString).mkString("\n")
     assert(p.contains("shingle_hashes_distinct"),
       "jaccardPairs must use the kernel-level distinct shingle hasher")
     assert(!p.contains("CartesianProduct"))
-    (df.queryExecution +: pinned).foreach(qe => assert(onlyScalarBnlj(qe)))
+    assert(plans.forall(PlanAudit.onlyScalarBnlj))
   }
 
   test("df-cap bounds the pair join under a pathological hot key (q166)") {
@@ -258,7 +244,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // kernel shape sits upstream of the index pin (r11)
     val (df2, pinned) = FramePin.collecting(
       queries.DedupOps.jaccardPairs(skewed, 0.5))
-    (df2.queryExecution +: pinned).foreach(qe => assert(onlyScalarBnlj(qe)))
+    assert((df2.queryExecution +: pinned).forall(PlanAudit.onlyScalarBnlj))
     assert(pinned.map(_.sparkPlan.toString)
       .exists(_.contains("shingle_hashes_distinct")))
   }
@@ -286,7 +272,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // the ORACLE needs windows to replicate winnowing; the Spark side must
     // not — the kernel does the per-doc window-min in one pass
     // the kernel explode runs upstream of the fingerprint pin (r11)
-    val p = planWithPins(Queries.all("q135_span_overlap")(spark, sf))
+    val p = PlanAudit.planned(Queries.all("q135_span_overlap")(spark, sf))._2
+      .map(_.executedPlan.toString).mkString("\n")
     assert(p.contains("winnow_fingerprints"),
       "q135 must fingerprint via the native winnow kernel")
     assert(!p.contains("Window ["), "q135 must not window")
@@ -322,7 +309,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("leakage-safe split joins the bounded pair set, never the corpus²") {
-    assert(onlyScalarBnlj("q140_leakage_split"))
+    assert(PlanAudit.onlyScalarBnlj(qe("q140_leakage_split")))
     assert(!plan("q140_leakage_split").contains("Window ["), "q140 must not window")
   }
 
@@ -455,24 +442,5 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
       assert(!p.contains("Join") && !p.contains("Union"),
         "chain selection must be a projection, not a plan fork")
     }
-  }
-
-  test("GLOBAL sweep: no query plans a cartesian product, a non-scalar " +
-      "nested loop, or a partition-less window") {
-    // Every per-query audit above pins a query someone already suspected;
-    // this sweep catches the one nobody did. Three corpus-scale killers,
-    // checked over ALL registered gates at sf0.001:
-    //   1. CartesianProduct — corpus² rows;
-    //   2. BroadcastNestedLoopJoin that is not the 1-row scalar pattern;
-    //   3. a Window whose spec opens with an ordering (no partition keys):
-    //      plans as windowspecdefinition(<attr> ASC/DESC ..., i.e. the
-    //      whole input sorts on ONE task.
-    // Queries whose FINAL presentation orderBy plans a global Sort are
-    // fine — Sort is allowed, single-partition WINDOW state is not.
-    // The sweep logic (killer list, waiver map, partition-less-window
-    // signature) lives in [[PlanAudit]] so ScaleStress runs the IDENTICAL
-    // audit against its scaled synthetic dirs.
-    val offenders = PlanAudit.sweep(spark, sf)
-    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

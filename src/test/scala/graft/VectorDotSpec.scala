@@ -75,10 +75,9 @@ class VectorDotSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("vector_dot available from SQL after extension install") {
-    val s = spark; import s.implicits._
-    GraftExtensions.install(s)
+    GraftExtensions.install(spark)
     fixture.createOrReplaceTempView("vdots")
-    val n = s.sql(
+    val n = spark.sql(
       "SELECT id FROM vdots WHERE abs(vector_dot(a, b)) >= 0").count()
     assert(n == 200)
   }
