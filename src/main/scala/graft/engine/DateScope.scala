@@ -59,6 +59,26 @@ object DateScope {
     end.minusYears(1).plusDays(1)
   }
 
+  /** A scope's exact date window: `lo <= date` when `lo` is set, and
+    * `date <= hi`, or `date < hi` when `hiInclusive` is false (the two
+    * "to beginning" scopes end strictly before their bound). */
+  final case class Span(lo: Option[LocalDate], hi: LocalDate, hiInclusive: Boolean)
+
+  /** The one statement of each scope's bounds (account_report.py:622-654);
+    * [[predicate]], [[bounds]] and the report runner's period windows all
+    * read it. */
+  def span(scope: Scope, from: LocalDate, to: LocalDate,
+           fc: FiscalConfig = FiscalConfig()): Span = scope match {
+    case StrictRange | Normal => Span(Some(from), to, hiInclusive = true)
+    case FromBeginning => Span(None, to, hiInclusive = true)
+    case ToBeginningOfPeriod => Span(None, from, hiInclusive = false)
+    case FromFiscalyear => Span(Some(fiscalYearStart(to, fc)), to, hiInclusive = true)
+    case ToBeginningOfFiscalyear => Span(None, fiscalYearStart(to, fc), hiInclusive = false)
+    case PreviousTaxPeriod(m) =>
+      val (pf, pt) = taxPeriodBoundaries(from.minusDays(1), m)
+      Span(Some(pf), pt, hiInclusive = true)
+  }
+
   /** Compile a scope to a predicate over `dateCol`.
     * `includeInitial` is the `account_id.include_initial_balance` leg of the
     * `normal` scope — pass `lit(false)` when the dimension has no such flag. */
@@ -66,37 +86,25 @@ object DateScope {
                 fc: FiscalConfig = FiscalConfig(),
                 includeInitial: Column = lit(false)): Column = {
     def d(x: LocalDate): Column = lit(x.toString).cast("timestamp")
-    scope match {
-      case StrictRange => dateCol >= d(from) && dateCol <= d(to)
-      case Normal => dateCol <= d(to) && (dateCol >= d(from) || includeInitial)
-      case FromBeginning => dateCol <= d(to)
-      case ToBeginningOfPeriod => dateCol < d(from)
-      case FromFiscalyear =>
-        val fy = fiscalYearStart(to, fc)
-        dateCol >= d(fy) && dateCol <= d(to)
-      case ToBeginningOfFiscalyear => dateCol < d(fiscalYearStart(to, fc))
-      case PreviousTaxPeriod(m) =>
-        val (pf, pt) = taxPeriodBoundaries(from.minusDays(1), m)
-        dateCol >= d(pf) && dateCol <= d(pt)
+    val s = span(scope, from, to, fc)
+    val upper = if (s.hiInclusive) dateCol <= d(s.hi) else dateCol < d(s.hi)
+    (scope, s.lo) match {
+      case (Normal, Some(lo)) => upper && (dateCol >= d(lo) || includeInitial)
+      case (_, Some(lo)) => dateCol >= d(lo) && upper
+      case (_, None) => upper
     }
   }
 
   /** The scope as a closed [from?, to] date window (account_report.py:
     * 622-654 `_get_date_bounds_info`) — the form the external-values engine
     * consumes, filtering its value table by date bounds rather than a fact
-    * predicate. `Normal`'s include-initial-balance leg is per-account and
-    * has no closed window; for value tables it degrades to the strict
-    * range, as the reference's bounds do. */
+    * predicate, so a strict end moves back one day. `Normal`'s
+    * include-initial-balance leg is per-account and has no closed window;
+    * for value tables it degrades to the strict range, as the reference's
+    * bounds do. */
   def bounds(scope: Scope, from: LocalDate, to: LocalDate,
-             fc: FiscalConfig = FiscalConfig()): (Option[LocalDate], LocalDate) =
-    scope match {
-      case StrictRange | Normal => (Some(from), to)
-      case FromBeginning => (None, to)
-      case ToBeginningOfPeriod => (None, from.minusDays(1))
-      case FromFiscalyear => (Some(fiscalYearStart(to, fc)), to)
-      case ToBeginningOfFiscalyear => (None, fiscalYearStart(to, fc).minusDays(1))
-      case PreviousTaxPeriod(m) =>
-        val (pf, pt) = taxPeriodBoundaries(from.minusDays(1), m)
-        (Some(pf), pt)
-    }
+             fc: FiscalConfig = FiscalConfig()): (Option[LocalDate], LocalDate) = {
+    val s = span(scope, from, to, fc)
+    (s.lo, if (s.hiInclusive) s.hi else s.hi.minusDays(1))
+  }
 }

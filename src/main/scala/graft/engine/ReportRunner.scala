@@ -1,7 +1,7 @@
 package graft.engine
 
-import java.time.LocalDate
-import org.apache.spark.sql.{Column, DataFrame}
+import java.time.{Instant, LocalDate, ZoneId}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The report evaluation lifecycle (SURVEY §3.1,
@@ -13,20 +13,23 @@ import org.apache.spark.sql.functions._
   * over the collected totals.
   *
   * Spark-first orchestration choices (SURVEY §4.1 "formula batching"):
-  * - ALL domain expressions × ALL column groups evaluate in ONE scan —
-  *   each (group, expression) is a `sum(when(scope ∧ domain, measure))`
-  *   aggregate column of a single job (the reference issues one SQL query
-  *   per engine batch per group).
-  * - account_codes formulas share ONE per-code aggregation scan (again all
-  *   groups at once); the tiny per-code totals are then prefix-matched and
-  *   gated driver-side, like the reference's post-processing.
+  * - ALL domain and account_codes expressions × ALL column groups come
+  *   out of ONE aggregate: each (group, date scope) pair is a window row
+  *   held as data, each journal row is repeated for the windows it falls
+  *   in, and one `groupBy(window, code)` sums the measure and one column
+  *   per distinct (domain, mode). Period bounds are data, not code, so a
+  *   new period set or group count compiles nothing new (the reference
+  *   issues one SQL query per engine batch per group).
+  * - the small per-(window, code) result is collected once; domain totals
+  *   sum its codes and account_codes formulas prefix-match and gate its
+  *   per-code balances driver-side, like the reference's post-processing.
   * - external values aggregate per group from the external-values table.
   * - aggregation formulas never touch row data: [[AggregationEvaluator]]
   *   fixpoint over the other engines' totals.
   *
-  * At 100 TB: exactly two fact scans per report (domain batch + codes
-  * batch) regardless of expression or period count; driver state is one
-  * Double per (expression, group). */
+  * At 100 TB: one fact scan per report regardless of expression or period
+  * count; each fact row is repeated once per window it falls in before
+  * the partial aggregation; driver state is one row per (window, code). */
 object ReportRunner {
 
   sealed trait Engine
@@ -64,8 +67,8 @@ object ReportRunner {
                                forced: Seq[Any] = Nil)
 
   /** `crossExprs`: the OTHER report's expression set for cross_report
-    * aggregations — domain leaves ride the batch-1 scan, account_codes
-    * leaves the batch-2 scan, and the other report's own aggregation
+    * aggregations — its domain and account_codes leaves ride the one
+    * aggregate under each forced scope, and the other report's own aggregation
     * formulas resolve over those leaves per forced scope (the reference
     * expands the referenced expressions with `_expand_aggregations`, so a
     * cross term may name any engine's expression,
@@ -83,36 +86,34 @@ object ReportRunner {
     val extExprs = exprs.collect { case e @ Expr(_, _: External, _) => e }
     val aggExprs = exprs.collect { case e @ Expr(_, _: Aggregation, _) => e }
 
-    // ---- batch 1: every (domain expr × group) in ONE scan --------------
-    // Cross-report leaves ride in the SAME scan: for each forced scope a
-    // cross_report aggregation actually uses, the other report's domain
-    // expressions become extra aggregation buffers evaluated under that
-    // scope (reference: other_cross_report_expr_totals_by_scope).
+    // ---- one aggregate: every domain and codes leaf, every group -------
+    // Each (column group, date scope) pair is one window row held as data.
+    // Cross-report leaves ride the same rows: for each forced scope a
+    // cross_report aggregation uses, the other report's domain and codes
+    // expressions read that scope's windows (reference:
+    // other_cross_report_expr_totals_by_scope).
     val crossScopes: Seq[DateScope.Scope] = aggExprs
       .map(_.engine.asInstanceOf[Aggregation]).flatMap(_.crossScope).distinct
     val crossDomainExprs = ctx.crossExprs.collect { case e @ Expr(_, _: DomainSum, _) => e }
     val crossCodesExprs = ctx.crossExprs.collect { case e @ Expr(_, _: CodesFormula, _) => e }
     val crossAggExprs = ctx.crossExprs.collect { case e @ Expr(_, _: Aggregation, _) => e }
+    val crossLeafScopes =
+      if (crossDomainExprs.isEmpty && crossCodesExprs.isEmpty) Nil else crossScopes
+    val scopes = ((domainExprs ++ codesExprs).map(_.scope) ++ crossLeafScopes).distinct
+    val sumKeys = (domainExprs ++ crossDomainExprs).map(sumKey).distinct
+    val windows = Windows.aggregate(ctx, groups, scopes, sumKeys)
 
     // currency-precision sign compare (reference compare_amounts; the
     // sum_if_pos/neg gates round to the currency's 2 decimals first)
     def cmp0(v: Double): Int =
       BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).signum
 
-    def domainCol(e: Expr, g: ColumnGroup, scope: DateScope.Scope, name: String): Column = {
-      val ds = e.engine.asInstanceOf[DomainSum]
-      val m = if (ds.mode == "count_rows") lit(1.0) else ctx.measure
-      coalesce(sum(when(
-        DateScope.predicate(scope, ctx.dateCol, g.from, g.to, ctx.fc) &&
-          Domain.compile(g.forced) && Domain.compile(ds.domain),
-        m).otherwise(lit(0.0))), lit(0.0)).as(name)
-    }
-
     // the sign gate reads the UN-negated total, then '-' applies
     // (reference strips the '-' prefix before classifying the policy,
     // account_report.py:2683-2688)
-    def domainFinish(e: Expr, raw: Double): Double = {
+    def domainTotal(gi: Int, e: Expr, scope: DateScope.Scope): Double = {
       val ds = e.engine.asInstanceOf[DomainSum]
+      val raw = windows.sum(gi, scopes.indexOf(scope), sumKeys.indexOf(sumKey(e)))
       val gated = ds.mode match {
         case "sum_if_pos" => if (cmp0(raw) >= 0) raw else 0.0
         case "sum_if_neg" => if (cmp0(raw) < 0) raw else 0.0
@@ -120,55 +121,25 @@ object ReportRunner {
       }
       if (ds.negate) -gated else gated
     }
+    def codesTotal(gi: Int, e: Expr, scope: DateScope.Scope): Double =
+      evalCodes(e.engine.asInstanceOf[CodesFormula].formula,
+        windows.balances(gi, scopes.indexOf(scope)))
 
-    val ownCols = for (g <- groups; e <- domainExprs)
-      yield domainCol(e, g, e.scope, s"${g.key}||${e.code}")
-    val crossCols = for (g <- groups; sc <- crossScopes; e <- crossDomainExprs)
-      yield domainCol(e, g, sc, s"${g.key}||cross|$sc||${e.code}")
-
-    val batch1 = ownCols ++ crossCols
-    val batch1Row = if (batch1.isEmpty) null
-      else ctx.journal.agg(batch1.head, batch1.tail: _*).head()
-
-    val domainTotals: Map[(String, String), Double] =
-      (for (g <- groups; e <- domainExprs) yield (g.key, e.code) ->
-        domainFinish(e, batch1Row.getDouble(batch1Row.fieldIndex(s"${g.key}||${e.code}")))).toMap
-
-    // ---- batch 2: per-code balances for all codes formulas, ONE scan ---
-    // Cross-report account_codes leaves share the scan: their forced
-    // scopes just add buffer columns.
-    val codesScopes = (codesExprs.map(_.scope) ++
-      (if (crossCodesExprs.nonEmpty) crossScopes else Nil)).distinct
-    val perCodeBalances: Map[(String, DateScope.Scope), Seq[(String, Double)]] =
-      if (codesScopes.isEmpty) Map.empty
-      else {
-        val cols = for (g <- groups; sc <- codesScopes) yield
-          sum(when(DateScope.predicate(sc, ctx.dateCol, g.from, g.to, ctx.fc) &&
-              Domain.compile(g.forced),
-            ctx.measure).otherwise(lit(0.0))).as(s"${g.key}||$sc")
-        val perCode = ctx.journal.groupBy(ctx.codeCol.cast("string").as("code"))
-          .agg(cols.head, cols.tail: _*)
-          .collect() // bounded by the chart of accounts, not the fact table
-        (for (g <- groups; sc <- codesScopes) yield (g.key, sc) ->
-          perCode.toSeq.map(r =>
-            r.getString(0) -> r.getDouble(r.fieldIndex(s"${g.key}||$sc")))).toMap
-      }
-    val codesTotals: Map[(String, String), Double] =
-      (for (g <- groups; e <- codesExprs) yield (g.key, e.code) ->
-        evalCodes(e.engine.asInstanceOf[CodesFormula].formula,
-          perCodeBalances((g.key, e.scope)))).toMap
+    val leafTotals: Map[(String, String), Double] =
+      (for ((g, gi) <- groups.zipWithIndex; e <- domainExprs ++ codesExprs) yield
+        (g.key, e.code) -> (e.engine match {
+          case _: DomainSum => domainTotal(gi, e, e.scope)
+          case _ => codesTotal(gi, e, e.scope)
+        })).toMap
 
     // (group key, forced scope) -> other-report code -> value: domain +
     // codes leaves, then the other report's own aggregation formulas
     // resolved over them under that scope
     val crossTotals: Map[(String, DateScope.Scope), Map[String, Double]] =
-      (for (g <- groups; sc <- crossScopes) yield {
+      (for ((g, gi) <- groups.zipWithIndex; sc <- crossScopes) yield {
         val leaves =
-          crossDomainExprs.map(e => e.code -> domainFinish(e,
-            batch1Row.getDouble(batch1Row.fieldIndex(s"${g.key}||cross|$sc||${e.code}")))).toMap ++
-          crossCodesExprs.map(e => e.code ->
-            evalCodes(e.engine.asInstanceOf[CodesFormula].formula,
-              perCodeBalances((g.key, sc)))).toMap
+          crossDomainExprs.map(e => e.code -> domainTotal(gi, e, sc)).toMap ++
+            crossCodesExprs.map(e => e.code -> codesTotal(gi, e, sc))
         val aggs = crossAggExprs.map { e =>
           val a = e.engine.asInstanceOf[Aggregation]
           e.code -> AggregationEvaluator.Expr(a.formula, a.bounds)
@@ -176,7 +147,7 @@ object ReportRunner {
         (g.key, sc) -> (leaves ++ AggregationEvaluator.evaluate(aggs, leaves))
       }).toMap
 
-    // ---- batch 3: every (external expr × group) in ONE scan ------------
+    // ---- external values: every (external expr × group) in ONE scan ---
     // The value table first collapses to one row per (expression, date):
     // the reference's most_recent is the SUM of all values at the latest
     // date in the window (account_report.py:2907-2912 `GROUP BY date ORDER
@@ -211,9 +182,9 @@ object ReportRunner {
           yield (g.key, e.code) -> row.getDouble(i * extExprs.size + j)).toMap
       }
 
-    // ---- batch 4: aggregation fixpoint per group (resolved LAST) -------
+    // ---- aggregation fixpoint per group (resolved LAST) ---------------
     groups.map { g =>
-      val leaves = (domainTotals ++ codesTotals ++ extTotals).collect {
+      val leaves = (leafTotals ++ extTotals).collect {
         case ((gk, code), v) if gk == g.key => code -> v
       }
       val aggs = aggExprs.map { e =>
@@ -225,6 +196,73 @@ object ReportRunner {
       val resolved = AggregationEvaluator.evaluate(aggs, leaves)
       g.key -> (leaves ++ resolved)
     }.toMap
+  }
+
+  /** A domain sum's aggregate: its domain, and whether it counts rows. */
+  private def sumKey(e: Expr): (Seq[Any], Boolean) = {
+    val ds = e.engine.asInstanceOf[DomainSum]
+    (ds.domain, ds.mode == "count_rows")
+  }
+
+  /** One (column group, date scope) window as data: the scope's exact
+    * [[DateScope.Span]] in session-time-zone instants (the timestamps a
+    * `yyyy-MM-dd` literal casts to) and the index of the group's forced
+    * domain. */
+  private final case class Window(gi: Int, si: Int, fi: Int, lo: Option[Instant],
+                                  hi: Instant, hiInclusive: Boolean)
+
+  /** The one aggregate behind every domain and codes leaf: per window and
+    * account code, the plain balance and one sum per domain key. */
+  private final class Windows(rows: Map[(Int, Int), Array[Row]]) {
+    private def of(gi: Int, si: Int) = rows.getOrElse((gi, si), Array.empty[Row])
+    private def num(r: Row, i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+    /** Domain key `k`'s total over every code of one window. */
+    def sum(gi: Int, si: Int, k: Int): Double = of(gi, si).map(num(_, 4 + k)).sum
+    /** The per-code balances of one window; a null code matches no prefix. */
+    def balances(gi: Int, si: Int): Seq[(String, Double)] =
+      of(gi, si).toSeq.collect { case r if !r.isNullAt(2) => r.getString(2) -> num(r, 3) }
+  }
+
+  private object Windows {
+    /** The windows pass through the plan as ONE array-of-struct literal,
+      * which generated code reads from its references, so a new period set
+      * or group count reuses the compiled classes. Each journal row meets
+      * every window (`explode`) and a filter keeps the windows it falls
+      * in; both stay in whole-stage codegen, where a `filter` lambda over
+      * the array would be interpreted per row and window (2.7x slower at
+      * 12 groups on sf0.1). One `groupBy(window, code)` then sums the
+      * measure and every (domain, mode), and ONE `collect` brings the
+      * chart-of-accounts-sized result to the driver. */
+    def aggregate(ctx: Ctx, groups: Seq[ColumnGroup], scopes: Seq[DateScope.Scope],
+                  sumKeys: Seq[(Seq[Any], Boolean)]): Windows =
+      if (scopes.isEmpty) new Windows(Map.empty)
+      else {
+        val zone = ZoneId.of(ctx.journal.sparkSession.conf.get("spark.sql.session.timeZone"))
+        def at(d: LocalDate) = d.atStartOfDay.atZone(zone).toInstant
+        val forced = groups.map(_.forced).distinct
+        val windows = for ((g, gi) <- groups.zipWithIndex; (sc, si) <- scopes.zipWithIndex) yield {
+          val s = DateScope.span(sc, g.from, g.to, ctx.fc)
+          Window(gi, si, forced.indexOf(g.forced), s.lo.map(at), at(s.hi), s.hiInclusive)
+        }
+        val domains = sumKeys.map(_._1).distinct
+        // the date compares as a timestamp, as against a timestamp literal
+        val facts = ctx.journal.select(
+          Seq(ctx.dateCol.cast("timestamp").as("d"), ctx.codeCol.cast("string").as("code"),
+            ctx.measure.cast("double").as("m"), array(forced.map(Domain.compile): _*).as("forced")) ++
+            domains.zipWithIndex.map { case (dom, i) => Domain.compile(dom).as(s"f$i") }: _*)
+        val (d, w) = (col("d"), col("w"))
+        val sums = sumKeys.map { case (dom, countRows) =>
+          sum(when(col(s"f${domains.indexOf(dom)}"), if (countRows) lit(1.0) else col("m")))
+        }
+        val rows = facts.select(explode(typedLit(windows)).as("w"), col("*"))
+          .filter((w("lo").isNull || d >= w("lo")) &&
+            when(w("hiInclusive"), d <= w("hi")).otherwise(d < w("hi")) &&
+            col("forced")(w("fi")))
+          .groupBy(col("w.gi"), col("w.si"), col("code"))
+          .agg(sum(col("m")), sums: _*)
+          .collect() // bounded by windows × chart of accounts, not the fact table
+        new Windows(rows.groupBy(r => (r.getInt(0), r.getInt(1))))
+      }
   }
 
   /** Driver-side account_codes evaluation over collected (code, balance)

@@ -17,10 +17,9 @@ import java.time.LocalDate
   *
   * Spark-first: the composed base domain compiles through [[Domain]] into
   * ONE pushed-down predicate on the fact scan shared by all groups, and the
-  * per-group (period × member) predicates become conditional-aggregation
-  * buffers inside [[ReportRunner]]'s single-scan batches — so 2 comparisons
-  * × 2 horizontal groups × N expressions still cost exactly two fact scans
-  * (domain batch + codes batch), not 4× anything.
+  * per-group (period × member) windows become rows of [[ReportRunner]]'s
+  * one aggregate — so 2 comparisons × 2 horizontal groups × N expressions
+  * still cost exactly one fact scan, not 4× anything.
   */
 object ReportSpec {
 

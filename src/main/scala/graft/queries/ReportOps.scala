@@ -176,7 +176,7 @@ object ReportOps {
 
   /** q54 — full ReportRunner lifecycle (SURVEY §3.1): domain, account_codes
     * and aggregation expressions batched and evaluated across two column
-    * groups in two fact scans, fixpoint last. Output = the
+    * groups in one fact scan, fixpoint last. Output = the
     * (group, expression, value) totals table. */
   def q54(s: SparkSession, d: String): DataFrame = {
     import graft.engine.{DateScope, ReportRunner}

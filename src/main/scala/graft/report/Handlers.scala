@@ -159,41 +159,41 @@ object Handlers {
     * and outstanding payments split into plus/less sections, and the
     * unexplained difference between the book balance and the last
     * statement's running balance (= the reconciled statement sum here,
-    * zero opening). Scale: both inputs reduce via ONE conditional
-    * aggregation each (no per-section rescans), unioned into the 6-line
-    * report. */
+    * zero opening). Scale: both inputs union into ONE conditional
+    * aggregation (no per-section rescans, no driver round trip), which
+    * explodes into the 6-line report. */
   object Reconciliation {
     /** `statements`: (`amount`, `reconciled` bool). `payments`:
       * (`amount`, `outstanding` bool). Returns
       * (ord, section, n_lines, amount). */
     def compute(statements: DataFrame, payments: DataFrame): DataFrame = {
-      val s = statements.sparkSession
-      import s.implicits._
-      def r2(x: Double): Double = math.floor(x * 100 + 0.5) / 100
-      def sumIf(c: Column): Column = sum(when(c, col("amount")).otherwise(lit(0.0)))
-      val st = statements.agg(
-        count(lit(1)).as("n"),
-        // coalesce: sum over an empty input is NULL; the report must emit
-        // zeroed lines, not NPE on getDouble (sumIf already defaults 0.0)
-        coalesce(sum(col("amount")), lit(0.0)).as("gl"),
-        sumIf(col("reconciled")).as("rec"),
-        count(when(!col("reconciled") && col("amount") > 0, 1)).as("n_plus"),
-        sumIf(!col("reconciled") && col("amount") > 0).as("plus"),
-        count(when(!col("reconciled") && col("amount") < 0, 1)).as("n_less"),
-        sumIf(!col("reconciled") && col("amount") < 0).as("less")).head()
-      val pay = payments.agg(
-        count(when(col("outstanding") && col("amount") > 0, 1)).as("n_plus"),
-        sumIf(col("outstanding") && col("amount") > 0).as("plus"),
-        count(when(col("outstanding") && col("amount") < 0, 1)).as("n_less"),
-        sumIf(col("outstanding") && col("amount") < 0).as("less")).head()
-      Seq(
-        (1L, "balance_gl", st.getLong(0), r2(st.getDouble(1))),
-        (2L, "plus_unreconciled_statements", st.getLong(3), r2(st.getDouble(4))),
-        (3L, "less_unreconciled_statements", st.getLong(5), r2(st.getDouble(6))),
-        (4L, "plus_outstanding_payments", pay.getLong(0), r2(pay.getDouble(1))),
-        (5L, "less_outstanding_payments", pay.getLong(2), r2(pay.getDouble(3))),
-        (6L, "unexplained_difference", 0L, r2(st.getDouble(1) - st.getDouble(2)))
-      ).toDF("ord", "section", "n_lines", "amount")
+      def r2(x: Column): Column = floor(x * 100 + 0.5) / 100
+      val (st, flag, amount) = (col("st"), col("flag"), col("amount"))
+      // `flag` is `reconciled` on statement rows, `outstanding` on payments
+      val both = statements.select(lit(true).as("st"), amount, col("reconciled").as("flag"))
+        .unionByName(payments.select(lit(false).as("st"), amount, col("outstanding").as("flag")))
+      def n(c: Column): Column = count(when(c, 1))
+      // coalesce: a sum over no rows is NULL; the report emits zeroed lines
+      def sumIf(c: Column): Column =
+        coalesce(sum(when(c, amount).otherwise(lit(0.0))), lit(0.0))
+      val sections = Seq(st && !flag && amount > 0, st && !flag && amount < 0,
+        !st && flag && amount > 0, !st && flag && amount < 0)
+      val totals = both.agg(n(st).as("n"), Seq(
+        coalesce(sum(when(st, amount)), lit(0.0)).as("gl"),
+        sumIf(st && flag).as("rec")) ++
+        sections.zipWithIndex.flatMap { case (c, i) =>
+          Seq(n(c).as(s"n$i"), sumIf(c).as(s"s$i")) }: _*)
+      def line(ord: Long, section: String, lines: Column, value: Column): Column =
+        struct(lit(ord).as("ord"), lit(section).as("section"), lines.as("n_lines"),
+          r2(value).as("amount"))
+      totals.select(explode(array(
+        line(1L, "balance_gl", col("n"), col("gl")),
+        line(2L, "plus_unreconciled_statements", col("n0"), col("s0")),
+        line(3L, "less_unreconciled_statements", col("n1"), col("s1")),
+        line(4L, "plus_outstanding_payments", col("n2"), col("s2")),
+        line(5L, "less_outstanding_payments", col("n3"), col("s3")),
+        line(6L, "unexplained_difference", lit(0L), col("gl") - col("rec")))).as("line"))
+        .select("line.*")
     }
   }
 

@@ -122,6 +122,18 @@ class GoldenReconciliationSpec extends AnyFunSuite with SparkSpec {
       ("unexplained_difference", 0L, -100.0)))
   }
 
+  test("empty statements and payments give six zeroed lines") {
+    val summary = Handlers.Reconciliation.compute(statements(Nil), payments(Nil))
+      .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+    assert(summary == Seq(
+      (1L, "balance_gl", 0L, 0.0),
+      (2L, "plus_unreconciled_statements", 0L, 0.0),
+      (3L, "less_unreconciled_statements", 0L, 0.0),
+      (4L, "plus_outstanding_payments", 0L, 0.0),
+      (5L, "less_outstanding_payments", 0L, 0.0),
+      (6L, "unexplained_difference", 0L, 0.0)))
+  }
+
   // :301-390 — the date window drives every section
   test("changing the report date moves lines in and out (reference :342-390)") {
     val st = statements(Seq(

@@ -59,6 +59,44 @@ class ReportRunnerSpec extends AnyFunSuite with SparkSpec {
     assert(out("p2023")("RATIO.bal") == 100.0)
   }
 
+  test("a request with new periods and a new group count compiles no class " +
+      "and runs one aggregate") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.GraftListenerBus
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val ctx = ReportRunner.Ctx(fixture, col("d"), col("code"), col("v"))
+    val exprs = Seq(
+      ReportRunner.Expr("POSTED.bal", ReportRunner.DomainSum(Seq(("state", "=", "posted")))),
+      ReportRunner.Expr("ALLHIST.bal", ReportRunner.DomainSum(Seq(("state", "=", "posted"))),
+        scope = DateScope.FromBeginning),
+      ReportRunner.Expr("CODES.bal", ReportRunner.CodesFormula("1 + 2C")),
+      ReportRunner.Expr("RATIO.bal", ReportRunner.Aggregation("100 * POSTED.bal / ALLHIST.bal")))
+    def group(key: String, from: String, to: String) =
+      ReportRunner.ColumnGroup(key, LocalDate.parse(from), LocalDate.parse(to))
+    ReportRunner.run(ctx, exprs, Seq(group("p2024", "2024-01-01", "2024-12-31"),
+      group("p2023", "2023-01-01", "2023-12-31")))
+
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = ReportRunner.run(ctx, exprs, Seq(group("q1", "2024-01-01", "2024-03-31"),
+        group("feb", "2024-02-01", "2024-02-29"), group("h2", "2023-07-01", "2023-12-31")))
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+      GraftListenerBus.drain(sc)
+      assert(compiled == 0, s"$compiled classes compiled for new period bounds")
+      assert(jobs.get <= 3, s"${jobs.get} Spark jobs for one request")
+      assert(out("q1")("POSTED.bal") == -13.0 && out("feb")("CODES.bal") == -30.0 &&
+        out("h2")("ALLHIST.bal") == 100.0)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("report spec: initializer domain + comparison × horizontal cartesian") {
     import ReportSpec._
     val opts = Options(
