@@ -352,8 +352,9 @@ object Bench {
 
   /** Full JSON string escape (backslash, quote, ALL control chars) — drift
     * entries embed raw exception messages, and Spark messages routinely
-    * contain newlines that would break the one-line stdout contract. */
-  private def jstr(s: String): String = s.flatMap {
+    * contain newlines that would break the one-line stdout contract.
+    * Verify escapes its `oracle_sql.json` with it too. */
+  private[graft] def jstr(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

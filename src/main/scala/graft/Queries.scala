@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries._
 
 /** Registry assembling every gate query (SURVEY §2 inventory + training-data
   * ops) with its DuckDB oracle. Conventions: see queries/Parity.scala.
@@ -34,21 +35,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Queries {
   type Q = (SparkSession, String) => DataFrame
 
-  def all: Map[String, Q] =
-    queries.RelationalA.queries ++ queries.RelationalB.queries ++
-      queries.DedupOps.queries ++ queries.TextOps.queries ++
-      queries.SimilarityOps.queries ++ queries.EngineOps.queries ++
-      queries.ReportOps.queries ++ queries.GateOps.queries ++
-      queries.StockOps.queries ++ queries.SketchOps.queries ++
-      queries.CurationOps.queries ++ queries.WizardOps.queries ++
-      queries.SelectionOps.queries
+  /** One gate: its name, the plan it builds, and the DuckDB SQL that
+    * checks it. Each `queries/` module declares its gates in one table. */
+  final case class Gate(name: String, build: Q, oracle: String)
 
-  def oracle: Map[String, String] =
-    queries.RelationalA.oracle ++ queries.RelationalB.oracle ++
-      queries.DedupOps.oracle ++ queries.TextOps.oracle ++
-      queries.SimilarityOps.oracle ++ queries.EngineOps.oracle ++
-      queries.ReportOps.oracle ++ queries.GateOps.oracle ++
-      queries.StockOps.oracle ++ queries.SketchOps.oracle ++
-      queries.CurationOps.oracle ++ queries.WizardOps.oracle ++
-      queries.SelectionOps.oracle
+  /** The gates by name; fails naming the gate if a name is declared twice
+    * or an oracle is null or empty. */
+  private[graft] def index(gates: Seq[Gate]): Map[String, Gate] =
+    gates.foldLeft(Map.empty[String, Gate]) { (m, g) =>
+      require(!m.contains(g.name), s"gate ${g.name} is declared twice")
+      require(g.oracle != null && g.oracle.nonEmpty, s"gate ${g.name} has no oracle")
+      m.updated(g.name, g)
+    }
+
+  private lazy val gates: Map[String, Gate] = index(
+    RelationalA.gates ++ RelationalB.gates ++ DedupOps.gates ++ TextOps.gates ++
+      SimilarityOps.gates ++ EngineOps.gates ++ ReportOps.gates ++ GateOps.gates ++
+      StockOps.gates ++ SketchOps.gates ++ CurationOps.gates ++ WizardOps.gates ++
+      SelectionOps.gates)
+
+  lazy val all: Map[String, Q] = gates.map { case (n, g) => n -> g.build }
+
+  lazy val oracle: Map[String, String] = gates.map { case (n, g) => n -> g.oracle }
 }

@@ -221,18 +221,6 @@ object ScaleStress {
     (if (factor > 30) docGates.filterNot(_ == "q34_simhash") else docGates) ++
       embGates ++ eventGates ++ textGates ++ controlGates
 
-  /** Recursive delete that does NOT follow symlinks — the stale corpus dir
-    * contains links into the (read-only) base testdata; a follow-links
-    * delete would recurse into it. */
-  private def deleteNoFollow(p: java.nio.file.Path): Unit = {
-    if (!Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) return
-    if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-      val s = Files.list(p)
-      try s.forEach(deleteNoFollow(_)) finally s.close()
-    }
-    Files.deleteIfExists(p): Unit
-  }
-
   /** Copy-offset unit: every copy's ids live in their own 10⁸-wide band. */
   private[graft] val OffsetUnit = 100000000L
 
@@ -295,7 +283,7 @@ object ScaleStress {
     val markerWant = s"rel_v1 $absBase"
     if (Files.exists(marker) && Files.readString(marker).trim == markerWant)
       return dir.toString
-    deleteNoFollow(dir)
+    Scratch.deleteRec(dir.toFile)
     Files.createDirectories(dir)
     val scaled = Seq("orders", "lineitem")
     val passthrough = Seq("region", "nation", "customer", "supplier",
@@ -340,7 +328,7 @@ object ScaleStress {
     val markerWant = s"v3 $absBase"
     if (Files.exists(marker) && Files.readString(marker).trim == markerWant)
       return dir.toString
-    deleteNoFollow(dir)
+    Scratch.deleteRec(dir.toFile)
     Files.createDirectories(dir)
     // non-scaled tables: symlink (same bytes, no copy cost). At factor 1
     // that is ALL tables — the ×1 anchor of every exponent must measure

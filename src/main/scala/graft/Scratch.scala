@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, LinkOption}
+
 /** Per-process scratch root for gate fixtures (q67 CSV, q106 JSONL),
   * streaming checkpoint/store dirs, and memo artifacts.
   *
@@ -97,8 +99,15 @@ object Scratch {
     f
   }
 
+  /** Recursive delete that does NOT follow symlinks: a link is removed,
+    * never the tree it points into (ScaleStress's stale corpus dirs hold
+    * links into the read-only base testdata). */
   def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(): Unit
+    val p = f.toPath
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
+      val s = Files.list(p)
+      try s.forEach(c => deleteRec(c.toFile)) finally s.close()
+    }
+    Files.deleteIfExists(p): Unit
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Query registry is assembled from the per-domain modules:
-  * [[Queries]] (relational operators). */
+  * Both maps forward to [[Queries]], built from the per-module gate
+  * tables. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

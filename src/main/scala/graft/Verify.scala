@@ -62,18 +62,9 @@ object Verify {
     val failed = run(spark,
       SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) },
       sfDir, outDir)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // a JSON string: a tab or CR in an oracle's SQL left unescaped would
+    // make the compare's json.load fail and zero the run's correctness
+    def q(s: String): String = "\"" + Bench.jstr(s) + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

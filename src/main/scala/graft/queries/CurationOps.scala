@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 
 /** Round-3 training-data curation operators: the pipeline steps a
@@ -786,27 +787,15 @@ object CurationOps {
       |  count(DISTINCT source)::BIGINT AS n_sources
       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q101_seq_packing" -> (q101 _), "q102_contamination" -> (q102 _),
-    "q103_embedding_stats" -> (q103 _), "q104_repetition" -> (q104 _),
-    "q105_rare_tokens" -> (q105 _), "q106_jsonl_ingest" -> (q106 _),
-    "q107_quota_sample" -> (q107 _), "q108_incremental_dedup" -> (q108 _),
-    "q110_overlap_chunking" -> (q110 _), "q111_corpus_mix" -> (q111 _),
-    "q112_best_per_lang" -> (q112 _), "q119_paragraph_dedup" -> (q119 _),
-    "q120_epoch_shuffle" -> (q120 _), "q121_redaction" -> (q121 _),
-    "q126_curation_v2" -> (q126 _), "q136_data_card" -> (q136 _),
-    "q137_token_budget" -> (q137 _), "q139_range_shards" -> (q139 _),
-    "q141_release_report" -> (q141 _), "q142_partitioned_sink" -> (q142 _))
-
-  val oracle: Map[String, String] = Map(
-    "q101_seq_packing" -> q101Sql, "q102_contamination" -> q102Sql,
-    "q103_embedding_stats" -> q103Sql, "q104_repetition" -> q104Sql,
-    "q105_rare_tokens" -> q105Sql, "q106_jsonl_ingest" -> q106Sql,
-    "q107_quota_sample" -> q107Sql, "q108_incremental_dedup" -> q108Sql,
-    "q110_overlap_chunking" -> q110Sql, "q111_corpus_mix" -> q111Sql,
-    "q112_best_per_lang" -> q112Sql, "q119_paragraph_dedup" -> q119Sql,
-    "q120_epoch_shuffle" -> q120Sql, "q121_redaction" -> q121Sql,
-    "q126_curation_v2" -> q126Sql, "q136_data_card" -> q136Sql,
-    "q137_token_budget" -> q137Sql, "q139_range_shards" -> q139Sql,
-    "q141_release_report" -> q141Sql, "q142_partitioned_sink" -> q142Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q101_seq_packing", q101, q101Sql), Gate("q102_contamination", q102, q102Sql),
+    Gate("q103_embedding_stats", q103, q103Sql), Gate("q104_repetition", q104, q104Sql),
+    Gate("q105_rare_tokens", q105, q105Sql), Gate("q106_jsonl_ingest", q106, q106Sql),
+    Gate("q107_quota_sample", q107, q107Sql), Gate("q108_incremental_dedup", q108, q108Sql),
+    Gate("q110_overlap_chunking", q110, q110Sql), Gate("q111_corpus_mix", q111, q111Sql),
+    Gate("q112_best_per_lang", q112, q112Sql), Gate("q119_paragraph_dedup", q119, q119Sql),
+    Gate("q120_epoch_shuffle", q120, q120Sql), Gate("q121_redaction", q121, q121Sql),
+    Gate("q126_curation_v2", q126, q126Sql), Gate("q136_data_card", q136, q136Sql),
+    Gate("q137_token_budget", q137, q137Sql), Gate("q139_range_shards", q139, q139Sql),
+    Gate("q141_release_report", q141, q141Sql), Gate("q142_partitioned_sink", q142, q142Sql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 
 /** Training-data deduplication operators over the `documents` table:
@@ -979,24 +980,12 @@ object DedupOps {
       |    AS BIGINT) uncapped_pair_mass,
       |  CAST((SELECT count(*) FROM good) AS BIGINT) n_pairs""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q31_dedup_exact" -> (q31 _), "q32_ngram_jaccard" -> (q32 _),
-    "q166_skew_stress" -> (q166 _),
-    "q33_minhash_lsh" -> (q33 _), "q34_simhash" -> (q34 _),
-    "q169_simhash_paircount" -> (q169 _),
-    "q162_incremental_index" -> (q162 _),
-    "q40_winnow_fingerprint" -> (q40 _), "q59_dup_clusters" -> (q59 _),
-    "q115_minhash_recall" -> (q115 _), "q135_span_overlap" -> (q135 _),
-    "q140_leakage_split" -> (q140 _), "q154_cluster_audit" -> (q154 _),
-    "q62_curation_pipeline" -> (q62 _))
-
-  val oracle: Map[String, String] = Map(
-    "q31_dedup_exact" -> q31Sql, "q32_ngram_jaccard" -> q32Sql,
-    "q166_skew_stress" -> q166Sql,
-    "q33_minhash_lsh" -> q33Sql, "q34_simhash" -> q34Sql,
-    "q169_simhash_paircount" -> q169Sql,
-    "q162_incremental_index" -> q162Sql,
-    "q40_winnow_fingerprint" -> q40Sql, "q115_minhash_recall" -> q115Sql, "q59_dup_clusters" -> q59Sql,
-    "q135_span_overlap" -> q135Sql, "q140_leakage_split" -> q140Sql,
-    "q154_cluster_audit" -> q154Sql, "q62_curation_pipeline" -> q62Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q31_dedup_exact", q31, q31Sql), Gate("q32_ngram_jaccard", q32, q32Sql),
+    Gate("q166_skew_stress", q166, q166Sql), Gate("q33_minhash_lsh", q33, q33Sql),
+    Gate("q34_simhash", q34, q34Sql), Gate("q169_simhash_paircount", q169, q169Sql),
+    Gate("q162_incremental_index", q162, q162Sql), Gate("q40_winnow_fingerprint", q40, q40Sql),
+    Gate("q59_dup_clusters", q59, q59Sql), Gate("q115_minhash_recall", q115, q115Sql),
+    Gate("q135_span_overlap", q135, q135Sql), Gate("q140_leakage_split", q140, q140Sql),
+    Gate("q154_cluster_audit", q154, q154Sql), Gate("q62_curation_pipeline", q62, q62Sql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 import graft.engine._
 import graft.cdc.ChangelogDiff
@@ -401,19 +402,10 @@ object EngineOps {
       |UNION ALL SELECT 'h2', 'NDAYS.val', nd2::DOUBLE FROM t
       |ORDER BY grp, expr""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q41_domain_compiler" -> (q41 _), "q42_date_scopes" -> (q42 _),
-    "q43_column_groups" -> (q43 _), "q44_agg_fixpoint" -> (q44 _),
-    "q117_executive_summary" -> (q117 _),
-    "q45_account_codes" -> (q45 _), "q46_cdc_diff" -> (q46 _),
-    "q49_tax_tags" -> (q49 _), "q60_ec_sales" -> (q60 _),
-    "q156_read_log" -> (q156 _))
-
-  val oracle: Map[String, String] = Map(
-    "q41_domain_compiler" -> q41Sql, "q42_date_scopes" -> q42Sql,
-    "q43_column_groups" -> q43Sql, "q44_agg_fixpoint" -> q44Sql,
-    "q117_executive_summary" -> q117Sql,
-    "q45_account_codes" -> q45Sql, "q46_cdc_diff" -> q46Sql,
-    "q49_tax_tags" -> q49Sql, "q60_ec_sales" -> q60Sql,
-    "q156_read_log" -> q156Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q41_domain_compiler", q41, q41Sql), Gate("q42_date_scopes", q42, q42Sql),
+    Gate("q43_column_groups", q43, q43Sql), Gate("q44_agg_fixpoint", q44, q44Sql),
+    Gate("q117_executive_summary", q117, q117Sql), Gate("q45_account_codes", q45, q45Sql),
+    Gate("q46_cdc_diff", q46, q46Sql), Gate("q49_tax_tags", q49, q49Sql),
+    Gate("q60_ec_sales", q60, q60Sql), Gate("q156_read_log", q156, q156Sql))
 }

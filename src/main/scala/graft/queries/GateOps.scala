@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.Queries.Gate
 import graft.{SessionConf, Tables}
 import graft.engine.{BranchContext, Domain, ExternalValues, ReportRunner => RR}
 import graft.report.LineTree
@@ -22,8 +23,6 @@ object GateOps {
   /** floor(x·100+0.5)/100 — deterministic 2-decimal rounding computed the
     * same way driver-side and in DuckDB (see [[Parity.fr]]). */
   private def r2(v: Double): Double = math.floor(v * 100 + 0.5) / 100
-
-  private def deleteRec(f: java.io.File): Unit = graft.Scratch.deleteRec(f)
 
   /** q65 — external engine (§2.5) end-to-end WITH carryover
     * (account_report.py:2866-2943 sum/most_recent, :2971-3057 carryover):
@@ -52,7 +51,7 @@ object GateOps {
     // period-1 run, then the carryover round-trip through parquet
     val t1 = RR.run(ctx, exprs, groups.take(1))
     val dir = new java.io.File("/root/repo/target/gate_ext_carry")
-    deleteRec(dir)
+    graft.Scratch.deleteRec(dir)
     ExternalValues.carryover(s, Map("CARRY.val" -> t1("h1")("SUM.val")),
       "1995-07-01", dir.getPath)
     val extAll = ext0.unionByName(ExternalValues.load(s, dir.getPath)
@@ -401,14 +400,8 @@ object GateOps {
     * and an mtime tie could deliver a later batch first — e.g. q157's
     * write/unlink deltas before their creates, which the n>0 snapshot
     * pruning then legitimately drops. */
-  private[graft] def stageBatches(staged: DataFrame, n: Int, tag: String): java.io.File =
-    stageBatchesInto(staged, n, tag, graft.Scratch.fresh(s"${tag}_src"))
-
-  /** [[stageBatches]] into a caller-provided src dir — lets a gate lay its
-    * sentinel batches on top of memo-copied quartile files (the batch
-    * numbers continue, so the later mtime base keeps arrival order). */
-  private[graft] def stageBatchesInto(staged: DataFrame, n: Int, tag: String,
-      src: java.io.File): java.io.File = {
+  private[graft] def stageBatches(staged: DataFrame, n: Int, tag: String): java.io.File = {
+    val src = graft.Scratch.fresh(s"${tag}_src")
     val tmp = graft.Scratch.fresh(s"${tag}_tmp")
     staged.coalesce(1).write.mode("overwrite")
       .partitionBy("__b").parquet(tmp.getPath)
@@ -1724,42 +1717,22 @@ object GateOps {
       |  CAST(count(*) - count(DISTINCT k) AS BIGINT) n_dupes
       |FROM g GROUP BY y ORDER BY y""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q155_sequence_gaps" -> (q155 _), "q157_stream_maintain" -> (q157 _),
-    "q158_qc_overview" -> (q158 _), "q159_stream_sessionize" -> (q159 _),
-    "q160_stream_dedup" -> (q160 _), "q161_stream_bloom" -> (q161 _),
-    "q163_stream_join" -> (q163 _), "q164_stream_outer_join" -> (q164 _),
-    "q165_stream_restart" -> (q165 _), "q167_stream_hourly" -> (q167 _),
-    "q168_stream_dropdup" -> (q168 _),
-    "q89_wav_decode" -> (q89 _), "q122_quality_audit" -> (q122 _),
-    "q132_video_frames" -> (q132 _),
-    "q123_skew_profile" -> (q123 _), "q124_table_profile" -> (q124 _),
-    "q125_zorder_key" -> (q125 _),
-    "q65_external_carryover" -> (q65 _), "q66_line_tree_render" -> (q66 _),
-    "q67_csv_ingest" -> (q67 _), "q68_branch_security" -> (q68 _),
-    "q69_multimodal_meta" -> (q69 _), "q70_like_domain" -> (q70 _),
-    "q71_report_spec" -> (q71 _), "q72_cross_report" -> (q72 _),
-    "q73_prefix_regroup" -> (q73 _), "q74_journal_report" -> (q74 _),
-    "q75_sessionize" -> (q75 _), "q88_ppm_decode" -> (q88 _),
-    "q109_domain_negation" -> (q109 _), "q113_bank_reconciliation" -> (q113 _), "q116_match_suggestions" -> (q116 _),
-    "q118_cheque_lines" -> (q118 _))
-
-  val oracle: Map[String, String] = Map(
-    "q65_external_carryover" -> q65Sql, "q66_line_tree_render" -> q66Sql,
-    "q67_csv_ingest" -> q67Sql, "q68_branch_security" -> q68Sql,
-    "q69_multimodal_meta" -> q69Sql, "q70_like_domain" -> q70Sql,
-    "q71_report_spec" -> q71Sql, "q72_cross_report" -> q72Sql,
-    "q73_prefix_regroup" -> q73Sql, "q74_journal_report" -> q74Sql,
-    "q75_sessionize" -> q75Sql, "q88_ppm_decode" -> q88Sql,
-    "q89_wav_decode" -> q89Sql, "q109_domain_negation" -> q109Sql,
-    "q113_bank_reconciliation" -> q113Sql, "q116_match_suggestions" -> q116Sql,
-    "q122_quality_audit" -> q122Sql, "q123_skew_profile" -> q123Sql,
-    "q124_table_profile" -> q124Sql, "q125_zorder_key" -> q125Sql,
-    "q132_video_frames" -> q132Sql, "q155_sequence_gaps" -> q155Sql,
-    "q118_cheque_lines" -> q118Sql, "q157_stream_maintain" -> q157Sql,
-    "q158_qc_overview" -> q158Sql, "q159_stream_sessionize" -> q159Sql,
-    "q160_stream_dedup" -> q160Sql, "q161_stream_bloom" -> q161Sql,
-    "q163_stream_join" -> q163Sql, "q164_stream_outer_join" -> q164Sql,
-    "q165_stream_restart" -> q165Sql, "q167_stream_hourly" -> q167Sql,
-    "q168_stream_dropdup" -> q168Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q155_sequence_gaps", q155, q155Sql), Gate("q157_stream_maintain", q157, q157Sql),
+    Gate("q158_qc_overview", q158, q158Sql), Gate("q159_stream_sessionize", q159, q159Sql),
+    Gate("q160_stream_dedup", q160, q160Sql), Gate("q161_stream_bloom", q161, q161Sql),
+    Gate("q163_stream_join", q163, q163Sql), Gate("q164_stream_outer_join", q164, q164Sql),
+    Gate("q165_stream_restart", q165, q165Sql), Gate("q167_stream_hourly", q167, q167Sql),
+    Gate("q168_stream_dropdup", q168, q168Sql), Gate("q89_wav_decode", q89, q89Sql),
+    Gate("q122_quality_audit", q122, q122Sql), Gate("q132_video_frames", q132, q132Sql),
+    Gate("q123_skew_profile", q123, q123Sql), Gate("q124_table_profile", q124, q124Sql),
+    Gate("q125_zorder_key", q125, q125Sql), Gate("q65_external_carryover", q65, q65Sql),
+    Gate("q66_line_tree_render", q66, q66Sql), Gate("q67_csv_ingest", q67, q67Sql),
+    Gate("q68_branch_security", q68, q68Sql), Gate("q69_multimodal_meta", q69, q69Sql),
+    Gate("q70_like_domain", q70, q70Sql), Gate("q71_report_spec", q71, q71Sql),
+    Gate("q72_cross_report", q72, q72Sql), Gate("q73_prefix_regroup", q73, q73Sql),
+    Gate("q74_journal_report", q74, q74Sql), Gate("q75_sessionize", q75, q75Sql),
+    Gate("q88_ppm_decode", q88, q88Sql), Gate("q109_domain_negation", q109, q109Sql),
+    Gate("q113_bank_reconciliation", q113, q113Sql), Gate("q116_match_suggestions", q116, q116Sql),
+    Gate("q118_cheque_lines", q118, q118Sql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 import Parity.fr
 
@@ -437,23 +438,13 @@ object RelationalA {
       |JOIN nation ON c_nationkey = n_nationkey
       |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q64_local_supplier" -> (q64 _),
-    "q1_agg" -> (q1 _), "q2_date_scope" -> (q2 _), "q3_star_join" -> (q3 _),
-    "q4_rate_round" -> (q4 _), "q5_bridge_join" -> (q5 _),
-    "q6_or_join_union" -> (q6 _), "q7_decorrelated_lateral" -> (q7 _),
-    "q8_age_buckets" -> (q8 _), "q9_semi_anti" -> (q9 _),
-    "q10_prefix_membership" -> (q10 _), "q11_sign_split" -> (q11 _),
-    "q12_signed_agg" -> (q12 _), "q13_having" -> (q13 _),
-    "q14_sum_if_pos" -> (q14 _), "q15_weighted_avg" -> (q15 _))
-
-  val oracle: Map[String, String] = Map(
-    "q64_local_supplier" -> q64Sql,
-    "q1_agg" -> q1Sql, "q2_date_scope" -> q2Sql, "q3_star_join" -> q3Sql,
-    "q4_rate_round" -> q4Sql, "q5_bridge_join" -> q5Sql,
-    "q6_or_join_union" -> q6Sql, "q7_decorrelated_lateral" -> q7Sql,
-    "q8_age_buckets" -> q8Sql, "q9_semi_anti" -> q9Sql,
-    "q10_prefix_membership" -> q10Sql, "q11_sign_split" -> q11Sql,
-    "q12_signed_agg" -> q12Sql, "q13_having" -> q13Sql,
-    "q14_sum_if_pos" -> q14Sql, "q15_weighted_avg" -> q15Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q64_local_supplier", q64, q64Sql), Gate("q1_agg", q1, q1Sql),
+    Gate("q2_date_scope", q2, q2Sql), Gate("q3_star_join", q3, q3Sql),
+    Gate("q4_rate_round", q4, q4Sql), Gate("q5_bridge_join", q5, q5Sql),
+    Gate("q6_or_join_union", q6, q6Sql), Gate("q7_decorrelated_lateral", q7, q7Sql),
+    Gate("q8_age_buckets", q8, q8Sql), Gate("q9_semi_anti", q9, q9Sql),
+    Gate("q10_prefix_membership", q10, q10Sql), Gate("q11_sign_split", q11, q11Sql),
+    Gate("q12_signed_agg", q12, q12Sql), Gate("q13_having", q13, q13Sql),
+    Gate("q14_sum_if_pos", q14, q14Sql), Gate("q15_weighted_avg", q15, q15Sql))
 }

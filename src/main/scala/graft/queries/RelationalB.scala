@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 
 /** SURVEY §2 operators q16–q30: in/out ledgers (A11), multi-period column
@@ -621,35 +622,18 @@ object RelationalB {
       |WHERE levenshtein(a.n_name, b.n_name) <= 2
       |ORDER BY name_a, name_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q57_asof_join" -> (q57 _), "q58_range_join" -> (q58 _),
-    "q61_array_agg" -> (q61 _),
-    "q86_percentiles" -> (q86 _), "q87_unpivot" -> (q87 _),
-    "q94_analytic_distribution" -> (q94 _), "q95_forward_fill" -> (q95 _),
-    "q97_cube" -> (q97 _), "q98_intersect_except" -> (q98 _),
-    "q99_edit_distance" -> (q99 _),
-    "q16_in_minus_out" -> (q16 _), "q17_multi_period" -> (q17 _),
-    "q18_growth" -> (q18 _), "q19_rollup" -> (q19 _),
-    "q20_running_balance" -> (q20 _), "q21_most_recent" -> (q21 _),
-    "q22_first_per_month" -> (q22 _), "q23_pagination" -> (q23 _),
-    "q24_prefix_group" -> (q24 _), "q25_union_sources" -> (q25 _),
-    "q26_scalar_funcs" -> (q26 _), "q27_json_extract" -> (q27 _),
-    "q28_search_filter" -> (q28 _), "q29_explode_tokens" -> (q29 _),
-    "q30_events_hourly" -> (q30 _))
-
-  val oracle: Map[String, String] = Map(
-    "q57_asof_join" -> q57Sql, "q58_range_join" -> q58Sql,
-    "q61_array_agg" -> q61Sql,
-    "q86_percentiles" -> q86Sql, "q87_unpivot" -> q87Sql,
-    "q94_analytic_distribution" -> q94Sql, "q95_forward_fill" -> q95Sql,
-    "q97_cube" -> q97Sql, "q98_intersect_except" -> q98Sql,
-    "q99_edit_distance" -> q99Sql,
-    "q16_in_minus_out" -> q16Sql, "q17_multi_period" -> q17Sql,
-    "q18_growth" -> q18Sql, "q19_rollup" -> q19Sql,
-    "q20_running_balance" -> q20Sql, "q21_most_recent" -> q21Sql,
-    "q22_first_per_month" -> q22Sql, "q23_pagination" -> q23Sql,
-    "q24_prefix_group" -> q24Sql, "q25_union_sources" -> q25Sql,
-    "q26_scalar_funcs" -> q26Sql, "q27_json_extract" -> q27Sql,
-    "q28_search_filter" -> q28Sql, "q29_explode_tokens" -> q29Sql,
-    "q30_events_hourly" -> q30Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q57_asof_join", q57, q57Sql), Gate("q58_range_join", q58, q58Sql),
+    Gate("q61_array_agg", q61, q61Sql), Gate("q86_percentiles", q86, q86Sql),
+    Gate("q87_unpivot", q87, q87Sql), Gate("q94_analytic_distribution", q94, q94Sql),
+    Gate("q95_forward_fill", q95, q95Sql), Gate("q97_cube", q97, q97Sql),
+    Gate("q98_intersect_except", q98, q98Sql), Gate("q99_edit_distance", q99, q99Sql),
+    Gate("q16_in_minus_out", q16, q16Sql), Gate("q17_multi_period", q17, q17Sql),
+    Gate("q18_growth", q18, q18Sql), Gate("q19_rollup", q19, q19Sql),
+    Gate("q20_running_balance", q20, q20Sql), Gate("q21_most_recent", q21, q21Sql),
+    Gate("q22_first_per_month", q22, q22Sql), Gate("q23_pagination", q23, q23Sql),
+    Gate("q24_prefix_group", q24, q24Sql), Gate("q25_union_sources", q25, q25Sql),
+    Gate("q26_scalar_funcs", q26, q26Sql), Gate("q27_json_extract", q27, q27Sql),
+    Gate("q28_search_filter", q28, q28Sql), Gate("q29_explode_tokens", q29, q29Sql),
+    Gate("q30_events_hourly", q30, q30Sql))
 }

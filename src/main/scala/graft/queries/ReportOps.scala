@@ -3,6 +3,7 @@ package graft.queries
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.{SessionConf, Tables}
 import graft.report.Handlers
 
@@ -856,6 +857,22 @@ object ReportOps {
       |       round(sum(sg * m3), 2) AS t10_c
       |FROM step6""".stripMargin
 
+  /** A tax-totals footer as (sec, name, base_amount, tax_amount, amount)
+    * rows: 1 = groups, 2 = preceding subtotals, 3 = the invoice totals
+    * (the q174 and q179 layout). */
+  private def footer(s: SparkSession, t: graft.report.TaxTotals.Totals): DataFrame = {
+    val s0 = s; import s0.implicits._
+    val rows =
+      t.groups.map(g => (1L, g.group.name, Option(g.baseAmount),
+        Option(g.taxAmount), Option.empty[Double])) ++
+      t.subtotals.map(st => (2L, st.name, Option.empty[Double],
+        Option.empty[Double], Option(st.amount))) :+
+      ((3L, "(totals)", Option(t.amountUntaxed), Option(t.amountTax),
+        Option(t.amountTotal)))
+    rows.toDF("sec", "name", "base_amount", "tax_amount", "amount")
+      .orderBy(col("sec"), col("name"))
+  }
+
   /** q174 — the invoice tax-totals summary ([[graft.report.TaxTotals]],
     * etl_account/models/account_tax.py:354-530) over q173's compiled
     * lines: a 10% include_base_amount tax and a 20% tax SHARING one tax
@@ -870,7 +887,6 @@ object ReportOps {
     import graft.engine.TaxCompute.TaxDef
     import graft.report.TaxTotals
     import graft.report.TaxTotals.GroupDef
-    val s0 = s; import s0.implicits._
     val g1 = GroupDef(1, "Taxes", sequence = 1)
     val g2 = GroupDef(2, "Withholding", sequence = 2,
       precedingSubtotal = Some("Withholding"))
@@ -890,15 +906,7 @@ object ReportOps {
         (col("l_orderkey") % 7 =!= 0).as("taxed"))
     val t = TaxTotals.prepareTaxTotals(li, col("rec"), col("p"), col("q"),
       col("disc"), col("taxed"), chain, Map(1L -> g1, 2L -> g1, 3L -> g2))
-    val rows =
-      t.groups.map(g => (1L, g.group.name, Option(g.baseAmount),
-        Option(g.taxAmount), Option.empty[Double])) ++
-      t.subtotals.map(st => (2L, st.name, Option.empty[Double],
-        Option.empty[Double], Option(st.amount))) :+
-      ((3L, "(totals)", Option(t.amountUntaxed), Option(t.amountTax),
-        Option(t.amountTotal)))
-    rows.toDF("sec", "name", "base_amount", "tax_amount", "amount")
-      .orderBy(col("sec"), col("name"))
+    footer(s, t)
   }
 
   val q174Sql: String =
@@ -1186,18 +1194,9 @@ object ReportOps {
     * it). Output = the q174 footer layout. */
   def q179(s: SparkSession, d: String): DataFrame = {
     import graft.report.TaxTotals
-    val s0 = s; import s0.implicits._
     val t = TaxTotals.prepareTaxTotalsMulti(taxCorpus(s, d), col("rec"),
       col("price"), col("qty"), col("disc"), col("k"), taxChains, taxGroups)
-    val rows =
-      t.groups.map(g => (1L, g.group.name, Option(g.baseAmount),
-        Option(g.taxAmount), Option.empty[Double])) ++
-      t.subtotals.map(st => (2L, st.name, Option.empty[Double],
-        Option.empty[Double], Option(st.amount))) :+
-      ((3L, "(totals)", Option(t.amountUntaxed), Option(t.amountTax),
-        Option(t.amountTotal)))
-    rows.toDF("sec", "name", "base_amount", "tax_amount", "amount")
-      .orderBy(col("sec"), col("name"))
+    footer(s, t)
   }
 
   val q179Sql: String =
@@ -1427,37 +1426,16 @@ object ReportOps {
       |       round(sum(tax_amount), 2) AS tax_amount
       |FROM flt GROUP BY gid ORDER BY gid""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q47_general_ledger" -> (q47 _), "q48_aged_handler" -> (q48 _),
-    "q50_running_ledger" -> (q50 _), "q51_groupby_chain" -> (q51 _),
-    "q53_pivot_register" -> (q53 _), "q54_report_runner" -> (q54 _),
-    "q55_multicurrency_reval" -> (q55 _), "q56_cash_flow" -> (q56 _),
-    "q170_cash_flow_statement" -> (q170 _), "q171_vat_closing" -> (q171 _),
-    "q172_generic_tax_report" -> (q172 _), "q173_tax_compute" -> (q173 _),
-    "q174_tax_totals" -> (q174 _), "q175_journal_scoped_report" -> (q175 _),
-    "q176_line_totals" -> (q176 _),
-    "q177_tax_details_per_record" -> (q177 _),
-    "q178_tax_totals_company" -> (q178 _),
-    "q179_tax_totals_multichain" -> (q179 _),
-    "q180_register_tax_totals" -> (q180 _),
-    "q181_cash_rounding_footer" -> (q181 _),
-    "q182_tax_agg_by_tax" -> (q182 _),
-    "q183_tax_agg_filtered" -> (q183 _))
-
-  val oracle: Map[String, String] = Map(
-    "q47_general_ledger" -> q47Sql, "q48_aged_handler" -> q48Sql,
-    "q50_running_ledger" -> q50Sql, "q51_groupby_chain" -> q51Sql,
-    "q53_pivot_register" -> q53Sql, "q54_report_runner" -> q54Sql,
-    "q55_multicurrency_reval" -> q55Sql, "q56_cash_flow" -> q56Sql,
-    "q170_cash_flow_statement" -> q170Sql, "q171_vat_closing" -> q171Sql,
-    "q172_generic_tax_report" -> q172Sql, "q173_tax_compute" -> q173Sql,
-    "q174_tax_totals" -> q174Sql, "q175_journal_scoped_report" -> q175Sql,
-    "q176_line_totals" -> q176Sql,
-    "q177_tax_details_per_record" -> q177Sql,
-    "q178_tax_totals_company" -> q178Sql,
-    "q179_tax_totals_multichain" -> q179Sql,
-    "q180_register_tax_totals" -> q180Sql,
-    "q181_cash_rounding_footer" -> q181Sql,
-    "q182_tax_agg_by_tax" -> q182Sql,
-    "q183_tax_agg_filtered" -> q183Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q47_general_ledger", q47, q47Sql), Gate("q48_aged_handler", q48, q48Sql),
+    Gate("q50_running_ledger", q50, q50Sql), Gate("q51_groupby_chain", q51, q51Sql),
+    Gate("q53_pivot_register", q53, q53Sql), Gate("q54_report_runner", q54, q54Sql),
+    Gate("q55_multicurrency_reval", q55, q55Sql), Gate("q56_cash_flow", q56, q56Sql),
+    Gate("q170_cash_flow_statement", q170, q170Sql), Gate("q171_vat_closing", q171, q171Sql),
+    Gate("q172_generic_tax_report", q172, q172Sql), Gate("q173_tax_compute", q173, q173Sql),
+    Gate("q174_tax_totals", q174, q174Sql), Gate("q175_journal_scoped_report", q175, q175Sql),
+    Gate("q176_line_totals", q176, q176Sql), Gate("q177_tax_details_per_record", q177, q177Sql),
+    Gate("q178_tax_totals_company", q178, q178Sql), Gate("q179_tax_totals_multichain", q179, q179Sql),
+    Gate("q180_register_tax_totals", q180, q180Sql), Gate("q181_cash_rounding_footer", q181, q181Sql),
+    Gate("q182_tax_agg_by_tax", q182, q182Sql), Gate("q183_tax_agg_filtered", q183, q183Sql))
 }

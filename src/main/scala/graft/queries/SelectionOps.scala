@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 
 /** Round-4 data-SELECTION operators: the steps that decide WHICH documents
@@ -997,19 +998,11 @@ object SelectionOps {
        |FROM r ORDER BY lang""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q143_dsir_weights" -> (q143 _), "q144_bloom_screen" -> (q144 _),
-    "q145_semantic_dedup" -> (q145 _), "q146_coreset_kcenter" -> (q146 _),
-    "q147_pq_codes" -> (q147 _), "q148_pq_adc_recall" -> (q148 _),
-    "q149_weighted_sample" -> (q149 _), "q150_selection_pipeline" -> (q150 _),
-    "q151_ivfpq_search" -> (q151 _), "q152_kanon_release" -> (q152 _),
-    "q153_temperature_mix" -> (q153 _))
-
-  val oracle: Map[String, String] = Map(
-    "q143_dsir_weights" -> q143Sql, "q144_bloom_screen" -> q144Sql,
-    "q145_semantic_dedup" -> q145Sql, "q146_coreset_kcenter" -> q146Sql,
-    "q147_pq_codes" -> q147Sql, "q148_pq_adc_recall" -> q148Sql,
-    "q149_weighted_sample" -> q149Sql, "q150_selection_pipeline" -> q150Sql,
-    "q151_ivfpq_search" -> q151Sql, "q152_kanon_release" -> q152Sql,
-    "q153_temperature_mix" -> q153Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q143_dsir_weights", q143, q143Sql), Gate("q144_bloom_screen", q144, q144Sql),
+    Gate("q145_semantic_dedup", q145, q145Sql), Gate("q146_coreset_kcenter", q146, q146Sql),
+    Gate("q147_pq_codes", q147, q147Sql), Gate("q148_pq_adc_recall", q148, q148Sql),
+    Gate("q149_weighted_sample", q149, q149Sql), Gate("q150_selection_pipeline", q150, q150Sql),
+    Gate("q151_ivfpq_search", q151, q151Sql), Gate("q152_kanon_release", q152, q152Sql),
+    Gate("q153_temperature_mix", q153, q153Sql))
 }

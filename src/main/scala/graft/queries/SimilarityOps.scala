@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
@@ -590,17 +591,10 @@ object SimilarityOps {
       |FROM exact5 x LEFT JOIN ivf5 i ON i.query_id = x.query_id
       |ORDER BY x.query_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q35_cosine_topk" -> (q35 _), "q36_ann_lsh_buckets" -> (q36 _),
-    "q52_ann_ivf" -> (q52 _), "q63_embedding_neardup" -> (q63 _),
-    "q76_ann_ivf_multiprobe" -> (q76 _), "q77_topk_native_agg" -> (q77 _),
-    "q85_kmeans_quantizer" -> (q85 _), "q90_ann_recall" -> (q90 _),
-    "q114_cell_purity" -> (q114 _))
-
-  val oracle: Map[String, String] = Map(
-    "q35_cosine_topk" -> q35Sql, "q36_ann_lsh_buckets" -> q36Sql,
-    "q52_ann_ivf" -> q52Sql, "q63_embedding_neardup" -> q63Sql,
-    "q76_ann_ivf_multiprobe" -> q76Sql, "q77_topk_native_agg" -> q77Sql,
-    "q85_kmeans_quantizer" -> q85Sql, "q90_ann_recall" -> q90Sql,
-    "q114_cell_purity" -> q114Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q35_cosine_topk", q35, q35Sql), Gate("q36_ann_lsh_buckets", q36, q36Sql),
+    Gate("q52_ann_ivf", q52, q52Sql), Gate("q63_embedding_neardup", q63, q63Sql),
+    Gate("q76_ann_ivf_multiprobe", q76, q76Sql), Gate("q77_topk_native_agg", q77, q77Sql),
+    Gate("q85_kmeans_quantizer", q85, q85Sql), Gate("q90_ann_recall", q90, q90Sql),
+    Gate("q114_cell_purity", q114, q114Sql))
 }

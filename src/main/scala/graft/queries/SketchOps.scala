@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 import graft.cdc.ChangelogApply
 import graft.functions.TopKByScore
@@ -300,15 +301,9 @@ object SketchOps {
       |JOIN nation ON c_nationkey = n_nationkey
       |GROUP BY n_name ORDER BY n_name""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q81_cdc_apply" -> (q81 _), "q82_kmv_distinct" -> (q82 _),
-    "q83_stratified_split" -> (q83 _), "q91_histogram" -> (q91 _),
-    "q92_merge_upsert" -> (q92 _), "q93_scd2_history" -> (q93 _),
-    "q96_cohort_retention" -> (q96 _), "q100_approx_sketches" -> (q100 _))
-
-  def oracle: Map[String, String] = Map(
-    "q81_cdc_apply" -> q81Sql, "q82_kmv_distinct" -> q82Sql,
-    "q83_stratified_split" -> q83Sql, "q91_histogram" -> q91Sql,
-    "q92_merge_upsert" -> q92Sql, "q93_scd2_history" -> q93Sql,
-    "q96_cohort_retention" -> q96Sql, "q100_approx_sketches" -> q100Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q81_cdc_apply", q81, q81Sql), Gate("q82_kmv_distinct", q82, q82Sql),
+    Gate("q83_stratified_split", q83, q83Sql), Gate("q91_histogram", q91, q91Sql),
+    Gate("q92_merge_upsert", q92, q92Sql), Gate("q93_scd2_history", q93, q93Sql),
+    Gate("q96_cohort_retention", q96, q96Sql), Gate("q100_approx_sketches", q100, q100Sql))
 }

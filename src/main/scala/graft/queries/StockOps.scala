@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 import graft.operators.FifoValuation
 
@@ -197,11 +198,7 @@ object StockOps {
       |SELECT root, node, CAST(min(depth) AS BIGINT) AS depth
       |FROM reach GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q78_fifo_remaining" -> (q78 _), "q79_fifo_allocation" -> (q79 _),
-    "q80_traceability" -> (q80 _))
-
-  def oracle: Map[String, String] = Map(
-    "q78_fifo_remaining" -> q78Sql, "q79_fifo_allocation" -> q79Sql,
-    "q80_traceability" -> q80Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q78_fifo_remaining", q78, q78Sql), Gate("q79_fifo_allocation", q79, q79Sql),
+    Gate("q80_traceability", q80, q80Sql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 
 /** Text-analysis operators for a training-data pipeline, over `documents`:
@@ -287,13 +288,8 @@ object TextOps {
       |FROM bg JOIN model USING (bg)
       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q37_langid" -> (q37 _), "q38_quality_score" -> (q38 _),
-    "q39_token_count" -> (q39 _), "q84_tfidf_topterms" -> (q84 _),
-    "q134_bigram_vocab" -> (q134 _), "q138_bigram_lm" -> (q138 _))
-
-  val oracle: Map[String, String] = Map(
-    "q37_langid" -> q37Sql, "q38_quality_score" -> q38Sql,
-    "q39_token_count" -> q39Sql, "q84_tfidf_topterms" -> q84Sql,
-    "q134_bigram_vocab" -> q134Sql, "q138_bigram_lm" -> q138Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q37_langid", q37, q37Sql), Gate("q38_quality_score", q38, q38Sql),
+    Gate("q39_token_count", q39, q39Sql), Gate("q84_tfidf_topterms", q84, q84Sql),
+    Gate("q134_bigram_vocab", q134, q134Sql), Gate("q138_bigram_lm", q138, q138Sql))
 }

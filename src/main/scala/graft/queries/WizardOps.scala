@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Queries.Gate
 import graft.Tables
 
 /** Round-4 wizard-register gates — the composed twins the round-3 verdict
@@ -326,19 +327,8 @@ object WizardOps {
       |FROM bd JOIN bn ON bd.j = bn.j AND bd.rk = bn.rk
       |ORDER BY journal, old_name""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q133_resequence" -> (q133 _),
-    "q127_document_summary" -> (q127 _),
-    "q128_serial_register" -> (q128 _),
-    "q129_statement_import" -> (q129 _),
-    "q130_stock_reconcile" -> (q130 _),
-    "q131_audit_value_pairs" -> (q131 _))
-
-  def oracle: Map[String, String] = Map(
-    "q133_resequence" -> q133Sql,
-    "q127_document_summary" -> q127Sql,
-    "q128_serial_register" -> q128Sql,
-    "q129_statement_import" -> q129Sql,
-    "q130_stock_reconcile" -> q130Sql,
-    "q131_audit_value_pairs" -> q131Sql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q133_resequence", q133, q133Sql), Gate("q127_document_summary", q127, q127Sql),
+    Gate("q128_serial_register", q128, q128Sql), Gate("q129_statement_import", q129, q129Sql),
+    Gate("q130_stock_reconcile", q130, q130Sql), Gate("q131_audit_value_pairs", q131, q131Sql))
 }

@@ -208,6 +208,27 @@ class HarnessContractSpec extends AnyFunSuite with SparkSpec {
     assert(Bench.parseChildLine("""{"metric":"run","garbage":true}""").isEmpty)
   }
 
+  test("the JSON string escaper round-trips quotes, backslashes and control chars") {
+    // Bench's result lines and Verify's oracle_sql.json share one escaper;
+    // an unescaped control char makes the whole document unreadable
+    val raw = "a\"b\\c\nd\te\u0001f"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue("\"" + Bench.jstr(raw) + "\"", classOf[String])
+    assert(parsed == raw)
+  }
+
+  test("Scratch.fresh clears a symlink without touching its target") {
+    // a delete that follows the link would empty the linked dir (the
+    // ScaleStress corpus dirs link into the read-only base testdata)
+    val target = Files.createTempDirectory(Paths.get("target"), "linktarget")
+    Files.writeString(target.resolve("keep.txt"), "keep")
+    val dir = Scratch.fresh("symlink_probe").toPath
+    Files.createSymbolicLink(dir.resolve("link"), target.toAbsolutePath)
+    assert(Scratch.fresh("symlink_probe").list().isEmpty)
+    assert(Files.readString(target.resolve("keep.txt")) == "keep")
+    Scratch.deleteRec(target.toFile)
+  }
+
   test("Bench setup ledger is consumer-gated and builds the real memos") {
     // the memos are per application, which the whole suite shares: drop
     // any an earlier spec built on this dir, so the builds below are real
@@ -311,5 +332,23 @@ class HarnessContractSpec extends AnyFunSuite with SparkSpec {
     val walkers = sources("src/test/scala").collect {
       case (f, src) if Walk.findFirstIn(src).nonEmpty => f }
     assert(walkers == Seq("graft/CacheHygieneSpec.scala"))
+  }
+
+  test("every gate is declared once with an oracle") {
+    // one table per queries/ module; building the maps rejects a second
+    // declaration of a name instead of letting one shadow the other
+    assert(Queries.all.size == 183)
+    assert(Queries.oracle.keySet == Queries.all.keySet)
+    val code = sources("src/main/scala/graft/queries").map(_._2).mkString("\n")
+    val repeated = Queries.all.keySet.filter(n =>
+      scala.util.matching.Regex.quote("\"" + n + "\"").r.findAllIn(code).size != 1)
+    assert(repeated.isEmpty, "gate names written more than once in queries/")
+    val q: Queries.Q = (s, d) => Tables.region(s, d)
+    val twice = intercept[IllegalArgumentException](Queries.index(Seq(
+      Queries.Gate("q_twice", q, "SELECT 1"), Queries.Gate("q_twice", q, "SELECT 2"))))
+    assert(twice.getMessage.contains("q_twice"))
+    for (sql <- Seq(null, ""))
+      assert(intercept[IllegalArgumentException](Queries.index(Seq(
+        Queries.Gate("q_bare", q, sql)))).getMessage.contains("q_bare"))
   }
 }
