@@ -22,9 +22,6 @@ import graft.queries._
   *   - q170 collects the cash-flow statement's 17 section totals
   *     driver-side (the layout roll-up contract of
   *     [[graft.report.CashFlowStatement]]);
-  *   - q174 collects the tax-totals footer (bounded by the tax-group
-  *     dim) driver-side — the layout contract of
-  *     [[graft.report.TaxTotals]];
   *   - gates that consume the suite-level dedup-index memos — exact
   *     pairs, CC clusters, MinHash candidates ([[graft.queries.PairMemo]])
   *     — materialize the shared artifact on FIRST construction per

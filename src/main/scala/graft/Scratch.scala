@@ -42,7 +42,7 @@ object Scratch {
       val root =
         if (shm.isDirectory && shm.canWrite && shm.getUsableSpace > minTmpfsBytes)
           "/dev/shm"
-        else "/root/repo/target"
+        else new java.io.File("target").getAbsolutePath
       s"$root/graft-scratch-${ProcessHandle.current().pid()}"
     })
     // the pid default is unique per process, so nothing else ever reuses

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Harness contract — see SURVEY.md §7.
   *
   * Both maps forward to [[Queries]], built from the per-module gate
   * tables. */

@@ -50,8 +50,7 @@ object GateOps {
       external = Some(ext0))
     // period-1 run, then the carryover round-trip through parquet
     val t1 = RR.run(ctx, exprs, groups.take(1))
-    val dir = new java.io.File("/root/repo/target/gate_ext_carry")
-    graft.Scratch.deleteRec(dir)
+    val dir = graft.Scratch.fresh("gate_ext_carry")
     ExternalValues.carryover(s, Map("CARRY.val" -> t1("h1")("SUM.val")),
       "1995-07-01", dir.getPath)
     val extAll = ext0.unionByName(ExternalValues.load(s, dir.getPath)

@@ -857,21 +857,14 @@ object ReportOps {
       |       round(sum(sg * m3), 2) AS t10_c
       |FROM step6""".stripMargin
 
-  /** A tax-totals footer as (sec, name, base_amount, tax_amount, amount)
-    * rows: 1 = groups, 2 = preceding subtotals, 3 = the invoice totals
-    * (the q174 and q179 layout). */
-  private def footer(s: SparkSession, t: graft.report.TaxTotals.Totals): DataFrame = {
-    val s0 = s; import s0.implicits._
-    val rows =
-      t.groups.map(g => (1L, g.group.name, Option(g.baseAmount),
-        Option(g.taxAmount), Option.empty[Double])) ++
-      t.subtotals.map(st => (2L, st.name, Option.empty[Double],
-        Option.empty[Double], Option(st.amount))) :+
-      ((3L, "(totals)", Option(t.amountUntaxed), Option(t.amountTax),
-        Option(t.amountTotal)))
-    rows.toDF("sec", "name", "base_amount", "tax_amount", "amount")
-      .orderBy(col("sec"), col("name"))
-  }
+  /** A tax-totals footer's plan as (sec, name, base_amount, tax_amount,
+    * amount) rows: 1 = groups, 2 = preceding subtotals, 3 = the invoice
+    * totals (the q174 and q179 layout). The footer is bounded by the
+    * group dimension, so it sorts in one partition: a range exchange's
+    * sampling job would cost more than the sort. */
+  private def footerLines(f: graft.report.TaxTotals.Footer): DataFrame =
+    f.plan.select("sec", "name", "base_amount", "tax_amount", "amount")
+      .coalesce(1).sortWithinPartitions(col("sec"), col("name"))
 
   /** q174 — the invoice tax-totals summary ([[graft.report.TaxTotals]],
     * etl_account/models/account_tax.py:354-530) over q173's compiled
@@ -879,9 +872,9 @@ object ReportOps {
     * group (the no-double-count base rule live on every line), a 4%
     * not-base-affected withholding group under its own preceding
     * subtotal, per-line discounts, untaxed lines riding the same scan,
-    * signed quantities. The per-group aggregation is the one-scan
-    * two-level groupBy; only the dimension-sized footer reaches the
-    * driver. Output = the footer as (sec, name, base, tax, amount) rows;
+    * signed quantities. The whole corpus is one constant slice of the
+    * lazy footer plan: the one-scan two-level groupBy, then the layout as
+    * windows. Output = the footer as (sec, name, base, tax, amount) rows;
     * the oracle replays the arithmetic and the layout in SQL. */
   def q174(s: SparkSession, d: String): DataFrame = {
     import graft.engine.TaxCompute.TaxDef
@@ -904,9 +897,9 @@ object ReportOps {
         when(col("l_linenumber") % 2 === 1, lit(1.0)).otherwise(lit(-1.0)).as("q"),
         ((col("l_orderkey") % 4) * lit(10.0)).as("disc"),
         (col("l_orderkey") % 7 =!= 0).as("taxed"))
-    val t = TaxTotals.prepareTaxTotals(li, col("rec"), col("p"), col("q"),
-      col("disc"), col("taxed"), chain, Map(1L -> g1, 2L -> g1, 3L -> g2))
-    footer(s, t)
+    footerLines(TaxTotals.footer(li, lit(0L), col("rec"), col("p"), col("q"),
+      col("disc"), when(col("taxed"), lit(1)).otherwise(lit(0)), Seq(1 -> chain),
+      Map(1L -> g1, 2L -> g1, 3L -> g2)))
   }
 
   val q174Sql: String =
@@ -1187,16 +1180,15 @@ object ReportOps {
       |FROM det GROUP BY gid ORDER BY gid""".stripMargin
 
   /** q179 — the tax-totals footer over a corpus mixing SEVERAL tax
-    * chains (the r15 verdict's #3): `prepareTaxTotalsMulti` compiles
-    * each distinct chain once and a per-row key selects its exploded
-    * entry array (the LineTotals compile-per-variant mechanism), so the
-    * whole mixed-chain footer stays ONE fact scan (PlanAuditSpec pins
-    * it). Output = the q174 footer layout. */
+    * chains (the r15 verdict's #3): [[graft.report.TaxTotals.footer]]
+    * compiles each distinct chain once and a per-row key selects its
+    * exploded entry array (the LineTotals compile-per-variant mechanism),
+    * so the whole mixed-chain footer stays ONE fact scan (PlanAuditSpec
+    * pins it). Output = the q174 footer layout. */
   def q179(s: SparkSession, d: String): DataFrame = {
     import graft.report.TaxTotals
-    val t = TaxTotals.prepareTaxTotalsMulti(taxCorpus(s, d), col("rec"),
-      col("price"), col("qty"), col("disc"), col("k"), taxChains, taxGroups)
-    footer(s, t)
+    footerLines(TaxTotals.footer(taxCorpus(s, d), lit(0L), col("rec"),
+      col("price"), col("qty"), col("disc"), col("k"), taxChains, taxGroups))
   }
 
   val q179Sql: String =
@@ -1283,12 +1275,13 @@ object ReportOps {
     * replays `amount_total_rounded = amount_total − balance` with the
     * sign FLIPPED for out_refund / in_invoice (:670-671 — the wizards'
     * `round_off = −1 · balance`, wizard/sales_report.py:169-171).
-    * Scale: TWO distributed aggregations total — the balances (4 rows
-    * reach the driver) and [[graft.report.TaxTotals
-    * .prepareTaxTotalsSliced]], which computes all four batches'
+    * Scale: one plan — the balances' aggregate and the sliced
+    * [[graft.report.TaxTotals.footer]], which lays out all four batches'
     * footers in ONE scan → explode → (slice, rec, gid) → (slice, gid)
-    * plan; no per-batch job, so the shape holds for millions of moves
-    * across a bounded slice dimension. */
+    * plan, left-joined to the fixed move-type dimension (an absent slice
+    * = no records of that move type = the zero footer); no per-batch
+    * job, so the shape holds for millions of moves across a bounded
+    * slice dimension. */
   def q181(s: SparkSession, d: String): DataFrame = {
     import graft.report.TaxTotals
     val s0 = s; import s0.implicits._
@@ -1297,23 +1290,19 @@ object ReportOps {
     // distributed, divided once — exact on the cent grid
     val bal = corpus.groupBy((col("rec") % 4).as("mt"))
       .agg(round(sum(col("rec") % 19 - 9) / 100.0, 2).as("bal"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val totals = TaxTotals.prepareTaxTotalsSliced(corpus, col("rec") % 4,
-      col("rec"), col("price"), col("qty"), col("disc"), col("k"),
-      taxChains, taxGroups)
-    val moveTypes = Seq(0L -> "out_invoice", 1L -> "out_refund",
-      2L -> "in_invoice", 3L -> "in_refund")
-    val rows = moveTypes.map { case (mt, name) =>
-      // an absent slice = no records of that move type = the zero footer
-      val t = totals.getOrElse(mt,
-        TaxTotals.Totals(0.0, 0.0, 0.0, Nil, Nil, Nil, displayTaxBase = false))
-      val b = bal.getOrElse(mt, 0.0)
-      (name, t.amountTotal, b, TaxTotals.amountTotalRounded(t, b, name))
-    }
-    rows.toDF("move_type", "amount_total", "rounding_balance", "raw_rounded")
-      .select(col("move_type"), round(col("amount_total"), 2).as("amount_total"),
-        col("rounding_balance"),
-        round(col("raw_rounded"), 2).as("amount_total_rounded"))
+    val totals = TaxTotals.footer(corpus, col("rec") % 4, col("rec"),
+        col("price"), col("qty"), col("disc"), col("k"), taxChains, taxGroups)
+      .plan.filter(col("sec") === 3)
+      .select(col("slice").as("mt"), col("amount").as("total"))
+    val amountTotal = coalesce(col("total"), lit(0.0))
+    val balance = coalesce(col("bal"), lit(0.0))
+    Seq(0L -> "out_invoice", 1L -> "out_refund", 2L -> "in_invoice",
+        3L -> "in_refund").toDF("mt", "move_type")
+      .join(totals, Seq("mt"), "left").join(bal, Seq("mt"), "left")
+      .select(col("move_type"), round(amountTotal, 2).as("amount_total"),
+        balance.as("rounding_balance"),
+        round(TaxTotals.amountTotalRounded(amountTotal, balance,
+          col("move_type")), 2).as("amount_total_rounded"))
       .orderBy(col("move_type"))
   }
 

@@ -1,7 +1,8 @@
 package graft.report
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.engine.TaxCompute
 import graft.engine.TaxCompute.{Params, TaxDef}
 
@@ -40,20 +41,22 @@ import graft.engine.TaxCompute.{Params, TaxDef}
   * Scale: the per-line computation is the same codegen'd projection as
   * q173 — no UDF, no driver loop over lines; the untaxed subtotal rides
   * the SAME exploded aggregation as the tax lines under a sentinel group,
-  * so the whole summary is ONE scan into a two-level groupBy — (record,
-  * group) then (group) — whose second level is bounded by the tax-group
-  * dimension. Only per-group rows reach the driver; the subtotal layout
-  * is dimension-sized. A corpus mixing SEVERAL tax chains stays one scan
-  * too: each distinct chain compiles once and a per-row key selects its
-  * exploded entry array (the compile-per-variant/select-per-row mechanism
-  * of [[LineTotals.computePerPartner]]).
+  * so the whole summary is ONE scan into a two-level groupBy — (slice,
+  * record, group) then (slice), one (base, tax) sum per group of the
+  * static group dimension — whose second level has one row per slice.
+  * [[footer]] lays `_prepare_tax_totals` out in the same plan, as columns
+  * of that row, so building a footer starts no job and nothing is
+  * collected before the caller's action. A corpus mixing SEVERAL tax
+  * chains stays one scan too: each distinct chain compiles once and a
+  * per-row key selects its exploded entry array (the compile-per-variant/
+  * select-per-row mechanism of [[LineTotals.computePerPartner]]).
   *
   * The reference's `early_pay_discount_computation='excluded'` delta
   * branch (:307-324) is NOT implemented: the reference code in that
   * branch is unreachable-as-written (its `delta_tax = round(...),`
   * trailing commas build tuples, so `tax_res['amount'] += delta_tax`
   * raises TypeError on first use, and no reference test exercises it);
-  * [[prepareTaxTotals]] rejects it loudly. 'included' — a pure price
+  * [[footer]] rejects it loudly. 'included' — a pure price
   * scaling (:279-281) — is supported.
   */
 object TaxTotals {
@@ -77,23 +80,25 @@ object TaxTotals {
                           subtotalsOrder: Seq[String],
                           displayTaxBase: Boolean)
 
-  private def rndAt(v: Double, dec: Int): Double =
-    BigDecimal(v).setScale(dec, BigDecimal.RoundingMode.HALF_UP).toDouble
+  object Totals {
+    /** What a slice with no records shows, and so an empty corpus. */
+    val zero: Totals = Totals(0.0, 0.0, 0.0, Nil, Nil, Nil, displayTaxBase = false)
+  }
 
   /** The footer's `round(tools.float_round(x, dp_dic[dp]), dp)` two-step
     * (:443 `dp_dic = {2: 0.01, 3: 0.001, 0: 0.01}`, used :466-467,
     * :508-513, :515-517). For dp ∈ {2,3} both steps round on the SAME
-    * grid, so they collapse to one HALF_UP round. For dp = 0 the grids
+    * grid, so they collapse to one HALF_UP `round` (over the value's
+    * decimal string, like Python's float_round). For dp = 0 the grids
     * DIFFER: float_round half-ups at CENTS first, then Python's `round`
-    * — HALF-EVEN — takes the cent value to the integer grid, so
-    * 2.50 → 2 (not 3) and 1.496 → 1.50 → 2 (a direct half-up round at
-    * 0 decimals would give 1). Any other dp raises, like the
+    * — HALF-EVEN, `bround` — takes the cent value to the integer grid,
+    * so 2.50 → 2 (not 3) and 1.496 → 1.50 → 2 (a direct half-up round
+    * at 0 decimals would give 1). Any other dp raises, like the
     * reference's dp_dic KeyError — silent one-round behavior at dp = 0
     * is the one unacceptable outcome. */
-  private[graft] def footerRound(v: Double, dp: Int): Double = dp match {
-    case 2 | 3 => rndAt(v, dp)
-    case 0 => BigDecimal(rndAt(v, 2))
-      .setScale(0, BigDecimal.RoundingMode.HALF_EVEN).toDouble
+  private[graft] def footerRound(v: Column, dp: Int): Column = dp match {
+    case 2 | 3 => round(v, dp)
+    case 0 => bround(round(v, 2), 0)
     case d => throw new IllegalArgumentException(
       s"footer decimal count $d is outside the reference's dp_dic " +
         "domain {0, 2, 3} (account_tax.py:443)")
@@ -122,23 +127,6 @@ object TaxTotals {
       .groupBy(col("rec"), col("gid"))
       .agg(min_by(col("base"), col("ord")).as("base_amount"),
         (sum(col("amount")).as("tax_amount") +: company): _*)
-  }
-
-  /** Distributed `_aggregate_taxes` group rollup over a per-tax-line
-    * frame (rec, gid, ord, base, amount [, base_co, amount_co]): the
-    * [[perRecordDetails]] level summed per group. Exposed for plan
-    * audits; [[footerAggregate]] builds its input. */
-  private[graft] def aggregateByGroup(taxLines: DataFrame,
-                                      hasCompanyLeg: Boolean): DataFrame = {
-    val details = perRecordDetails(taxLines, hasCompanyLeg)
-    val company =
-      if (!hasCompanyLeg) Nil
-      else Seq(sum(col("base_amount_company")).as("base_amount_company"),
-        sum(col("tax_amount_company")).as("tax_amount_company"))
-    details
-      .groupBy(col("gid"))
-      .agg(sum(col("base_amount")).as("base_amount"),
-        (sum(col("tax_amount")).as("tax_amount") +: company): _*)
   }
 
   /** The per-tax-line explode feeding both aggregation levels: ONE scan
@@ -295,23 +283,6 @@ object TaxTotals {
         col("e.amount").as("amount")) ++ companyCols): _*)
   }
 
-  /** The distributed footer plan: per-group (base, tax) rows on the
-    * DOCUMENT leg (`_prepare_tax_totals` reads only that one, :463-467)
-    * PLUS the sentinel group −1 carrying Σ price_subtotal (amount
-    * untaxed). Lazy — [[prepareTaxTotalsMulti]] collects it; exposed so
-    * plan audits can pin the one-scan shape. */
-  private[graft] def footerAggregate(lines: DataFrame, record: Column,
-                                     priceUnit: Column, quantity: Column,
-                                     discount: Column, chainKey: Column,
-                                     chains: Seq[(Int, Seq[TaxDef])],
-                                     taxToGroup: Map[Long, GroupDef],
-                                     dp: Int, params: Params,
-                                     earlyPayDiscount: Option[(String, Double)])
-      : DataFrame =
-    aggregateByGroup(explodedTaxLines(lines, record, priceUnit, quantity,
-      discount, chainKey, chains, taxToGroup, dp, params, earlyPayDiscount,
-      companyLeg = None), hasCompanyLeg = false)
-
   /** The reference's DEFAULT `grouping_key_generator` (:356-358): group
     * by the TAX itself (`tax_values['tax_repartition_line'].tax_id`) —
     * what `_aggregate_taxes` does when the caller passes no generator;
@@ -323,9 +294,9 @@ object TaxTotals {
     * result: one row per grouping key — (gid, base_amount, tax_amount
     * [, base_amount_company, tax_amount_company]) — plus the sentinel
     * row gid −1 whose base columns are the corpus' untaxed subtotal on
-    * each leg. Everything [[prepareTaxTotalsMulti]] computes, kept as a
-    * DataFrame for consumers aggregating further (registers, company-
-    * level bookings).
+    * each leg. The footer's explode and per-record level summed per
+    * group, kept as a DataFrame for consumers aggregating further
+    * (registers, company-level bookings).
     *
     * `rate` = Some(col) builds the company-currency leg by dividing
     * through the document→company rate (:330-340, :415-417; pass
@@ -351,11 +322,15 @@ object TaxTotals {
                      earlyPayDiscount: Option[(String, Double)] = None,
                      rate: Option[Column] = None,
                      groupingKey: Option[TaxDef => Long] = None,
-                     filterTaxValues: Option[(Int, TaxDef) => Boolean] = None): DataFrame =
-    aggregateByGroup(explodedTaxLines(lines, record, priceUnit, quantity,
-      discount, chainKey, chains, taxToGroup, dp, params, earlyPayDiscount,
-      companyLeg = rate, groupingKey = groupingKey,
-      filterTaxValues = filterTaxValues), hasCompanyLeg = rate.nonEmpty)
+                     filterTaxValues: Option[(Int, TaxDef) => Boolean] = None): DataFrame = {
+    val sums = Seq("base_amount", "tax_amount") ++
+      (if (rate.isEmpty) Nil else Seq("base_amount_company", "tax_amount_company"))
+    taxDetailsPerRecord(lines, record, priceUnit, quantity, discount, chainKey,
+        chains, taxToGroup, dp, params, earlyPayDiscount, rate, groupingKey,
+        filterTaxValues)
+      .groupBy(col("gid"))
+      .agg(sum(sums.head).as(sums.head), sums.tail.map(c => sum(c).as(c)): _*)
+  }
 
   /** The reference's `tax_details_per_record` arm (:372-384) as a
     * distributed frame: one row per (record, grouping key) with base
@@ -410,225 +385,175 @@ object TaxTotals {
     * `account.cash.rounding.compute_difference` — the rounding-unit
     * policy is NOT part of the reference snapshot, so only its
     * observable footer arithmetic has a twin here. */
-  def amountTotalRounded(totals: Totals, roundingBalance: Double,
-                         moveType: String): Double = {
-    val balance =
-      if (moveType == "out_refund" || moveType == "in_invoice")
-        -roundingBalance
-      else roundingBalance
-    totals.amountTotal - balance
+  def amountTotalRounded(amountTotal: Column, roundingBalance: Column,
+                         moveType: Column): Column =
+    amountTotal - when(moveType.isin("out_refund", "in_invoice"),
+      -roundingBalance).otherwise(roundingBalance)
+
+  /** A [[footer]]: the lazy laid-out `plan`, one row per footer line —
+    * (slice, sec, name, gid, base_amount, tax_amount, amount,
+    * display_tax_base) with sec 1 = a group (gid = its id), 2 = a
+    * subtotal (gid = its first group), 3 = the invoice totals (gid −1,
+    * the only line carrying display_tax_base) — and what reading it back
+    * into [[Totals]] needs. */
+  final case class Footer(plan: DataFrame, groups: Map[Long, GroupDef],
+                          manualSlices: Set[Long]) {
+
+    /** The plan collected once and decoded per slice; a slice with no
+      * records is absent and reads as [[Totals.zero]]. A null slice value
+      * (its rows would otherwise merge into slice 0) and a manual
+      * override keyed to a slice with no records (the override would be
+      * dropped silently) reject. The reject is deliberately strict even
+      * though an empty slice's override would be an arithmetic NO-OP (a
+      * manual amount only REPLACES a group row the aggregation produced,
+      * :469-475): a mistyped key and a legitimately-empty slice are
+      * indistinguishable from the data, and silent typo-shaped number
+      * loss is the worse failure for financial output. */
+    def collectTotals(): Map[Long, Totals] = {
+      val rows = plan.collect() // bounded by slices × (groups + titles + 1)
+      require(rows.forall(!_.isNullAt(0)),
+        "null slice key: every line must carry a non-null slice value")
+      val bySlice = rows.groupBy(_.getAs[Long]("slice"))
+      val unusedManual = manualSlices -- bySlice.keySet
+      require(unusedManual.isEmpty,
+        s"manualBySlice keys ${unusedManual.toSeq.sorted.mkString(", ")} " +
+          "match no slice in the corpus — manual tax-line overrides would " +
+          "be dropped silently (empty slices are ABSENT from the footer)")
+      def group(r: Row): GroupDef = groups(r.getAs[Long]("gid"))
+      def lines(rs: Array[Row], sec: Long): Seq[Row] =
+        rs.filter(_.getAs[Long]("sec") == sec).toSeq
+          .sortBy(r => (group(r).sequence, group(r).id))
+      bySlice.map { case (s, rs) =>
+        val subtotals = lines(rs, 2).map(r =>
+          Subtotal(r.getAs[String]("name"), r.getAs[Double]("amount")))
+        val t = rs.find(_.getAs[Long]("sec") == 3).get
+        s -> Totals(t.getAs[Double]("base_amount"), t.getAs[Double]("tax_amount"),
+          t.getAs[Double]("amount"),
+          lines(rs, 1).map(r => GroupTotal(group(r),
+            r.getAs[Double]("base_amount"), r.getAs[Double]("tax_amount"))),
+          subtotals, subtotals.map(_.name), t.getAs[Boolean]("display_tax_base"))
+      }.withDefaultValue(Totals.zero)
+    }
   }
 
-  /** Compute the tax totals of a single-chain document-line corpus.
+  /** The invoice footer — `_prepare_tax_totals` (:441-530) — of every
+    * slice of a line corpus, as ONE lazy plan: scan → explode → (slice,
+    * record, group) → (slice), then the layout as columns and one explode
+    * into footer lines. The whole-corpus footer is one constant slice
+    * (`lit(0L)`); several slices are the wizard shape (each register
+    * iterates invoices/moves and reads `_compute_tax_totals` per batch:
+    * move type, journal, company…), still one plan instead of one job
+    * per batch.
     *
     * `record` identifies the line (the reference's base_line['record']);
-    * `hasTaxes` marks lines carrying the chain (others contribute only
-    * their untaxed subtotal, :342-349); `discount` is the line discount
-    * percent (:273). `taxToGroup` maps every chain tax id to its group;
-    * `dp` is the partner's invoice_decimal (:265-272, default 2);
-    * `params` forwards to [[TaxCompute.compile]]. `manualTaxLines` are
-    * (group id, company tax amount) pairs from manually edited tax lines
-    * (:469-475). `earlyPayDiscount` = Some(("included"|"excluded"), pct).
-    * `footerDp` overrides the FOOTER's decimal count when it differs
-    * from the line dp — the reference's no-partner path takes dp from
-    * `currency.decimal_places` (:446-449, domain {0,2,3} via dp_dic)
-    * while each line computes at the default 2. */
-  def prepareTaxTotals(lines: DataFrame, record: Column, priceUnit: Column,
-                       quantity: Column, discount: Column, hasTaxes: Column,
-                       chain: Seq[TaxDef], taxToGroup: Map[Long, GroupDef],
-                       dp: Int = 2, params: Params = Params(),
-                       earlyPayDiscount: Option[(String, Double)] = None,
-                       manualTaxLines: Seq[(Long, Double)] = Nil,
-                       footerDp: Option[Int] = None): Totals =
-    prepareTaxTotalsMulti(lines, record, priceUnit, quantity, discount,
-      when(hasTaxes, lit(1)).otherwise(lit(0)), Seq(1 -> chain), taxToGroup,
-      dp, params, earlyPayDiscount, manualTaxLines, footerDp)
-
-  /** [[prepareTaxTotals]] over a corpus mixing SEVERAL tax chains — the
-    * reference's per-line `base_line['taxes']` (:277): each distinct
-    * chain compiles once, `chainKey` selects per row, the whole footer
-    * stays one scan. A key matching no chain behaves as the taxes-empty
-    * branch. */
-  def prepareTaxTotalsMulti(lines: DataFrame, record: Column,
-                            priceUnit: Column, quantity: Column,
-                            discount: Column, chainKey: Column,
-                            chains: Seq[(Int, Seq[TaxDef])],
-                            taxToGroup: Map[Long, GroupDef],
-                            dp: Int = 2, params: Params = Params(),
-                            earlyPayDiscount: Option[(String, Double)] = None,
-                            manualTaxLines: Seq[(Long, Double)] = Nil,
-                            footerDp: Option[Int] = None): Totals = {
-    // the footer reads the DOCUMENT-currency leg only (:463-467), so
-    // its explode never builds the company fields
-    val perGroup = footerAggregate(lines, record, priceUnit, quantity,
-        discount, chainKey, chains, taxToGroup, dp, params, earlyPayDiscount)
-      .collect() // bounded by the tax-group dimension (+1 sentinel row)
-      .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    layoutTotals(perGroup, taxToGroup, footerDp.getOrElse(dp), params,
-      manualTaxLines)
-  }
-
-  /** Footers for SEVERAL document batches in ONE plan — the wizard shape
-    * (each register iterates invoices/moves and reads
-    * `_compute_tax_totals` per batch): `slice` keys the batch (move
-    * type, journal, company…), and the result maps slice → [[Totals]],
-    * each laid out by the SAME `_prepare_tax_totals` arithmetic as
-    * [[prepareTaxTotalsMulti]]. One scan → explode → (slice, record,
-    * group) → (slice, group); only slices × (groups + 1) rows reach the
-    * driver, so a corpus of millions of documents across a bounded
-    * slice dimension still runs as one distributed plan instead of one
-    * job per batch. `manualBySlice` carries each slice's manual
-    * tax-line overrides (:469-475); every key must name a slice PRESENT
-    * in the corpus — an unmatched key rejects loudly instead of
-    * dropping the override. The reject is deliberately strict even
-    * though an empty slice's override would be an arithmetic NO-OP
-    * anyway (manual amounts only REPLACE a group row the aggregation
-    * produced, :469-475 — here and in the reference an override for an
-    * absent group is dropped, so nothing is lost by rejecting): a
-    * mistyped key and a legitimately-empty slice are indistinguishable
-    * from the data, and silent typo-shaped number loss is the worse
-    * failure for an engine whose output is financial. A fixed-dimension
-    * caller whose slices may legitimately be empty intersects its
-    * override map with the slices it knows are present. A slice with no
-    * records is ABSENT from the result map (there is no row to learn it
-    * from) — callers enumerating a fixed slice dimension should treat
-    * absence as the all-zero footer, which is what the whole-corpus API
-    * returns on an empty frame. The slice column must be integral (loud
-    * type check; null slice values reject at collect time). */
-  def prepareTaxTotalsSliced(lines: DataFrame, slice: Column, record: Column,
-                             priceUnit: Column, quantity: Column,
-                             discount: Column, chainKey: Column,
-                             chains: Seq[(Int, Seq[TaxDef])],
-                             taxToGroup: Map[Long, GroupDef],
-                             dp: Int = 2, params: Params = Params(),
-                             earlyPayDiscount: Option[(String, Double)] = None,
-                             manualBySlice: Map[Long, Seq[(Long, Double)]] = Map(),
-                             footerDp: Option[Int] = None): Map[Long, Totals] = {
-    val perSliceGroup = footerAggregateSliced(lines, slice, record,
-      priceUnit, quantity, discount, chainKey, chains, taxToGroup, dp,
-      params, earlyPayDiscount)
-      .collect() // bounded by slices × (tax-group dimension + 1)
-      .map { r =>
-        // the type check in footerAggregateSliced rules out non-integral
-        // slices; a NULL value would still group under a null key (and
-        // getLong would read it as 0, merging it into slice 0) — reject
-        require(!r.isNullAt(0),
-          "null slice key: every line must carry a non-null slice value")
-        (r.getLong(0), r.getLong(1)) -> ((r.getDouble(2), r.getDouble(3)))
-      }.toMap
-    // a mistyped slice key in manualBySlice would otherwise vanish
-    // silently — the override applies to no batch and nothing signals it
-    val unusedManual = manualBySlice.keySet -- perSliceGroup.keys.map(_._1)
-    require(unusedManual.isEmpty,
-      s"manualBySlice keys ${unusedManual.toSeq.sorted.mkString(", ")} " +
-        "match no slice in the corpus — manual tax-line overrides would " +
-        "be dropped silently (empty slices are ABSENT from the result; " +
-        "apply their overrides to the all-zero footer driver-side)")
-    perSliceGroup.keys.map(_._1).toSeq.distinct.map { s =>
-      val perGroup = perSliceGroup.collect {
-        case ((`s`, gid), bt) => gid -> bt
-      }
-      s -> layoutTotals(perGroup, taxToGroup, footerDp.getOrElse(dp), params,
-        manualBySlice.getOrElse(s, Nil))
-    }.toMap
-  }
-
-  /** [[prepareTaxTotalsSliced]]'s distributed side, lazy — exposed so
-    * plan audits can pin the one-scan shape. The slice key rides INSIDE
-    * the record struct through the explode (every physical line belongs
-    * to exactly one batch), so the per-record level is the usual
-    * (rec, gid) groupBy and the second level regroups on the slice
-    * field it carries. */
-  private[graft] def footerAggregateSliced(lines: DataFrame, slice: Column,
-                                           record: Column, priceUnit: Column,
-                                           quantity: Column, discount: Column,
-                                           chainKey: Column,
-                                           chains: Seq[(Int, Seq[TaxDef])],
-                                           taxToGroup: Map[Long, GroupDef],
-                                           dp: Int, params: Params,
-                                           earlyPayDiscount: Option[(String, Double)])
-      : DataFrame = {
-    // the slice key is widened to long for the driver-side map; a
-    // string/double/date slice would survive the cast as nulls or
-    // truncated values and land rows under the wrong batch silently —
-    // reject non-integral slice types at plan-build time
+    * `chainKey` selects each line's chain among `chains` (a key matching
+    * no chain is the taxes-empty branch, :342-349); `discount` is the
+    * line discount percent (:273). `taxToGroup` maps every chain tax id
+    * to its group; `dp` is the partner's invoice_decimal (:265-272,
+    * default 2); `params` forwards to [[TaxCompute.compile]];
+    * `earlyPayDiscount` = Some(("included"|"excluded"), pct).
+    * `manualBySlice` carries each slice's manual tax-line overrides,
+    * (group id, tax amount) pairs from manually edited tax lines
+    * (:469-475); [[Footer.collectTotals]] rejects a key naming no slice
+    * present in the corpus. `footerDp` overrides the FOOTER's decimal
+    * count when it differs from the line dp — the reference's no-partner
+    * path takes dp from `currency.decimal_places` (:446-449, domain
+    * {0,2,3} via dp_dic) while each line computes at the default 2.
+    *
+    * The group dimension and the manual overrides enter as literals, so
+    * the layout's expressions grow with the number of groups: it suits
+    * the bounded tax-group dimension it is written for. It lays out as
+    * columns rather than as windows over (slice, group) rows because the
+    * windows and their sorts compiled 47 classes for q174 against 20 for
+    * this plan, enough to overflow Spark's 100-entry generated-class
+    * cache on a report workload and recompile every pass. The slice
+    * column must be integral: the key is widened to long, and a
+    * string/double/date slice would land rows under the wrong batch
+    * silently. */
+  def footer(lines: DataFrame, slice: Column, record: Column,
+             priceUnit: Column, quantity: Column, discount: Column,
+             chainKey: Column, chains: Seq[(Int, Seq[TaxDef])],
+             taxToGroup: Map[Long, GroupDef],
+             dp: Int = 2, params: Params = Params(),
+             earlyPayDiscount: Option[(String, Double)] = None,
+             manualBySlice: Map[Long, Seq[(Long, Double)]] = Map(),
+             footerDp: Option[Int] = None): Footer = {
     val sliceType = lines.select(slice).schema.head.dataType
-    require(sliceType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }, s"slice column must be an integral type (byte/short/int/long), " +
-      s"got $sliceType — cast explicitly only if the conversion is " +
-      "genuinely lossless for every row")
-    val exploded = explodedTaxLines(lines,
-      struct(slice.cast("long").as("s"), record.as("r")), priceUnit,
-      quantity, discount, chainKey, chains, taxToGroup, dp, params,
-      earlyPayDiscount, companyLeg = None)
-    perRecordDetails(exploded, hasCompanyLeg = false)
-      .groupBy(col("rec.s").as("slice"), col("gid"))
-      .agg(sum(col("base_amount")).as("base_amount"),
-        sum(col("tax_amount")).as("tax_amount"))
-  }
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(sliceType),
+      s"slice column must be an integral type (byte/short/int/long), " +
+        s"got $sliceType — cast explicitly only if the conversion is " +
+        "genuinely lossless for every row")
+    val fdp = footerDp.getOrElse(dp)
+    def fRound(c: Column): Column = footerRound(c, fdp)
+    // the group dimension is static, so the second level is ONE row per
+    // slice with a (base, tax) sum per group, null where the slice has no
+    // line of that group; the slice rides INSIDE the record struct through
+    // the explode (every line belongs to one batch); the footer reads the
+    // DOCUMENT leg only (:463-467), so the explode never builds the
+    // company fields
+    val groups = taxToGroup.values.toSeq.distinctBy(_.id).sortBy(g => (g.sequence, g.id))
+    def sumOf(gid: Long, c: String): Column = sum(when(col("gid") === gid, col(c)))
+    val perSlice = perRecordDetails(explodedTaxLines(lines,
+        struct(slice.cast("long").as("s"), record.as("r")), priceUnit,
+        quantity, discount, chainKey, chains, taxToGroup, dp, params,
+        earlyPayDiscount, companyLeg = None), hasCompanyLeg = false)
+      .groupBy(col("rec.s").as("slice"))
+      .agg(sumOf(-1, "base_amount").as("untaxed"), groups.indices.flatMap(i =>
+        Seq(sumOf(groups(i).id, "base_amount").as(s"b$i"),
+          sumOf(groups(i).id, "tax_amount").as(s"t$i"))): _*)
 
-  /** `_prepare_tax_totals`' driver-side layout (:441-530) over a
-    * collected per-group map — dimension-sized, shared by the
-    * whole-corpus and sliced footers so the two can never diverge. */
-  private def layoutTotals(perGroup: Map[Long, (Double, Double)],
-                           taxToGroup: Map[Long, GroupDef], fdp: Int,
-                           params: Params,
-                           manualTaxLines: Seq[(Long, Double)]): Totals = {
-    def fRound(v: Double): Double = footerRound(v, fdp)
-    val amountUntaxedRaw = perGroup.get(-1L).map(_._1).getOrElse(0.0)
-    val groupTotals = perGroup.keys.filter(_ >= 0).toSeq
-      .map { gid =>
-        val g = taxToGroup.values.find(_.id == gid).getOrElse(
-          throw new IllegalStateException(s"group $gid missing from dim"))
-        val (b, t) = perGroup(gid)
-        // manual tax-line edits replace the group's tax amount (:469-475)
-        val manual = manualTaxLines.filter(_._1 == gid)
-        val tax = if (manual.nonEmpty) manual.map(_._2).sum else t
-        GroupTotal(g, fRound(b), fRound(tax))
-      }
-      .sortBy(gt => (gt.group.sequence, gt.group.id))
-
-    // subtotal partition (:481-513): title order = min group sequence;
-    // each subtotal shows untaxed + the tax accumulated BEFORE it
-    val subtotalOrder = scala.collection.mutable.LinkedHashMap[String, Int]()
-    val groupsBySubtotal =
-      scala.collection.mutable.LinkedHashMap[String, Vector[GroupTotal]]()
-    for (gt <- groupTotals) {
-      val title = gt.group.precedingSubtotal.getOrElse("Untaxed Amount")
-      subtotalOrder(title) =
-        math.min(subtotalOrder.getOrElse(title, Int.MaxValue), gt.group.sequence)
-      groupsBySubtotal(title) = groupsBySubtotal.getOrElse(title, Vector()) :+ gt
+    // per group, in (sequence, id) order (:479): present in the slice, the
+    // dp-rounded base and tax (:466-467), manual lines replacing the tax
+    // (:469-475)
+    val present = groups.indices.map(i => col(s"b$i").isNotNull)
+    val baseR = groups.indices.map(i => fRound(col(s"b$i")))
+    val taxR = groups.indices.map { i =>
+      fRound(manualBySlice.toSeq.flatMap { case (s, ms) =>
+        val m = ms.filter(_._1 == groups(i).id)
+        if (m.isEmpty) None else Some(s -> m.map(_._2).sum)
+      }.foldLeft(col(s"t$i")) { case (other, (s, v)) =>
+        when(col("slice") === s, v).otherwise(other)
+      })
     }
-    val order = subtotalOrder.keys.toSeq.sortBy(subtotalOrder)
-    var amountTax = 0.0
-    val subtotals = order.map { title =>
-      val st = Subtotal(title, fRound(amountUntaxedRaw + amountTax))
-      amountTax += groupsBySubtotal(title).map(_.taxAmount).sum
-      st
+    // subtotal partition (:481-513): a title ranks by its first present
+    // group and shows untaxed + the tax of the titles before it; each sum
+    // adds in the reference's order (an absent group adds 0.0, which no
+    // rounded output can tell apart)
+    val titleOf = groups.map(_.precedingSubtotal.getOrElse("Untaxed Amount"))
+    val opens = groups.indices.map(i => (0 until i).filter(titleOf(_) == titleOf(i))
+      .foldLeft(present(i))((c, j) => c && !present(j)))
+    def titleTax(t: String): Column = groups.indices.filter(titleOf(_) == t)
+      .foldLeft(lit(0.0))((acc, i) => acc + coalesce(taxR(i), lit(0.0)))
+    val before = groups.indices.scanLeft(lit(0.0)) { (acc, i) =>
+      acc + when(opens(i), titleTax(titleOf(i))).otherwise(0.0)
     }
-    val amountUntaxed = fRound(amountUntaxedRaw)
     // :515-517 — amount_tax and amount_total take ONLY the float_round
-    // step (dp_tools grid): at fdp 0 they stay on the CENT grid while
-    // the group/subtotal/untaxed values round to integers
-    val taxGridDec = if (fdp == 0) 2 else fdp
-    val amountTaxR = rndAt(amountTax, taxGridDec)
-    // :519-520 — one group whose base differs from untaxed, or >1 group.
-    // The reference compares via currency.compare_amounts (:524) — the
-    // CURRENCY's rounding grid (params.precision), not the partner dp —
-    // so a sub-grid difference between the dp-rounded values must NOT
-    // flip the flag, and a 3-decimal currency compares at mills.
-    val gridUnit = math.pow(10.0, params.precision)
-    def grid(v: Double): Long = math.round(v * gridUnit)
-    val displayTaxBase = (groupTotals.size == 1 &&
-      grid(groupTotals.head.baseAmount) != grid(amountUntaxed)) ||
-      groupTotals.size > 1
-    Totals(amountUntaxed, amountTaxR,
-      rndAt(amountUntaxed + amountTaxR, taxGridDec), groupTotals, subtotals,
-      order, displayTaxBase)
+    // step, so at dp 0 they stay on the CENT grid; :519-524 — one group
+    // whose base differs from untaxed on the CURRENCY's grid
+    // (compare_amounts, params.precision), or more than one group
+    val taxGrid = if (fdp == 0) 2 else fdp
+    val untaxed = fRound(col("untaxed"))
+    val amountTax = round(before.last, taxGrid)
+    val nGroups = present.foldLeft(lit(0))((n, p) => n + when(p, 1).otherwise(0))
+    def onGrid(c: Column): Column = floor(c * math.pow(10.0, params.precision) + 0.5)
+    val display = nGroups > 1 || (nGroups === 1 &&
+      onGrid(coalesce(baseR :+ lit(null).cast("double"): _*)) =!= onGrid(untaxed))
+
+    val none = lit(null).cast("double")
+    def line(sec: Long, name: String, gid: Long, base: Column, tax: Column,
+             amount: Column, display: Column = lit(null).cast("boolean")): Column =
+      struct(lit(sec).as("sec"), lit(name).as("name"), lit(gid).as("gid"),
+        base.as("base_amount"), tax.as("tax_amount"), amount.as("amount"),
+        display.as("display_tax_base"))
+    val footerLines = groups.indices.flatMap { i =>
+      Seq(when(present(i), line(1, groups(i).name, groups(i).id, baseR(i), taxR(i), none)),
+        when(opens(i), line(2, titleOf(i), groups(i).id, none, none,
+          fRound(col("untaxed") + before(i)))))
+    } :+ line(3, "(totals)", -1, untaxed, amountTax,
+      round(untaxed + amountTax, taxGrid), display)
+    val plan = perSlice.select(col("slice"), explode(array(footerLines: _*)).as("l"))
+      .filter(col("l").isNotNull)
+      .select(col("slice"), col("l.*"))
+    Footer(plan, groups.map(g => g.id -> g).toMap, manualBySlice.keySet)
   }
 }

@@ -25,13 +25,7 @@ object PartitionedSink {
     val dropped = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("p_date="))
       .filter(_.getName.stripPrefix("p_date=") < cutoff)
-    dropped.foreach(dir => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir)
-    })
+    dropped.foreach(graft.Scratch.deleteRec)
     dropped.map(_.getName).toSeq.sorted
   }
 
@@ -75,11 +69,7 @@ object PartitionedSink {
     val tmp = new java.io.File(root.getParentFile, root.getName + ".compact-tmp")
     df.repartition(n).write.mode("overwrite").parquet(tmp.getPath)
     val bak = new java.io.File(root.getParentFile, root.getName + ".compact-bak")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(bak)
+    graft.Scratch.deleteRec(bak)
     // Best-effort local-FS swap (two renames, not atomic as a pair): if the
     // second rename fails, restore the original directory from the backup so
     // `dir` is never left without data. On HDFS/S3 use a committer instead.
@@ -90,7 +80,7 @@ object PartitionedSink {
         s"compact: swap-in failed for $dir" +
           (if (restored) " (original restored)" else s" (original left at $bak)"))
     }
-    rm(bak)
+    graft.Scratch.deleteRec(bak)
     CompactStats(before.length, parquetFiles(root).length, rows)
   }
 }

@@ -31,9 +31,21 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
                      manual: Seq[(Long, Double)] = Nil,
                      epd: Option[(String, Double)] = None,
                      footerDp: Option[Int] = None): TaxTotals.Totals =
-    TaxTotals.prepareTaxTotals(linesDf(rows), col("rec"), col("price"),
-      col("qty"), col("disc"), col("taxed"), chain, groups, dp, params,
-      epd, manual, footerDp)
+    TaxTotals.footer(linesDf(rows), lit(0L), col("rec"), col("price"),
+      col("qty"), col("disc"), when(col("taxed"), 1).otherwise(0),
+      Seq(1 -> chain), groups, dp, params, epd, Map(0L -> manual), footerDp)
+      .collectTotals()(0L)
+
+  /** [[TaxTotals.footerRound]] and [[TaxTotals.amountTotalRounded]] are
+    * plan columns: evaluate one on a one-row frame. */
+  private def eval(c: org.apache.spark.sql.Column): Double =
+    spark.range(1).select(c).head().getDouble(0)
+  private def footerRound(v: Double, dp: Int): Double =
+    eval(TaxTotals.footerRound(lit(v), dp))
+  private def amountTotalRounded(t: TaxTotals.Totals, balance: Double,
+                                 moveType: String): Double =
+    eval(TaxTotals.amountTotalRounded(lit(t.amountTotal), lit(balance),
+      lit(moveType)))
 
   private val G1 = GroupDef(1, "Taxes", sequence = 1)
   private val G2 = GroupDef(2, "Withholding", sequence = 2,
@@ -227,8 +239,9 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
     // keys: 1 → chainA, 2 → chainB, 0 → untaxed (matches no chain)
     val corpus = Seq((1L, 100.0, 1), (2L, 200.0, 2), (3L, 50.0, 0))
       .toDF("rec", "price", "k")
-    val t = TaxTotals.prepareTaxTotalsMulti(corpus, col("rec"), col("price"),
+    val t = TaxTotals.footer(corpus, lit(0L), col("rec"), col("price"),
       lit(1.0), lit(0.0), col("k"), Seq(1 -> chainA, 2 -> chainB), groups)
+      .collectTotals()(0L)
     // chainB on 200: 21% → 42 (include_base), then 5% on 242 → 12.10;
     // G2's once-per-record base is ITS first tax line's base, 242
     assert(t.amountUntaxed == 350.0)
@@ -237,8 +250,9 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
     assert(t.amountTax == 64.1 && t.amountTotal == 414.1)
     // the same totals as the three single-chain corpora summed
     def alone(rows: Seq[(Long, Double)], chain: Seq[TaxDef]): TaxTotals.Totals =
-      TaxTotals.prepareTaxTotals(rows.toDF("rec", "price"), col("rec"),
-        col("price"), lit(1.0), lit(0.0), lit(chain.nonEmpty), chain, groups)
+      TaxTotals.footer(rows.toDF("rec", "price"), lit(0L), col("rec"),
+        col("price"), lit(1.0), lit(0.0), lit(1), Seq(1 -> chain), groups)
+        .collectTotals()(0L)
     val parts = Seq(alone(Seq((1L, 100.0)), chainA),
       alone(Seq((2L, 200.0)), chainB), alone(Seq((3L, 50.0)), Nil))
     assert(t.amountUntaxed == parts.map(_.amountUntaxed).sum)
@@ -248,14 +262,14 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
   test("dp=0 footer (:443 `0: 0.01`): half-up at CENTS then half-even to " +
       "integers — not one direct half-up round") {
     // the two-grid composition where the collapses diverge:
-    assert(TaxTotals.footerRound(2.5, 0) == 2.0,   // half-even, not 3
+    assert(footerRound(2.5, 0) == 2.0,   // half-even, not 3
       "round(float_round(2.5, 0.01), 0) is banker's at the integer grid")
-    assert(TaxTotals.footerRound(3.5, 0) == 4.0)
-    assert(TaxTotals.footerRound(1.496, 0) == 2.0, // via 1.50; one round → 1
+    assert(footerRound(3.5, 0) == 4.0)
+    assert(footerRound(1.496, 0) == 2.0, // via 1.50; one round → 1
       "the cent grid must round FIRST")
-    assert(TaxTotals.footerRound(1000.5, 0) == 1000.0)
-    intercept[IllegalArgumentException](TaxTotals.footerRound(1.0, 1))
-    intercept[IllegalArgumentException](TaxTotals.footerRound(1.0, 4))
+    assert(footerRound(1000.5, 0) == 1000.0)
+    intercept[IllegalArgumentException](footerRound(1.0, 1))
+    intercept[IllegalArgumentException](footerRound(1.0, 4))
 
     // the no-partner path (:446-449): lines compute at the default dp 2,
     // the FOOTER rounds at the 0-decimal currency's two-step grid
@@ -283,10 +297,10 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
     // vendor bill / customer refund subtract the flipped one (raw
     // arithmetic — the reference rounds only at formatLang)
     def near(a: Double, b: Double) = math.abs(a - b) < 1e-9
-    assert(near(TaxTotals.amountTotalRounded(t, 0.04, "out_invoice"), 110.0))
-    assert(near(TaxTotals.amountTotalRounded(t, 0.04, "in_invoice"), 110.08))
-    assert(near(TaxTotals.amountTotalRounded(t, 0.04, "out_refund"), 110.08))
-    assert(near(TaxTotals.amountTotalRounded(t, 0.04, "in_refund"), 110.0))
+    assert(near(amountTotalRounded(t, 0.04, "out_invoice"), 110.0))
+    assert(near(amountTotalRounded(t, 0.04, "in_invoice"), 110.08))
+    assert(near(amountTotalRounded(t, 0.04, "out_refund"), 110.08))
+    assert(near(amountTotalRounded(t, 0.04, "in_refund"), 110.0))
   }
 
   test("grouping_key_generator (:356-358, :425-426): the DEFAULT generator " +
@@ -383,15 +397,15 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
       .toDF("mt", "rec", "price", "k")
     val chains = Seq(1 -> chainA, 2 -> chainB)
     val manual = Map(1L -> Seq((1L, 9.5)))
-    val sliced = TaxTotals.prepareTaxTotalsSliced(corpus, col("mt"),
-      col("rec"), col("price"), lit(1.0), lit(0.0), col("k"), chains,
-      groups, manualBySlice = manual)
+    def footer(df: DataFrame, manualBySlice: Map[Long, Seq[(Long, Double)]]) =
+      TaxTotals.footer(df, col("mt"), col("rec"), col("price"), lit(1.0),
+        lit(0.0), col("k"), chains, groups, manualBySlice = manualBySlice)
+        .collectTotals()
+    val sliced = footer(corpus, manual)
     assert(sliced.keySet == Set(0L, 1L, 2L))
     for (mt <- Seq(0L, 1L, 2L)) {
-      val alone = TaxTotals.prepareTaxTotalsMulti(
-        corpus.filter(col("mt") === mt), col("rec"), col("price"),
-        lit(1.0), lit(0.0), col("k"), chains, groups,
-        manualTaxLines = manual.getOrElse(mt, Nil))
+      val alone = footer(corpus.filter(col("mt") === mt),
+        manual.filter(_._1 == mt))(mt)
       assert(sliced(mt) == alone, s"slice $mt")
     }
     // spot-pin one slice by hand: batch 1 = 77 + 13 at 10%, manual 9.5
@@ -406,9 +420,9 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
     val groups = Map(10L -> G1)
     def sliced(df: DataFrame, sliceCol: String,
                manual: Map[Long, Seq[(Long, Double)]] = Map()) =
-      TaxTotals.prepareTaxTotalsSliced(df, col(sliceCol), col("rec"),
-        col("price"), lit(1.0), lit(0.0), lit(1), Seq(1 -> chain), groups,
-        manualBySlice = manual)
+      TaxTotals.footer(df, col(sliceCol), col("rec"), col("price"),
+        lit(1.0), lit(0.0), lit(1), Seq(1 -> chain), groups,
+        manualBySlice = manual).collectTotals()
     // a string slice would cast to null/garbage silently — reject at build
     val strSlice = Seq(("a", 1L, 100.0)).toDF("mt", "rec", "price")
     val e1 = intercept[IllegalArgumentException](sliced(strSlice, "mt"))
@@ -431,6 +445,39 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
     // int/short slices widen losslessly — accepted
     val intSlice = Seq((1, 1L, 100.0)).toDF("mt", "rec", "price")
     assert(sliced(intSlice, "mt").keySet == Set(1L))
+  }
+
+  test("building the footer gates starts no Spark job (the layout is in the plan)") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.GraftListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // building must not read the data, so a two-table fixture will do; a
+    // table's first load infers its parquet schema with a job, once per
+    // path (Tables' schema memo), which is the loader's, not the gate's
+    val s = spark; import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_footer_gates").toString
+    Seq((1L, 3.0, 1)).toDF("l_orderkey", "l_quantity", "l_linenumber")
+      .write.parquet(s"$dir/lineitem.parquet")
+    Seq((7L, 2L)).toDF("o_orderkey", "o_custkey").write.parquet(s"$dir/orders.parquet")
+    Tables.lineitem(spark, dir); Tables.orders(spark, dir)
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      for (q <- Seq("q174_tax_totals", "q179_tax_totals_multichain",
+          "q181_cash_rounding_footer")) {
+        Queries.all(q)(spark, dir)
+        GraftListenerBus.drain(sc)
+        assert(jobs.get == 0, s"building $q started ${jobs.get} Spark jobs")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      Scratch.deleteRec(new java.io.File(dir))
+    }
   }
 
   test("group order follows (sequence, id); negative quantities re-sign (:479, :92-99)") {

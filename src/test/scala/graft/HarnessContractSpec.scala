@@ -293,6 +293,16 @@ class HarnessContractSpec extends AnyFunSuite with SparkSpec {
     }.toSeq
   }
 
+  test("the engine names no checkout path") {
+    // an absolute path into a checkout's build dir breaks every other
+    // clone and lets two runs share one directory; scratch paths come
+    // from Scratch, relative to the working directory
+    val CheckoutPath = "\"/[^\"]*/target\\b".r
+    val pinned = sources("src/main/scala").collect {
+      case (f, src) if CheckoutPath.findFirstIn(src).nonEmpty => f }
+    assert(pinned.isEmpty, s"checkout path literal in ${pinned.mkString(", ")}")
+  }
+
   test("the portable hash weight and the ASCII test live only in the text-kernel core") {
     // a second copy of either is a twin loop that can drift from the core
     val code = sources("src/main/scala/graft/functions")

@@ -365,8 +365,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("tax-totals footer aggregates groups AND the untaxed sum in ONE fact scan") {
-    // the sentinel-group design (TaxTotals.footerAggregate): a second
-    // scan for the untaxed subtotal would double the corpus read at scale
+    // the sentinel-group design (TaxTotals.footer): a second scan for the
+    // untaxed subtotal would double the corpus read at scale
     import org.apache.spark.sql.functions._
     import graft.engine.TaxCompute.{Params, TaxDef}
     import graft.report.TaxTotals
@@ -375,18 +375,25 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
       .select(monotonically_increasing_id().as("rec"),
         col("l_quantity").cast("double").as("p"), lit(1.0).as("q"),
         lit(0.0).as("disc"), (col("l_orderkey") % 7 =!= 0).as("taxed"))
-    val agg = TaxTotals.footerAggregate(li, col("rec"), col("p"), col("q"),
+    val footer = TaxTotals.footer(li, lit(0L), col("rec"), col("p"), col("q"),
       col("disc"), when(col("taxed"), lit(1)).otherwise(lit(0)),
       Seq(1 -> Seq(TaxDef(1, "t10", "percent", 10.0),
         TaxDef(2, "t20", "percent", 20.0))),
       Map(1L -> GroupDef(1, "G1"), 2L -> GroupDef(2, "G2")), 2, Params(),
-      None)
-    assert(agg.count() > 0)
-    val p = agg.queryExecution.executedPlan.toString
+      None).plan
+    assert(footer.count() > 0)
+    val p = footer.queryExecution.executedPlan.toString
     assert("Scan parquet".r.findAllIn(p).length == 1,
       s"the footer must read the fact exactly once:\n$p")
     assert(!p.contains("UDF("))
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"))
+    // the whole gate, layout included, is one clean plan over the fact,
+    // not a sort of a local relation built from a collect
+    val q174 = qe("q174_tax_totals")
+    assert(PlanAudit.offenses("q174_tax_totals", q174).isEmpty)
+    val p174 = q174.executedPlan.toString
+    assert("Scan parquet".r.findAllIn(p174).length == 1 &&
+      !p174.contains("LocalTableScan"), s"q174 must lay its footer out in the plan:\n$p174")
   }
 
   test("q180 register rollup: the grand-total row reuses the detail's " +
@@ -422,8 +429,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     val groups = Map(1L -> GroupDef(1, "G1"), 2L -> GroupDef(1, "G1"),
       3L -> GroupDef(2, "G2"))
     for (frame <- Seq(
-        TaxTotals.footerAggregate(li, col("rec"), col("p"), col("q"),
-          col("disc"), col("k"), chains, groups, 2, Params(), None),
+        TaxTotals.footer(li, lit(0L), col("rec"), col("p"), col("q"),
+          col("disc"), col("k"), chains, groups, 2, Params(), None).plan,
         TaxTotals.taxDetailsPerRecord(li, col("rec"), col("p"), col("q"),
           col("disc"), col("k"), chains, groups),
         // the by-TAX generator (r17) rides the identical plan shape
@@ -431,9 +438,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
           col("disc"), col("k"), chains, groups,
           groupingKey = Some(TaxTotals.byTax)),
         // the sliced footer (r17): N batches' footers, still ONE scan
-        TaxTotals.footerAggregateSliced(li, col("rec") % 4, col("rec"),
-          col("p"), col("q"), col("disc"), col("k"), chains, groups, 2,
-          Params(), None))) {
+        TaxTotals.footer(li, col("rec") % 4, col("rec"), col("p"), col("q"),
+          col("disc"), col("k"), chains, groups, 2, Params(), None).plan)) {
       assert(frame.count() > 0)
       val p = frame.queryExecution.executedPlan.toString
       assert("Scan parquet".r.findAllIn(p).length == 1,

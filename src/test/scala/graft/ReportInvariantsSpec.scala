@@ -192,8 +192,9 @@ class ReportInvariantsSpec extends AnyFunSuite with SparkSpec {
           (rnd.nextInt(9) + 1).toDouble, (rnd.nextInt(4) * 10).toDouble,
           rnd.nextInt(5) != 0)
       }.toDF("rec", "price", "qty", "disc", "taxed")
-      val t = TaxTotals.prepareTaxTotals(lines, col("rec"), col("price"),
-        col("qty"), col("disc"), col("taxed"), chain, groups)
+      val t = TaxTotals.footer(lines, lit(0L), col("rec"), col("price"),
+        col("qty"), col("disc"), when(col("taxed"), 1).otherwise(0),
+        Seq(1 -> chain), groups).collectTotals()(0L)
       // total = untaxed + every group's tax, at dp
       def r2(v: Double) = math.floor(v * 100 + 0.5) / 100
       assert(math.abs(t.amountTotal -
@@ -245,7 +246,7 @@ class ReportInvariantsSpec extends AnyFunSuite with SparkSpec {
 
   test("mixed-chain tax aggregate equals the per-chain aggregates merged " +
       "(random chains, random rates, both currency legs)") {
-    // the per-row chain selection (prepareTaxTotalsMulti's explode) must
+    // the per-row chain selection (the explode shared with the footer) must
     // agree with running each chain alone on its own slice — including
     // the untaxed slice's sentinel contributions and the company leg
     val s = spark; import s.implicits._

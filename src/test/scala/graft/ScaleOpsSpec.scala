@@ -48,4 +48,18 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
     val left = PartitionedSink.read(s, dir).select("id").as[Long].collect()
     assert(left.toSeq == Seq(3L))
   }
+
+  test("partitioned sink: retention removes a symlink, never the tree it points into") {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_sink").toFile.getPath + "/log"
+    PartitionedSink.appendByDay(Seq((1L, "2024-01-01 10:00:00"), (2L, "2024-01-05 10:00:00"))
+      .toDF("id", "ts").withColumn("ts", col("ts").cast("timestamp")), "ts", dir)
+    val target = Files.createTempDirectory("graft_sink_target")
+    Files.writeString(target.resolve("keep.txt"), "keep")
+    Files.createSymbolicLink(java.nio.file.Paths.get(dir, "p_date=2024-01-01", "link"), target)
+    assert(PartitionedSink.dropOlderThan(s, dir, "2024-01-03") == Seq("p_date=2024-01-01"))
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "p_date=2024-01-01")))
+    assert(Files.readString(target.resolve("keep.txt")) == "keep")
+    graft.Scratch.deleteRec(target.toFile)
+  }
 }
