@@ -859,12 +859,10 @@ object ReportOps {
 
   /** A tax-totals footer's plan as (sec, name, base_amount, tax_amount,
     * amount) rows: 1 = groups, 2 = preceding subtotals, 3 = the invoice
-    * totals (the q174 and q179 layout). The footer is bounded by the
-    * group dimension, so it sorts in one partition: a range exchange's
-    * sampling job would cost more than the sort. */
+    * totals (the q174 and q179 layout). */
   private def footerLines(f: graft.report.TaxTotals.Footer): DataFrame =
     f.plan.select("sec", "name", "base_amount", "tax_amount", "amount")
-      .coalesce(1).sortWithinPartitions(col("sec"), col("name"))
+      .orderBy(col("sec"), col("name"))
 
   /** q174 — the invoice tax-totals summary ([[graft.report.TaxTotals]],
     * etl_account/models/account_tax.py:354-530) over q173's compiled
@@ -874,7 +872,7 @@ object ReportOps {
     * subtotal, per-line discounts, untaxed lines riding the same scan,
     * signed quantities. The whole corpus is one constant slice of the
     * lazy footer plan: the one-scan two-level groupBy, then the layout as
-    * windows. Output = the footer as (sec, name, base, tax, amount) rows;
+    * columns. Output = the footer as (sec, name, base, tax, amount) rows;
     * the oracle replays the arithmetic and the layout in SQL. */
   def q174(s: SparkSession, d: String): DataFrame = {
     import graft.engine.TaxCompute.TaxDef

@@ -1,6 +1,7 @@
 package graft.report
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.engine.TaxCompute
@@ -400,15 +401,19 @@ object TaxTotals {
                           manualSlices: Set[Long]) {
 
     /** The plan collected once and decoded per slice; a slice with no
-      * records is absent and reads as [[Totals.zero]]. A null slice value
-      * (its rows would otherwise merge into slice 0) and a manual
-      * override keyed to a slice with no records (the override would be
-      * dropped silently) reject. The reject is deliberately strict even
-      * though an empty slice's override would be an arithmetic NO-OP (a
-      * manual amount only REPLACES a group row the aggregation produced,
-      * :469-475): a mistyped key and a legitimately-empty slice are
-      * indistinguishable from the data, and silent typo-shaped number
-      * loss is the worse failure for financial output. */
+      * records is absent and reads as [[Totals.zero]] (a constant slice
+      * is never absent: on an empty corpus its plan already holds that
+      * zero footer). A null slice value (its rows would otherwise merge
+      * into slice 0) and a manual override keyed to a slice with no
+      * records (the override would be dropped silently) reject. The
+      * reject is deliberately strict even though an empty slice's
+      * override would be an arithmetic NO-OP (a manual amount only
+      * REPLACES a group row the aggregation produced, :469-475): a
+      * mistyped key and a legitimately-empty slice are indistinguishable
+      * from the data, and silent typo-shaped number loss is the worse
+      * failure for financial output. Both rejects are this reader's: a
+      * caller reading `plan` directly passes a slice that cannot be null
+      * and no overrides. */
     def collectTotals(): Map[Long, Totals] = {
       val rows = plan.collect() // bounded by slices × (groups + titles + 1)
       require(rows.forall(!_.isNullAt(0)),
@@ -440,10 +445,11 @@ object TaxTotals {
     * slice of a line corpus, as ONE lazy plan: scan → explode → (slice,
     * record, group) → (slice), then the layout as columns and one explode
     * into footer lines. The whole-corpus footer is one constant slice
-    * (`lit(0L)`); several slices are the wizard shape (each register
-    * iterates invoices/moves and reads `_compute_tax_totals` per batch:
-    * move type, journal, company…), still one plan instead of one job
-    * per batch.
+    * (`lit(0L)`), aggregated with no key so that an empty corpus still
+    * lays out its all-zero totals line; several slices are the wizard
+    * shape (each register iterates invoices/moves and reads
+    * `_compute_tax_totals` per batch: move type, journal, company…),
+    * still one plan instead of one job per batch.
     *
     * `record` identifies the line (the reference's base_line['record']);
     * `chainKey` selects each line's chain among `chains` (a key matching
@@ -478,7 +484,11 @@ object TaxTotals {
              earlyPayDiscount: Option[(String, Double)] = None,
              manualBySlice: Map[Long, Seq[(Long, Double)]] = Map(),
              footerDp: Option[Int] = None): Footer = {
-    val sliceType = lines.select(slice).schema.head.dataType
+    val sliceExpr = lines.select(slice).queryExecution.analyzed.expressions.head match {
+      case a: Alias => a.child
+      case e => e
+    }
+    val sliceType = sliceExpr.dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(sliceType),
       s"slice column must be an integral type (byte/short/int/long), " +
         s"got $sliceType — cast explicitly only if the conversion is " +
@@ -493,27 +503,35 @@ object TaxTotals {
     // company fields
     val groups = taxToGroup.values.toSeq.distinctBy(_.id).sortBy(g => (g.sequence, g.id))
     def sumOf(gid: Long, c: String): Column = sum(when(col("gid") === gid, col(c)))
-    val perSlice = perRecordDetails(explodedTaxLines(lines,
+    val perRecord = perRecordDetails(explodedTaxLines(lines,
         struct(slice.cast("long").as("s"), record.as("r")), priceUnit,
         quantity, discount, chainKey, chains, taxToGroup, dp, params,
         earlyPayDiscount, companyLeg = None), hasCompanyLeg = false)
-      .groupBy(col("rec.s").as("slice"))
-      .agg(sumOf(-1, "base_amount").as("untaxed"), groups.indices.flatMap(i =>
-        Seq(sumOf(groups(i).id, "base_amount").as(s"b$i"),
-          sumOf(groups(i).id, "tax_amount").as(s"t$i"))): _*)
+    val sums = sumOf(-1, "base_amount").as("untaxed") +: groups.indices.flatMap(i =>
+      Seq(sumOf(groups(i).id, "base_amount").as(s"b$i"),
+        sumOf(groups(i).id, "tax_amount").as(s"t$i")))
+    // a constant slice is the whole corpus: it aggregates with no key, so
+    // an empty input still gets its (zero) footer, like an invoice with no
+    // lines; any other slice shows only the slices that have records
+    val perSlice =
+      if (sliceExpr.foldable)
+        perRecord.agg(sums.head, sums.tail: _*)
+          .select(slice.cast("long").as("slice"), col("*"))
+      else perRecord.groupBy(col("rec.s").as("slice")).agg(sums.head, sums.tail: _*)
 
     // per group, in (sequence, id) order (:479): present in the slice, the
     // dp-rounded base and tax (:466-467), manual lines replacing the tax
-    // (:469-475)
+    // (:469-475) of a group the slice has lines of, never adding one it
+    // has none of (null, like the base, when the group is absent)
     val present = groups.indices.map(i => col(s"b$i").isNotNull)
     val baseR = groups.indices.map(i => fRound(col(s"b$i")))
     val taxR = groups.indices.map { i =>
-      fRound(manualBySlice.toSeq.flatMap { case (s, ms) =>
+      when(present(i), fRound(manualBySlice.toSeq.flatMap { case (s, ms) =>
         val m = ms.filter(_._1 == groups(i).id)
         if (m.isEmpty) None else Some(s -> m.map(_._2).sum)
       }.foldLeft(col(s"t$i")) { case (other, (s, v)) =>
         when(col("slice") === s, v).otherwise(other)
-      })
+      }))
     }
     // subtotal partition (:481-513): a title ranks by its first present
     // group and shows untaxed + the tax of the titles before it; each sum
@@ -532,7 +550,7 @@ object TaxTotals {
     // whose base differs from untaxed on the CURRENCY's grid
     // (compare_amounts, params.precision), or more than one group
     val taxGrid = if (fdp == 0) 2 else fdp
-    val untaxed = fRound(col("untaxed"))
+    val untaxed = fRound(coalesce(col("untaxed"), lit(0.0)))
     val amountTax = round(before.last, taxGrid)
     val nGroups = present.foldLeft(lit(0))((n, p) => n + when(p, 1).otherwise(0))
     def onGrid(c: Column): Column = floor(c * math.pow(10.0, params.precision) + 0.5)

@@ -135,6 +135,14 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
     val t2 = totals(Seq((1L, 1000.0, 1.0, 0.0, true)), chain,
       Map(10L -> G1), manual = Seq((2L, 99.0)))
     assert(t2.groups == Seq(GroupTotal(G1, 1000.0, 100.0)))
+    // nor does one for a group of the dimension that has no lines, even
+    // under a title the footer shows
+    val g3 = GroupDef(3, "Other taxes", sequence = 3)
+    val t3 = totals(Seq((1L, 1000.0, 1.0, 0.0, true)), chain,
+      Map(10L -> G1, 30L -> g3), manual = Seq((3L, 99.0)))
+    assert(t3.groups == Seq(GroupTotal(G1, 1000.0, 100.0)))
+    assert(t3.subtotals == Seq(Subtotal("Untaxed Amount", 1000.0)))
+    assert(t3.amountTax == 100.0 && t3.amountTotal == 1100.0)
   }
 
   test("partner 3-decimal precision flows through dp_dic (:443-449)") {
@@ -447,6 +455,32 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
     assert(sliced(intSlice, "mt").keySet == Set(1L))
   }
 
+  /** A data dir holding only the two tables the footer gates read. */
+  private def footerFixture(lineitem: Seq[(Long, Double, Int)],
+                            orders: Seq[(Long, Long)]): String = {
+    val s = spark; import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_footer_gates").toString
+    lineitem.toDF("l_orderkey", "l_quantity", "l_linenumber")
+      .write.parquet(s"$dir/lineitem.parquet")
+    orders.toDF("o_orderkey", "o_custkey").write.parquet(s"$dir/orders.parquet")
+    dir
+  }
+
+  test("an empty corpus shows the zero footer, through Totals and through the footer gates") {
+    assert(totals(Nil, Seq(TaxDef(10, "10%", "percent", 10.0)), Map(10L -> G1),
+      manual = Seq((1L, 5.0))) == TaxTotals.Totals.zero)
+    val dir = footerFixture(Nil, Nil)
+    try {
+      def rows(q: String) = Queries.all(q)(spark, dir).collect().toSeq.map(_.toSeq)
+      val zero = Seq(Seq(3L, "(totals)", 0.0, 0.0, 0.0))
+      assert(rows("q174_tax_totals") == zero)
+      assert(rows("q179_tax_totals_multichain") == zero)
+      assert(rows("q181_cash_rounding_footer") ==
+        Seq("in_invoice", "in_refund", "out_invoice", "out_refund")
+          .map(Seq(_, 0.0, 0.0, 0.0)))
+    } finally Scratch.deleteRec(new java.io.File(dir))
+  }
+
   test("building the footer gates starts no Spark job (the layout is in the plan)") {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.GraftListenerBus
@@ -454,11 +488,7 @@ class GoldenTaxTotalsSpec extends AnyFunSuite with SparkSpec {
     // building must not read the data, so a two-table fixture will do; a
     // table's first load infers its parquet schema with a job, once per
     // path (Tables' schema memo), which is the loader's, not the gate's
-    val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_footer_gates").toString
-    Seq((1L, 3.0, 1)).toDF("l_orderkey", "l_quantity", "l_linenumber")
-      .write.parquet(s"$dir/lineitem.parquet")
-    Seq((7L, 2L)).toDF("o_orderkey", "o_custkey").write.parquet(s"$dir/orders.parquet")
+    val dir = footerFixture(Seq((1L, 3.0, 1)), Seq((7L, 2L)))
     Tables.lineitem(spark, dir); Tables.orders(spark, dir)
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
